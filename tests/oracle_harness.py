@@ -41,10 +41,26 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def compare(spark_df, sql: str, sf_dir: str, name: str = "?") -> list[str]:
     """Returns a list of mismatch descriptions (empty = pass)."""
-    problems: list[str] = []
     mine = spark_df.toPandas()
     with duck_connection(sf_dir) as con:
         oracle = con.sql(sql).df()
+    return _diff(mine, oracle, name)
+
+
+def compare_documents(spark_df, sql: str, documents: pd.DataFrame,
+                      name: str = "?") -> list[str]:
+    """:func:`compare` over a hand-built ``documents`` frame (doc_id,
+    text), registered as the oracle's ``documents`` table, instead of
+    an ``sf_dir``."""
+    mine = spark_df.toPandas()
+    with duckdb.connect() as con:
+        con.register("documents", documents)
+        oracle = con.sql(sql).df()
+    return _diff(mine, oracle, name)
+
+
+def _diff(mine: pd.DataFrame, oracle: pd.DataFrame, name: str) -> list[str]:
+    problems: list[str] = []
     if sorted(mine.columns) != sorted(oracle.columns):
         problems.append(
             f"{name}: schema mismatch spark={sorted(mine.columns)} duck={sorted(oracle.columns)}"

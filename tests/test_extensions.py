@@ -1882,107 +1882,160 @@ def test_primitive_cents_match_decimal(spark):
     assert (bad or 0) == 0
 
 
-def test_hashed_grams_match_string_grams(spark):
-    """r14 optimization round: duplicated_spans' default hashed gram
-    keys (xxhash64 over the win token columns) must be bit-equal to the
-    historical string-gram form on a corpus with cross-doc, within-doc
-    and overlapping duplicated spans, for both bench window sizes."""
-    from trendmachine_spark.extensions.dedup import duplicated_spans
-
-    span = [f"s{i}" for i in range(12)]
-    docs = spark.createDataFrame(
-        [
-            (1, " ".join([f"a{i}" for i in range(5)] + span)),
-            (2, " ".join(span + [f"b{i}" for i in range(5)])),
-            (3, " ".join([f"t{i}" for i in range(10)] + ["f0"]
-                         + [f"t{i}" for i in range(10)])),
-            (4, " ".join(f"u{i}" for i in range(30))),
-            (5, " ".join(span + span)),
-        ],
-        "doc_id long, text string",
-    )
-    for win in (5, 10):
-        hashed = sorted(map(tuple, duplicated_spans(
-            docs, win=win, hashed_grams=True).collect()))
-        strings = sorted(map(tuple, duplicated_spans(
-            docs, win=win, hashed_grams=False).collect()))
-        assert hashed == strings
+def _words(prefix: str, n: int) -> list[str]:
+    return [f"{prefix}{i}" for i in range(n)]
 
 
-def test_segment_dedup_hashed_hot_key_matches_string(spark):
-    """r14 optimization round: segment_dedup's default xxhash64 hot-set
-    key must reproduce the string-keyed result bit-for-bit, including
-    partial last segments and fully-boilerplate docs."""
-    from trendmachine_spark.extensions.dedup import segment_dedup
+def _oracle_check(spark, rows, build, sql: str, name: str):
+    """``build(docs)`` on a hand-built corpus vs the DuckDB oracle
+    ``sql`` over the same rows registered as ``documents``; returns the
+    Spark rows by doc_id for edge-case spot checks."""
+    import pandas as pd
 
-    boiler = "x1 x2 x3"
-    rows = [
-        (0, boiler + " a1 a2 a3"),
-        (1, boiler + " b1 b2 b3"),
-        (2, boiler + " c1 c2 c3"),
-        (3, "u1 u2 u3 u4 u5"),
-        (4, boiler),
-    ]
+    from tests.oracle_harness import compare_documents
+
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    hashed = sorted(map(tuple, segment_dedup(
-        docs, seg_words=3, max_doc_freq=1, hashed_hot_key=True).collect()))
-    strings = sorted(map(tuple, segment_dedup(
-        docs, seg_words=3, max_doc_freq=1, hashed_hot_key=False).collect()))
-    assert hashed == strings
+    out = build(docs)
+    problems = compare_documents(
+        out, sql, pd.DataFrame(rows, columns=["doc_id", "text"]), name)
+    assert not problems, "\n".join(problems)
+    return out.collect()
 
 
-def test_suffix_hashed_tokens_match_string_tokens(spark):
-    """r14 optimization round: suffix_match_lengths' default
-    hashed-token alphabet (xxhash64 per token, array<long> suffixes)
-    must be bit-equal to the historical string form — the SA-adjacency
-    LCP is invariant under any injective alphabet remap. Exercises
-    cross-doc, within-doc, bound-capped and guard-excluded spans."""
-    from trendmachine_spark.extensions.dedup import suffix_match_lengths
+#: exact-substring edge cases: a 12-token span gives overlapping
+#: windows; it recurs across docs, within one doc and back to back
+_SPAN = _words("s", 12)
+_SUBSTRING_ROWS = [
+    (1, " ".join(_words("a", 5) + _SPAN)),
+    (2, " ".join(_SPAN + _words("b", 5))),
+    (3, " ".join(_SPAN)),                                 # fully covered
+    (4, " ".join(_words("u", 30))),                       # untouched
+    (5, "short doc"),                                     # < win tokens
+    (6, " ".join(_SPAN + ["gap"] + _SPAN)),               # within-doc repeat
+    (7, " ".join(_words("w", 10) + ["gap"] + _words("w", 10))),  # keeper in-doc
+]
 
-    docs = spark.createDataFrame([
+
+def test_duplicated_spans_match_oracle_edge_cases(spark):
+    """duplicated_spans (hashed gram keys) equals the registered
+    substring_dup_report / _fine oracles on cross-doc, within-doc,
+    overlapping and adjacent duplicated spans and sub-window docs."""
+    from trendmachine_spark.extensions.dedup import duplicated_spans
+    from trendmachine_spark.registry import QUERIES
+
+    for name, win in (("substring_dup_report", 10),
+                      ("substring_dup_report_fine", 5)):
+        got = {r["doc_id"]: r for r in _oracle_check(
+            spark, _SUBSTRING_ROWS, lambda d: duplicated_spans(d, win=win),
+            QUERIES[name].oracle, name)}
+        assert got[5]["dup_tokens"] == 0 and got[4]["dup_tokens"] == 0
+        # both span copies of doc 6 are duplicated: two islands
+        assert (got[6]["dup_tokens"], got[6]["n_islands"]) == (24, 2), win
+        assert (got[7]["dup_tokens"], got[7]["n_islands"]) == (20, 2), win
+
+
+def test_strip_matches_oracle_edge_cases(spark):
+    """strip_duplicated_spans (Arrow scatter-mask token removal) equals
+    the registered substring_dedup oracle on overlapping spans, fully
+    stripped docs, docs shorter than the window and within-doc
+    repeats — at the registered win=10 and at win=5 (the oracle with
+    its window width swapped)."""
+    from trendmachine_spark.extensions.dedup import strip_duplicated_spans
+    from trendmachine_spark.registry import QUERIES
+    from trendmachine_spark.registry_queries.multimodal_substring import (
+        _window_occ_sql)
+
+    sql10 = QUERIES["substring_dedup"].oracle
+    assert _window_occ_sql(10) in sql10 and "generate_series(0, 9)" in sql10
+    sql5 = (sql10.replace(_window_occ_sql(10), _window_occ_sql(5))
+            .replace("generate_series(0, 9)", "generate_series(0, 4)"))
+    for win, sql in ((10, sql10), (5, sql5)):
+        got = {r["doc_id"]: r for r in _oracle_check(
+            spark, _SUBSTRING_ROWS,
+            lambda d: strip_duplicated_spans(d, win=win), sql,
+            f"substring_dedup(win={win})")}
+        assert got[3]["clean_text"] == "" and got[3]["n_removed_tokens"] == 12
+        assert got[5]["clean_text"] == "short doc"
+        assert got[7]["clean_text"] == " ".join(_words("w", 10) + ["gap"])
+        assert got[1]["n_removed_tokens"] == 0  # the first copy survives
+
+
+def test_segment_dedup_matches_oracle_edge_cases(spark):
+    """segment_dedup (xxhash64 hot-segment key) equals the registered
+    dedup_segments oracle (10-word segments, doc-frequency cap 2):
+    boilerplate first, middle and as a partial last segment, a fully
+    boilerplate doc, an untouched partial last segment, and a
+    within-doc repeat that must not count twice."""
+    from trendmachine_spark.extensions.dedup import segment_dedup
+    from trendmachine_spark.registry import QUERIES
+
+    boiler, tail, rep = _words("x", 10), _words("z", 4), _words("r", 10)
+    rows = [
+        (0, " ".join(boiler + _words("a", 10))),
+        (1, " ".join(boiler + _words("c", 10))),
+        (2, " ".join(_words("d", 10) + boiler + _words("i", 4))),
+        (3, " ".join(_words("u", 15))),               # partial, unique
+        (4, " ".join(boiler)),                        # fully boilerplate
+        (5, " ".join(_words("e", 10) + tail)),        # hot partial tail
+        (6, " ".join(_words("f", 10) + tail)),
+        (7, " ".join(_words("g", 10) + tail)),
+        (8, " ".join(rep + rep)),                     # in-doc repeat
+        (9, " ".join(rep + _words("h", 10))),
+    ]
+    got = {r["doc_id"]: r for r in _oracle_check(
+        spark, rows, lambda d: segment_dedup(d, seg_words=10, max_doc_freq=2),
+        QUERIES["dedup_segments"].oracle, "dedup_segments")}
+    assert (got[4]["n_removed"], got[4]["clean_text"]) == (1, "")
+    assert got[2]["clean_text"] == " ".join(_words("d", 10) + _words("i", 4))
+    assert got[5]["clean_text"] == " ".join(_words("e", 10))
+    assert got[3]["n_removed"] == 0 and got[8]["n_removed"] == 0
+
+
+def test_suffix_pass_matches_oracle_edge_cases(spark):
+    """The bounded suffix-array pass (xxhash64 token alphabet) equals
+    the _suffix_match_sql oracle — per position and through the
+    registered dup_span_profile / dup_span_histogram SQL — on
+    cross-doc, within-doc, bound-capped (at 8 and at 32) and
+    guard-excluded spans and a doc shorter than the span."""
+    from trendmachine_spark.extensions.dedup import (
+        dup_span_histogram, dup_span_profile, suffix_match_lengths)
+    from trendmachine_spark.registry import QUERIES
+    from trendmachine_spark.registry_queries.multimodal_substring import (
+        _suffix_match_sql)
+
+    long_span = _words("L", 40)
+    rows = [
         (1, "x1 x2 a b c d e f g y1 y2"),
         (2, "z1 a b c d e f g z2 z3 z4"),
-        (3, "p q r s t m1 m2 p q r s t m3"),
-        (4, "u1 u2 u3 u4 u5 u6 u7 u8 u9"),
+        (3, "p q r s t m1 m2 p q r s t m3"),         # within-doc
+        (4, "u1 u2 u3 u4 u5 u6 u7 u8 u9"),            # no duplicate
         (5, "a b c d e f g h i j k l"),
         (6, "a b c d e f g h i j k l"),
-    ], "doc_id long, text string")
-    for kwargs in ({"min_span": 5, "bound": 32, "max_group": None},
-                   {"min_span": 5, "bound": 8, "max_group": None},
-                   {"min_span": 5, "bound": 32, "max_group": 2}):
-        hashed = sorted(map(tuple, suffix_match_lengths(
-            docs, hashed_tokens=True, **kwargs).collect()))
-        strings = sorted(map(tuple, suffix_match_lengths(
-            docs, hashed_tokens=False, **kwargs).collect()))
-        assert hashed == strings, kwargs
-
-
-def test_strip_reassembly_paths_match(spark):
-    """r14 optimization round: the default Arrow reassembly of
-    strip_duplicated_spans (per-doc scatter mask + Python split/join)
-    must be bit-equal to the historical pure-SQL join form, including
-    overlapping spans, fully-stripped docs, docs shorter than the
-    window, and the win=5 fine setting."""
-    from trendmachine_spark.extensions.dedup import strip_duplicated_spans
-
-    span = [f"s{i}" for i in range(12)]
-    docs = spark.createDataFrame(
-        [
-            (1, " ".join([f"a{i}" for i in range(5)] + span)),
-            (2, " ".join(span + [f"b{i}" for i in range(5)])),
-            (3, " ".join(span)),                       # fully stripped
-            (4, " ".join(f"u{i}" for i in range(30))),  # untouched
-            (5, "short doc"),                          # < win tokens
-            (6, " ".join(span + ["gap"] + span)),      # within-doc repeat
-        ],
-        "doc_id long, text string",
-    )
-    for win in (5, 10):
-        arrow = sorted(map(tuple, strip_duplicated_spans(
-            docs, win=win, reassembly="arrow").collect()))
-        join = sorted(map(tuple, strip_duplicated_spans(
-            docs, win=win, reassembly="join").collect()))
-        assert arrow == join, win
+        (7, " ".join(long_span + ["k1"])),            # 40-token span
+        (8, " ".join(["k2"] + long_span)),
+        (9, "too short"),
+    ]
+    registered = _suffix_match_sql(5, 32, 100)
+    by_params = {}
+    for bound, max_group in ((32, 100), (8, 100), (32, 2)):
+        cte = _suffix_match_sql(5, bound, max_group)
+        kw = dict(min_span=5, bound=bound, max_group=max_group)
+        tag = f"(bound={bound}, max_group={max_group})"
+        by_params[bound, max_group] = {
+            (r["doc_id"], r["pos"]): r["match_len"] for r in _oracle_check(
+                spark, rows, lambda d: suffix_match_lengths(d, **kw),
+                f"WITH {cte} SELECT doc_id, pos, match_len FROM matches",
+                f"suffix_match_lengths{tag}")}
+        for name, op in (("dup_span_profile", dup_span_profile),
+                         ("dup_span_histogram", dup_span_histogram)):
+            sql = QUERIES[name].oracle
+            assert registered in sql
+            _oracle_check(spark, rows, lambda d: op(d, **kw),
+                          sql.replace(registered, cte), name + tag)
+    assert max(by_params[32, 100].values()) == 32   # capped at the bound
+    assert max(by_params[8, 100].values()) == 8
+    assert (1, 3) in by_params[32, 100] and (3, 1) in by_params[32, 100]
+    assert (1, 3) not in by_params[32, 2]           # hot gram excluded
 
 
 def test_salted_mark_join_is_shuffle_hash_not_broadcast(spark):

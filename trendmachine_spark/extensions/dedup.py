@@ -432,6 +432,29 @@ def _hash_mask(j: int) -> int:
 HASH_MASKS = tuple(_hash_mask(j) for j in range(NUM_HASHES))
 
 
+def shingle_hash(gram):
+    """Column: the 60-bit shingle hash — the first 15 hex digits of
+    ``md5(gram)`` as a long. DuckDB computes the identical int
+    (``('0x' || substr(md5(g), 1, 15))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long")
+
+
+def minhash_columns(num_hashes: int = NUM_HASHES, per_row: bool = False):
+    """``mh0..mh{n-1}``: the minimum of ``_h XOR mask_j`` over a doc's
+    shingle hashes ``_h`` — the xor-mask hash family. By default these
+    are aggregates over one ``_h`` row per shingle (the map-combined
+    groupBy form); ``per_row`` folds a per-doc ``_h`` array column
+    instead (the zero-shuffle narrow form)."""
+    def xor_min(mask):
+        def xor(h):
+            return h.bitwiseXOR(F.lit(mask))
+        if per_row:
+            return F.array_min(F.transform(F.col("_h"), xor))
+        return F.min(xor(F.col("_h")))
+
+    return [xor_min(HASH_MASKS[j]).alias(f"mh{j}") for j in range(num_hashes)]
+
+
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = NUM_HASHES,
                        k: int = SHINGLE_K) -> DataFrame:
@@ -455,13 +478,8 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     Docs with no k-gram (fewer than k words) produce no row.
     """
     sh = shingles(docs, text_col, id_col, k, distinct=False)
-    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-    with_h = sh.withColumn("_h", h)
-    aggs = [
-        F.min(F.expr(f"_h ^ {HASH_MASKS[j]}L")).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    return with_h.groupBy(id_col).agg(*aggs)
+    with_h = sh.withColumn("_h", shingle_hash(F.col("shingle")))
+    return with_h.groupBy(id_col).agg(*minhash_columns(num_hashes))
 
 
 def minhash_signatures_narrow(docs: DataFrame, text_col: str = "text",
@@ -488,18 +506,9 @@ def minhash_signatures_narrow(docs: DataFrame, text_col: str = "text",
     """
     grams = gram_array(text_col, k)
     base = docs.select(F.col(id_col), grams.alias("_g")).filter(F.size("_g") >= 1)
-    hs = F.transform(
-        F.col("_g"),
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-    )
-    base = base.select(F.col(id_col), hs.alias("_h"))
-    cols = [
-        F.array_min(
-            F.transform(F.col("_h"), lambda h: h.bitwiseXOR(F.lit(HASH_MASKS[j])))
-        ).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    return base.select(F.col(id_col), *cols)
+    base = base.select(F.col(id_col),
+                       F.transform(F.col("_g"), shingle_hash).alias("_h"))
+    return base.select(F.col(id_col), *minhash_columns(num_hashes, per_row=True))
 
 
 def lsh_band_buckets(signatures: DataFrame, id_col: str = "doc_id",
@@ -1087,14 +1096,9 @@ def _sided_sig_sets(a: DataFrame, b: DataFrame, text_col: str,
     equals the distinct set."""
     tagged = _sided_tag(a, b, text_col, id_col)
     sh = shingles(tagged, text_col, "_sid", k, distinct=False)
-    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-    with_h = sh.select("_sid", h.alias("_h"))
-    aggs = [
-        F.min(F.expr(f"_h ^ {HASH_MASKS[j]}L")).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    aggs.append(F.collect_set("_h").alias("_sh"))
-    return with_h.groupBy("_sid").agg(*aggs)
+    with_h = sh.select("_sid", shingle_hash(F.col("shingle")).alias("_h"))
+    return with_h.groupBy("_sid").agg(
+        *minhash_columns(num_hashes), F.collect_set("_h").alias("_sh"))
 
 
 def cross_corpus_near_dup(a: DataFrame, b: DataFrame,
@@ -1112,20 +1116,23 @@ def cross_corpus_near_dup(a: DataFrame, b: DataFrame,
     Output: (a_id, b_id, jaccard) — one row per cross pair sharing an
     LSH band bucket whose EXACT word-shingle jaccard >= ``min_jaccard``.
 
-    SCALE: each side computes signatures independently (one
-    map-combined shuffle per side), then the candidate join is a
-    co-partitioned equi-join on (band, bucket) emitting ONLY A x B
-    rows — within-side pairs never exist in this plan, cutting the
-    candidate volume roughly in half vs tagging a union. Hot buckets
+    SCALE: both corpora union into one (side, id)-keyed stream, so ONE
+    shingle explode and ONE map-combined aggregation build every doc's
+    signature and hashed-shingle set (:func:`_sided_sig_sets`); the
+    band table derives narrowly from that per-doc table. One
+    conditional-sum aggregation counts each (band, bucket) per side,
+    and the candidate join on (band, bucket) emits ONLY A x B rows —
+    within-side pairs never exist in this plan. Hot buckets
     (boilerplate shared by both crawls) would cost na*nb pairs, so a
     bucket is DROPPED from candidates when either side exceeds
     ``max_side_bucket`` members in it — the same non-discriminative-
     template stance as ``max_frame_freq`` on video near-dup, mirrored
     exactly in the oracle; a pair of genuinely near-dup docs loses
     only that band's vote and still collides on its other bands.
-    Verification prunes both corpora to candidate ids (semi-joins)
-    before any shingle explode, so exact jaccard is computed for
-    candidate docs only.
+    Verification reads each candidate's set from the same per-doc
+    table (no corpus re-scan, no second explode); the price is that
+    the table holds a set for EVERY doc of both corpora, not only the
+    candidates (ROADMAP item 5 measures it at low candidate fraction).
 
     Both sides use the explode+agg signature (map-combined shuffle):
     unlike :func:`incremental_dedup`'s base side — where the narrow
@@ -1495,8 +1502,7 @@ def simhash_near_dup(docs: DataFrame, text_col: str = "text",
 
 
 def segment_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  seg_words: int = 10, max_doc_freq: int = 2,
-                  hashed_hot_key: bool = True) -> DataFrame:
+                  seg_words: int = 10, max_doc_freq: int = 2) -> DataFrame:
     """Sub-document exact dedup: drop boilerplate segments repeated
     across the corpus, keep each document's residual text.
 
@@ -1536,16 +1542,13 @@ def segment_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     skew splitting. The doc-frequency aggregation's hot keys are exactly
     the boilerplate segments, absorbed map-side by partial aggregation.
 
-    ``hashed_hot_key`` (default True — r14 optimization round, guide
-    §2.3): the doc-frequency aggregation and the hot-set join are keyed
-    by ``xxhash64(seg)`` instead of the ~60-byte segment string (the
-    string itself still rides only the per-doc reassembly, where the
-    output needs it) — measured 2.24 → 1.74 s at x10 interleaved
-    best-of-6 (tools/exp_substr_hash.py). Values bit-identical while
-    the hash is injective on the corpus segment universe (checked at
-    every test SF + x10; a collision can only merge two segments'
-    doc-frequencies, i.e. over-remove — the conservative direction);
-    pass False for the string form.
+    The doc-frequency aggregation and the hot-set join are keyed by
+    ``xxhash64(seg)``, not the ~60-byte segment string, which rides
+    only the per-doc regrouping where the output needs it (r14
+    optimization round: 2.24 → 1.74 s at x10, tools/exp_substr_hash.py).
+    Hash envelope: a collision can only merge two segments'
+    doc-frequencies, i.e. over-remove; widening the key is ROADMAP
+    item 3.
     """
     assert seg_words >= 1
     words = F.split(F.col(text_col), " ")
@@ -1563,7 +1566,7 @@ def segment_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
             for j in range(seg_words)
         ],
     )
-    key = F.xxhash64(seg) if hashed_hot_key else seg
+    key = F.xxhash64(seg)
     segs = (
         base.select(
             F.col(id_col),
@@ -1611,15 +1614,11 @@ def window_occurrences(docs: DataFrame, text_col: str = "text",
     ``win`` token columns instead of the ~60-byte concat string: no
     intermediate string is ever built and every downstream
     exchange/checkpoint carries an 8-byte long. Only valid where the
-    gram is used purely as a group/join KEY and the hash is injective
-    on the corpus gram universe (checked corpus-wide:
+    gram is used purely as a group/join KEY (checked corpus-wide:
     distinct(gram) == distinct(hash) at sf0.001/0.01/0.1 and x10 —
-    tools/exp_substr_hash.py; pinned hashed-vs-string bit-equality in
-    tests). A collision can only MERGE two distinct grams, i.e.
-    over-mark duplication — at true 100 TB gram universes (≳2^32
-    distinct grams) collisions become expected, which is conservative
-    for dedup marking; callers needing exactness there pass
-    ``hashed=False`` and pay the string shuffle."""
+    tools/exp_substr_hash.py). Hash envelope: a collision can only
+    MERGE two distinct grams, i.e. over-mark duplication; widening the
+    key is ROADMAP item 3."""
     words = F.split(F.col(text_col), " ")
     base = rebalance_for_fanout(
         docs.select(F.col(id_col), F.col(text_col))
@@ -1661,8 +1660,7 @@ def _lcp(a, b):
 def suffix_match_lengths(docs: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id", min_span: int = 5,
                          bound: int = SUFFIX_BOUND,
-                         max_group: int | None = MAX_SHINGLE_FREQ,
-                         hashed_tokens: bool = True) -> DataFrame:
+                         max_group: int | None = MAX_SHINGLE_FREQ) -> DataFrame:
     """Bounded suffix-array pass (Lee et al., "Deduplicating Training
     Data Makes Language Models Better", ACL 2022, §4 ExactSubstr —
     /root/reference has no analog; extension mandate): for every token
@@ -1707,39 +1705,33 @@ def suffix_match_lengths(docs: DataFrame, text_col: str = "text",
     exactly the :func:`ngram_jaccard` guard. ``max_group=None``
     disables the guard (small corpora / tests).
 
-    ``hashed_tokens`` (default True — r14 optimization round, guide
-    §2.3): every token is mapped ONCE per document through ``xxhash64``
-    and the bounded suffixes become fixed-width ``array<long>`` instead
-    of ``array<string>``. The SA-adjacency property is invariant under
+    Tokens are mapped ONCE per document through ``xxhash64``, so the
+    bounded suffixes are fixed-width ``array<long>`` (r14 optimization
+    round, guide §2.3). The SA-adjacency property is invariant under
     any injective alphabet remap — suffixes sharing a prefix still form
     contiguous blocks in the remapped lexicographic order and every LCP
-    value is unchanged — so match lengths are bit-identical while the
-    hash is injective on the corpus token VOCABULARY (a far smaller
-    universe than the gram space; checked at every test SF + x10,
-    pinned by tests). The exchange payload drops from ~20 B/token
-    strings to 8 B longs and the per-gram sort compares longs instead
-    of strings — measured 6.63 → 3.46 s (profile) / 5.86 → 3.39 s
-    (histogram) at x10 interleaved best-of-6
-    (tools/exp_suffix_hash.py). Pass False for the string form.
+    value is unchanged — so match lengths equal the string-token ones
+    (the DuckDB oracle sorts strings). The exchange payload drops from
+    ~20 B/token strings to 8 B longs and the per-gram sort compares
+    longs — measured 6.63 → 3.46 s (profile) / 5.86 → 3.39 s
+    (histogram) at x10 (tools/exp_suffix_hash.py). Hash envelope: a
+    collision merges two tokens or two grams, so a match can only
+    lengthen (over-mark) and a merged gram can reach the ``max_group``
+    guard early; widening the key is ROADMAP item 3.
     """
     words = F.split(F.col(text_col), " ")
-    toks = (F.transform(words, lambda x: F.xxhash64(x))
-            if hashed_tokens else words)
+    toks = F.transform(words, lambda x: F.xxhash64(x))
     # length filter on the SPLIT (codegen), not on the aliased toks
-    # projection: Catalyst inlines the alias into the Filter, and for
-    # the hashed form that would re-evaluate the interpreted
-    # transform(xxhash64) per doc just to check its size
+    # projection: Catalyst inlines the alias into the Filter, which
+    # would re-evaluate the interpreted transform(xxhash64) per doc
+    # just to check its size
     base = rebalance_for_fanout(
         docs.select(F.col(id_col), F.col(text_col))
     ).filter(F.size(words) >= min_span).select(
         F.col(id_col), toks.alias("_w")
     )
-    gram = (
-        F.xxhash64(*[F.element_at(F.col("_w"), F.col("pos") + j)
-                     for j in range(min_span)])
-        if hashed_tokens
-        else F.concat_ws(" ", F.slice("_w", F.col("pos"), F.lit(min_span)))
-    )
+    gram = F.xxhash64(*[F.element_at(F.col("_w"), F.col("pos") + j)
+                        for j in range(min_span)])
     occ = base.select(
         F.col(id_col),
         F.explode(
@@ -1776,8 +1768,7 @@ def suffix_match_lengths(docs: DataFrame, text_col: str = "text",
 def dup_span_profile(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", min_span: int = 5,
                      bound: int = SUFFIX_BOUND,
-                     max_group: int | None = MAX_SHINGLE_FREQ,
-                     hashed_tokens: bool = True) -> DataFrame:
+                     max_group: int | None = MAX_SHINGLE_FREQ) -> DataFrame:
     """Per-document duplicated-span profile from the bounded
     suffix-array pass: (doc_id, n_tokens, max_dup_len,
     n_dup_positions) — max_dup_len the longest exactly-duplicated span
@@ -1787,7 +1778,7 @@ def dup_span_profile(docs: DataFrame, text_col: str = "text",
     :func:`suffix_match_lengths`; every doc appears (left join onto
     the corpus)."""
     m = suffix_match_lengths(docs, text_col, id_col, min_span, bound,
-                             max_group, hashed_tokens)
+                             max_group)
     per_doc = m.groupBy(id_col).agg(
         F.max("match_len").alias("_mx"),
         F.count(F.lit(1)).alias("_np"),
@@ -1808,8 +1799,7 @@ def dup_span_profile(docs: DataFrame, text_col: str = "text",
 def dup_span_histogram(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", min_span: int = 5,
                        bound: int = SUFFIX_BOUND,
-                       max_group: int | None = MAX_SHINGLE_FREQ,
-                       hashed_tokens: bool = True) -> DataFrame:
+                       max_group: int | None = MAX_SHINGLE_FREQ) -> DataFrame:
     """Corpus duplicated-span length distribution: (match_len,
     n_positions) for match_len in [min_span, bound] — the evidence a
     dedup operator's window choice should rest on (SUBSTRING_WIN_SWEEP
@@ -1819,7 +1809,7 @@ def dup_span_histogram(docs: DataFrame, text_col: str = "text",
     over the match table."""
     return (
         suffix_match_lengths(docs, text_col, id_col, min_span, bound,
-                             max_group, hashed_tokens)
+                             max_group)
         .groupBy("match_len")
         .agg(F.count(F.lit(1)).alias("n_positions"))
     )
@@ -1963,8 +1953,7 @@ def _mark_join(occ: DataFrame, dup_grams: DataFrame,
 def duplicated_spans(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", win: int = 10,
                      mark_salt: int | str | None = "auto",
-                     auto_salt_grams: int | None = None,
-                     hashed_grams: bool = True) -> DataFrame:
+                     auto_salt_grams: int = AUTO_MARK_SALT_GRAMS_HASHED) -> DataFrame:
     """Per-doc duplicated-substring report — the bounded-window form of
     exact-substring dedup (Lee et al., "Deduplicating Training Data
     Makes Language Models Better", ACL 2022: any 50-token span occurring
@@ -1999,29 +1988,18 @@ def duplicated_spans(docs: DataFrame, text_col: str = "text",
     see :func:`set_materialization` for the fault-tolerant persist
     variant on multi-executor clusters.
 
-    ``hashed_grams`` (default True — r14 optimization round): the gram
-    is a pure group/join key here (never output), so the occurrence
-    stream, the frequency exchange, the checkpointed dup-gram table and
-    the mark semi-join all carry 8-byte xxhash64 keys instead of
-    ~60-byte strings (guide §2.3) — measured 5.40 → 4.46 s at x10
-    interleaved best-of-6 (tools/exp_substr_hash.py). Values are
-    bit-identical while the hash is injective on the corpus gram
-    universe (checked at every test SF + x10; a collision can only
-    over-mark — see :func:`window_occurrences`); pass False for the
-    string form.
-
-    ``auto_salt_grams=None`` (the default) resolves to the
-    representation-aware threshold:
-    :data:`AUTO_MARK_SALT_GRAMS_HASHED` for hashed grams (8-byte keys
-    stay broadcastable ~8x longer) and :data:`AUTO_MARK_SALT_GRAMS`
-    for strings; results are identical on either side of the
-    threshold for any salt.
+    The gram is a pure group/join key here (never output), so the
+    occurrence stream, the frequency exchange, the checkpointed
+    dup-gram table and the mark semi-join all carry 8-byte xxhash64
+    keys instead of ~60-byte strings (r14 optimization round, guide
+    §2.3: 5.40 → 4.46 s at x10, tools/exp_substr_hash.py). Hash
+    envelope: a collision can only over-mark; widening the key is
+    ROADMAP item 3. The auto-salt threshold defaults to
+    :data:`AUTO_MARK_SALT_GRAMS_HASHED` (8-byte keys stay
+    broadcastable ~8x longer); results are identical on either side
+    of it for any salt.
     """
-    if auto_salt_grams is None:
-        auto_salt_grams = (AUTO_MARK_SALT_GRAMS_HASHED if hashed_grams
-                           else AUTO_MARK_SALT_GRAMS)
-    occ = window_occurrences(docs, text_col, id_col, win,
-                             hashed=hashed_grams)
+    occ = window_occurrences(docs, text_col, id_col, win, hashed=True)
     # Window frequency as a map-combined aggregation + semi-join, not a
     # count-window over the gram: a window partition cannot
     # partial-aggregate, so a boilerplate gram with 10^8 corpus
@@ -2085,8 +2063,7 @@ def duplicated_spans(docs: DataFrame, text_col: str = "text",
 def strip_duplicated_spans(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", win: int = 10,
                            mark_salt: int | str | None = "auto",
-                           auto_salt_grams: int = AUTO_MARK_SALT_GRAMS,
-                           reassembly: str = "arrow") -> DataFrame:
+                           auto_salt_grams: int = AUTO_MARK_SALT_GRAMS) -> DataFrame:
     """Remove every NON-FIRST occurrence of a duplicated window — the
     destructive half of exact-substring dedup: the corpus keeps exactly
     one copy of each duplicated span (its globally-first occurrence by
@@ -2102,38 +2079,24 @@ def strip_duplicated_spans(docs: DataFrame, text_col: str = "text",
     sorted each gram's full occurrence list in one task (the hot-gram
     skew cliff).
 
-    ``reassembly`` (r14 optimization round):
-
-    * ``"arrow"`` (default) — removable window STARTS aggregate per doc
-      (one map-combined collect_list over the removable rows, which the
-      plan shuffles anyway) and join the docs table by id; one
-      ``mapInPandas`` pass tokenizes, scatter-masks the covered
-      positions (numpy) and rejoins surviving tokens. The corpus token
-      stream is never exploded: the covered-position
-      explode+distinct, the (id, pos) anti-join of the full token
-      stream and the collect_list/array_sort reassembly exchange all
-      disappear (guide §2.4/§4.2; the per-doc text crosses the Arrow
-      boundary once). Values are bit-identical — ``str.split(" ")`` /
-      ``" ".join`` match Spark's single-space ``split``/``concat_ws``
-      including empty-token edge cases — pinned by
-      tests/test_extensions.py::test_strip_reassembly_paths_match plus
-      full collect-compares at every SF and x10
-      (tools/exp_strip_arrow.py). Per-doc state is bounded by document
-      length; starts lists are capped by n_tokens.
-    * ``"join"`` — the historical pure-SQL form: coverage exploded to
-      (id, pos) rows, anti-joined against the posexploded token
-      stream, reassembled via array_sort on (pos, token) structs —
-      linear everywhere, no self-join, same no-quadratic-path property
-      as :func:`duplicated_spans`. Keep for engines where the Python
-      boundary is unavailable.
+    Token removal (r14 optimization round): removable window STARTS
+    aggregate per doc (one map-combined collect_list over the removable
+    rows, which the plan shuffles anyway) and join the docs table by
+    id; one ``mapInPandas`` pass tokenizes, scatter-masks the covered
+    positions (numpy) and rejoins surviving tokens. The corpus token
+    stream is never exploded (guide §2.4/§4.2; the per-doc text crosses
+    the Arrow boundary once). ``str.split(" ")`` / ``" ".join`` match
+    Spark's single-space ``split``/``concat_ws`` including empty-token
+    edge cases — pinned against the DuckDB oracle by
+    tests/test_extensions.py::test_strip_matches_oracle_edge_cases.
+    Per-doc state is bounded by document length; starts lists are
+    capped by n_tokens. The pure-SQL explode/anti-join form it replaced
+    measured 5.59 s vs 3.56 s at x10 (OPTIMIZATION_r14.md §10).
 
     EAGERNESS: same ``mark_salt='auto'`` construction-time jobs as
     :func:`duplicated_spans` — ``mark_salt=None``/int is the lazy
     path, :func:`set_materialization` the fault-tolerant one.
     """
-    if reassembly not in ("arrow", "join"):
-        raise ValueError(
-            f"reassembly must be 'arrow' or 'join', got {reassembly!r}")
     occ = window_occurrences(docs, text_col, id_col, win)
     # Keeper per gram via min-of-struct aggregation, not
     # row_number() over (partition by gram): min(struct(id, pos)) is
@@ -2182,86 +2145,53 @@ def strip_duplicated_spans(docs: DataFrame, text_col: str = "text",
         )
         .select(id_col, "pos")
     )
-    if reassembly == "arrow":
-        starts = removable.groupBy(id_col).agg(
-            F.collect_list("pos").alias("_starts")
-        )
-        src = docs.select(F.col(id_col), F.col(text_col)).join(
-            starts, id_col, "left"
-        )
+    starts = removable.groupBy(id_col).agg(
+        F.collect_list("pos").alias("_starts")
+    )
+    src = docs.select(F.col(id_col), F.col(text_col)).join(
+        starts, id_col, "left"
+    )
 
-        def _reassemble(batches):
-            import numpy as np
-            import pandas as pd
+    def _reassemble(batches):
+        import numpy as np
+        import pandas as pd
 
-            for pdf in batches:
-                ids, ntoks, nrem, clean = [], [], [], []
-                for did, text, st in zip(
-                    pdf[id_col], pdf[text_col], pdf["_starts"]
-                ):
-                    toks = text.split(" ")
-                    n = len(toks)
-                    if st is None or len(st) == 0:
-                        ids.append(did)
-                        ntoks.append(n)
-                        nrem.append(0)
-                        clean.append(text)
-                        continue
-                    # scatter-mask the union of [start, start+win) —
-                    # order-insensitive, so collect_list arrival order
-                    # cannot matter; the +win slack absorbs windows
-                    # ending at the doc tail
-                    mask = np.zeros(n + win, dtype=bool)
-                    s = np.asarray(st, dtype=np.int64) - 1  # 1-based
-                    for j in range(win):
-                        mask[s + j] = True
-                    mask = mask[:n]
-                    kept_toks = [t for t, m in zip(toks, mask) if not m]
+        for pdf in batches:
+            ids, ntoks, nrem, clean = [], [], [], []
+            for did, text, st in zip(
+                pdf[id_col], pdf[text_col], pdf["_starts"]
+            ):
+                toks = text.split(" ")
+                n = len(toks)
+                if st is None or len(st) == 0:
                     ids.append(did)
                     ntoks.append(n)
-                    nrem.append(int(mask.sum()))
-                    clean.append(" ".join(kept_toks))
-                yield pd.DataFrame({
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "n_tokens": pd.Series(ntoks, dtype="int64"),
-                    "n_removed_tokens": pd.Series(nrem, dtype="int64"),
-                    "clean_text": pd.Series(clean, dtype="object"),
-                })
+                    nrem.append(0)
+                    clean.append(text)
+                    continue
+                # scatter-mask the union of [start, start+win) —
+                # order-insensitive, so collect_list arrival order
+                # cannot matter; the +win slack absorbs windows
+                # ending at the doc tail
+                mask = np.zeros(n + win, dtype=bool)
+                s = np.asarray(st, dtype=np.int64) - 1  # 1-based
+                for j in range(win):
+                    mask[s + j] = True
+                mask = mask[:n]
+                kept_toks = [t for t, m in zip(toks, mask) if not m]
+                ids.append(did)
+                ntoks.append(n)
+                nrem.append(int(mask.sum()))
+                clean.append(" ".join(kept_toks))
+            yield pd.DataFrame({
+                id_col: pd.Series(ids, dtype="int64"),
+                "n_tokens": pd.Series(ntoks, dtype="int64"),
+                "n_removed_tokens": pd.Series(nrem, dtype="int64"),
+                "clean_text": pd.Series(clean, dtype="object"),
+            })
 
-        return src.mapInPandas(
-            _reassemble,
-            schema=(f"{id_col} long, n_tokens long, "
-                    "n_removed_tokens long, clean_text string"),
-        )
-    covered = removable.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.col("pos"), F.col("pos") + (win - 1))).alias("pos"),
-    ).distinct()
-    words = F.split(F.col(text_col), " ")
-    toks = rebalance_for_fanout(
-        docs.select(F.col(id_col), F.col(text_col))
-    ).select(F.col(id_col), F.posexplode(words).alias("_p0", "tok"))
-    toks = toks.select(F.col(id_col), (F.col("_p0") + 1).alias("pos"), "tok")
-    kept = toks.join(covered, [id_col, "pos"], "left_anti")
-    reassembled = kept.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("_n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("tok")))),
-                lambda s: s["tok"],
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    n_tokens = F.size(F.split(F.col(text_col), " ")).cast("long")
-    return (
-        docs.select(F.col(id_col), n_tokens.alias("n_tokens"))
-        .join(reassembled, id_col, "left")
-        .select(
-            id_col,
-            "n_tokens",
-            (F.col("n_tokens") - F.coalesce("_n_kept", F.lit(0)))
-            .cast("long").alias("n_removed_tokens"),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        )
+    return src.mapInPandas(
+        _reassemble,
+        schema=(f"{id_col} long, n_tokens long, "
+                "n_removed_tokens long, clean_text string"),
     )

@@ -27,19 +27,8 @@ def dense_daily(
     fill: int = 0,
     policy: str = "closest",
     as_of: _dt.date | str | None = None,
-    partition_by_url: bool = False,
 ) -> DataFrame:
-    """captures -> dense (gap-free) per-url daily series, unscored.
-
-    ``partition_by_url=True`` repartitions on url up front, which
-    collapses the pipeline to a SINGLE shuffle (HashPartitioning(url)
-    satisfies every downstream window/agg clustering: (url, digest),
-    (url, day), (url)) at the cost of extra in-partition sorts. Wins at
-    cluster scale where shuffle volume dominates; loses on small local
-    data where the sorts dominate — hence opt-in.
-    """
-    if partition_by_url:
-        captures = captures.repartition("url")
+    """captures -> dense (gap-free) per-url daily series, unscored."""
     daily = daily_rollup(normalize_captures(captures))
     filled = gap_fill(daily, fill, policy) if fill != 0 else None
     return densify(daily, filled, resolve_as_of(daily, as_of))

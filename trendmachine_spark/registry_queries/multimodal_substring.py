@@ -817,8 +817,9 @@ def q_substring_dedup(spark, sf_dir):
     """Destructive exact-substring dedup (round 4): every non-first
     occurrence (by (doc_id, pos)) of a duplicated 10-token window
     loses its covered tokens; the corpus keeps exactly one copy of
-    each duplicated span. Reassembly is array_sort on (pos, token)
-    structs — never collect_list arrival order."""
+    each duplicated span. Surviving tokens are found by one per-doc
+    scatter mask over the removable window starts, which is
+    insensitive to collect_list arrival order."""
     from trendmachine_spark.extensions.dedup import strip_duplicated_spans
 
     return strip_duplicated_spans(_docs(spark, sf_dir), win=10)

@@ -54,11 +54,12 @@ from pyspark.sql import functions as F
 
 from trendmachine_spark.extensions.dedup import (
     BANDS,
-    HASH_MASKS,
     MAX_LSH_BUCKET,
     ROWS_PER_BAND,
     SHINGLE_K,
     gram_array,
+    minhash_columns,
+    shingle_hash,
 )
 
 #: state: parallel arrays over bucket members (insertion-ordered)
@@ -97,17 +98,8 @@ def band_bucket_rows(docs: DataFrame, text_col: str = "text",
         F.md5(F.col(text_col)).alias("md5"),
         grams.alias("_g"),
     )
-    hs = F.transform(
-        F.col("_g"),
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-    )
-    base = base.withColumn("_h", hs)
-    mh = [
-        F.array_min(
-            F.transform(F.col("_h"), lambda h: h.bitwiseXOR(F.lit(HASH_MASKS[j])))
-        )
-        for j in range(BANDS * ROWS_PER_BAND)
-    ]
+    base = base.withColumn("_h", F.transform(F.col("_g"), shingle_hash))
+    mh = minhash_columns(BANDS * ROWS_PER_BAND, per_row=True)
     band_structs = F.array(*[
         F.struct(
             F.lit(b).cast("long").alias("band"),
