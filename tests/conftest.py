@@ -3,14 +3,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
-from trendmachine_spark.streaming.tws_stream import ensure_protobuf_runtime
-
-# Before ANY SparkSession exists: wire up a protobuf runtime for the
-# transformWithState state-server protocol (vendored bundle fallback —
-# workers inherit sys.path/env only from the driver's state at JVM
-# launch, so this cannot wait until the tws test itself runs).
-ensure_protobuf_runtime()
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -79,7 +79,7 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
     mostly alone) and for ANY Arrow batch size (maxRecordsPerBatch=3
     forces url runs AND key runs to straddle batch boundaries, so the
     carried [base, scale, x_next, h_last] state is exercised on every
-    path), for both slim and full Arrow forms."""
+    path)."""
     rng = random.Random(seed)
     import datetime as dt
 
@@ -103,9 +103,7 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
         )
     one = rows_of(score_daily_series(dense, url_buckets=1))
     many = rows_of(score_daily_series(dense, url_buckets=64))
-    slim = rows_of(score_daily_series(dense, slim_arrow=True, url_buckets=7))
     assert one == many  # bit-identical, not approx
-    assert one == slim
     # tiny Arrow batches: every run straddles batch boundaries
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)

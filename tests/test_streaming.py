@@ -79,39 +79,6 @@ def test_streaming_chaos_state_matches_batch_final(spark):
         assert got[r["url"]]["chaosn"] == pytest.approx(r["chaosn"], abs=1e-12), r["url"]
 
 
-def test_streaming_resilience_matches_batch_closed_days(spark):
-    from trendmachine_spark.streaming.capture_stream import resilience_scores_stream
-
-    stream = events_capture_stream(spark, SF)
-    _run_to_memory(resilience_scores_stream(stream), "res_stream", "append")
-    got = {
-        (r["url"], r["day"]): (r["specimen"], r["resilience"])
-        for r in spark.sql("SELECT * FROM res_stream").collect()
-    }
-
-    from trendmachine_spark.pipeline import daily_series
-    from trendmachine_spark.sources.captures import events_as_captures
-
-    caps = events_as_captures(spark, SF)
-    batch = daily_series(caps, fill=0)
-    last_observed = {
-        r["url"]: r["mx"]
-        for r in batch.filter(F.col("All") != 0)
-        .groupBy("url").agg(F.max("Day").alias("mx")).collect()
-    }
-    checked = 0
-    for r in batch.collect():
-        if r["Day"] >= last_observed[r["url"]]:
-            continue  # the open day + trailing spine are not yet closed in streaming
-        key = (r["url"], r["Day"])
-        assert key in got, key
-        spec = r["Specimen"] if r["Specimen"] in ("2xx", "3xx", "4xx", "5xx", "~") else "~"
-        assert got[key][0] == spec, key
-        assert got[key][1] == pytest.approx(r["Resilience"], abs=1e-12), key
-        checked += 1
-    assert checked > 300
-
-
 def test_streaming_scored_matches_batch_closed_days(spark):
     from trendmachine_spark.streaming.scored_stream import scored_daily_stream
 
@@ -137,6 +104,8 @@ def test_streaming_scored_matches_batch_closed_days(spark):
         if r["Day"] >= last_observed[r["url"]]:
             continue
         g = got[(r["url"], r["Day"])]
+        spec = r["Specimen"] if r["Specimen"] in ("2xx", "3xx", "4xx", "5xx", "~") else "~"
+        assert g["specimen"] == spec, (r["url"], r["Day"])
         assert g["content"] == r["Content"], (r["url"], r["Day"])
         assert g["resilience"] == pytest.approx(r["Resilience"], abs=1e-12)
         assert g["fixity"] == pytest.approx(r["Fixity"], abs=1e-12)
@@ -214,7 +183,6 @@ def test_streaming_final_day_flushes_on_watermark(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from trendmachine_spark.streaming.capture_stream import resilience_scores_stream
     from trendmachine_spark.streaming.scored_stream import scored_daily_stream
 
     def us(day_ts):
@@ -248,199 +216,36 @@ def test_streaming_final_day_flushes_on_watermark(spark, tmp_path):
         ).collect()
     }
 
-    for name, build in (
-        ("flush_res", resilience_scores_stream),
-        ("flush_scored", scored_daily_stream),
-    ):
-        stream = events_capture_stream(spark, str(tmp_path))
-        _run_to_memory(build(stream), name, "append")
-        got = {
-            (r["url"], r["day"]): r
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
-        # final day 2024-01-03 closed by TIMEOUT (no later user-7 event)
-        assert set(got) == {
-            ("user-7", "2024-01-01"), ("user-7", "2024-01-02"),
-            ("user-7", "2024-01-03"),
-        }, name
-        for k, g in got.items():
-            assert g["resilience"] == pytest.approx(
-                batch[k]["Resilience"], abs=1e-12), (name, k)
-        if name == "flush_scored":
-            for k, g in got.items():
-                assert g["fixity"] == pytest.approx(
-                    batch[k]["Fixity"], abs=1e-12), k
-                assert g["content"] == batch[k]["Content"], k
-
-
-def test_tws_resilience_equivalent_to_applyinpandaswithstate(spark):
-    """The transformWithStateInPandas port emits exactly the same
-    (url, day) -> (specimen, resilience) set as the
-    applyInPandasWithState implementation, including timer-flushed
-    final days. Skips where the TWS runtime can't start (its state
-    server needs the protobuf package, absent in this sandbox)."""
-    from trendmachine_spark.streaming.capture_stream import resilience_scores_stream
-    from trendmachine_spark.streaming.tws_stream import (
-        resilience_scores_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithState runtime unavailable (no protobuf)")
-
-    # transformWithState scopes each state variable to its own column
-    # family, which the default HDFS-backed store rejects — both twins
-    # run under RocksDB (bundled rocksdbjni) for symmetric conditions
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = {}
-        for name, build in (("eq_v1", resilience_scores_stream),
-                            ("eq_v2", resilience_scores_tws)):
-            stream = events_capture_stream(spark, SF)
-            _run_to_memory(build(stream), name, "append")
-            out[name] = {
-                (r["url"], r["day"]): (r["specimen"], r["resilience"])
-                for r in spark.sql(f"SELECT * FROM {name}").collect()
-            }
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
-    assert len(out["eq_v1"]) > 300
-    assert set(out["eq_v1"]) == set(out["eq_v2"])
-    for k, (spec, res) in out["eq_v1"].items():
-        assert out["eq_v2"][k][0] == spec, k
-        assert out["eq_v2"][k][1] == pytest.approx(res, abs=1e-12), k
-
-
-def test_tws_processor_state_machine_matches_batch(spark):
-    """Drive the TWS processor class directly with fake handle/timer
-    objects (the runtime needs protobuf, absent here) — per-batch
-    ingest + a day-close timer expiry must reproduce the batch engine's
-    resilience series exactly, and a stale timer (armed for a
-    superseded day) must be ignored."""
-    import pandas as pd
-
-    from trendmachine_spark.pipeline import daily_series
-    from trendmachine_spark.sources.captures import events_as_captures
-    from trendmachine_spark.streaming.tws_stream import make_resilience_processor
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-            self.timers = []
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-        def registerTimer(self, ms):
-            self.timers.append(ms)
-
-    class FakeTimerValues:
-        def __init__(self, wm):
-            self.wm = wm
-
-        def getCurrentWatermarkInMs(self):
-            return self.wm
-
-    class FakeExpired:
-        def __init__(self, ms):
-            self.ms = ms
-
-        def getExpiryTimeInMs(self):
-            return self.ms
-
-    caps = events_as_captures(spark, SF)
-    batch = {
-        (r["url"], r["Day"]): r
-        for r in daily_series(caps, fill=0).collect()
+    stream = events_capture_stream(spark, str(tmp_path))
+    _run_to_memory(scored_daily_stream(stream), "flush_scored", "append")
+    got = {
+        (r["url"], r["day"]): r
+        for r in spark.sql("SELECT * FROM flush_scored").collect()
     }
-    url = "user-3"
-    # batch twin of events_capture_stream's projection (a streaming DF
-    # can't be collected)
-    from trendmachine_spark.sources.captures import EVENT_STATUS
-    from trendmachine_spark.sources.tables import load_table
-
-    e = load_table(spark, SF, "events")
-    status = F.lit(None).cast("string")
-    for k, v in EVENT_STATUS.items():
-        status = F.when(F.col("event_type") == k, F.lit(v)).otherwise(status)
-    rows = (
-        e.select(
-            F.concat(F.lit("user-"), F.col("user_id").cast("string")).alias("url"),
-            F.col("ts").cast("timestamp").alias("event_time"),
-            F.coalesce(status, F.col("event_type")).alias("status"),
-            F.concat(F.lit("DG"), F.regexp_extract("props", "[0-9]+", 0),
-                     F.lit("000000")).alias("digest"),
-        )
-        .filter(F.col("url") == url)
-        .orderBy("event_time")
-        .toPandas()
-    )
-    assert len(rows) > 50
-
-    proc = make_resilience_processor()()
-    handle = FakeHandle()
-    proc.init(handle)
-    got = []
-    # feed in 3 chronological chunks (micro-batches)
-    for chunk in (rows.iloc[:20], rows.iloc[20:40], rows.iloc[40:]):
-        for pdf in proc.handleInputRows((url,), iter([chunk]), FakeTimerValues(0)):
-            got.append(pdf)
-    # stale timer: armed for an old day, must not close the current one
-    n_before = sum(len(p) for p in got)
-    assert list(proc.handleExpiredTimer((url,), FakeTimerValues(0), FakeExpired(0))) == []
-    assert sum(len(p) for p in got) == n_before
-    # real expiry at the armed timestamp closes the final open day
-    assert handle.timers
-    for pdf in proc.handleExpiredTimer(
-        (url,), FakeTimerValues(handle.timers[-1]), FakeExpired(handle.timers[-1])
-    ):
-        got.append(pdf)
-    out = pd.concat(got, ignore_index=True)
-
-    last_day = max(d for (u, d) in batch if u == url)
-    want = {d: batch[(url, d)] for (u, d) in batch if u == url}
-    assert set(out["day"]) == set(want), "streamed days != batch spine days"
-    assert last_day in set(out["day"]), "timer flush missing the final day"
-    for _, r in out.iterrows():
-        b = want[r["day"]]
-        spec = b["Specimen"] if b["Specimen"] in ("2xx", "3xx", "4xx", "5xx", "~") else "~"
-        assert r["specimen"] == spec, r["day"]
-        assert r["resilience"] == pytest.approx(b["Resilience"], abs=1e-12), r["day"]
+    # final day 2024-01-03 closed by TIMEOUT (no later user-7 event)
+    assert set(got) == {
+        ("user-7", "2024-01-01"), ("user-7", "2024-01-02"),
+        ("user-7", "2024-01-03"),
+    }
+    for k, g in got.items():
+        assert g["resilience"] == pytest.approx(
+            batch[k]["Resilience"], abs=1e-12), k
+        assert g["fixity"] == pytest.approx(batch[k]["Fixity"], abs=1e-12), k
+        assert g["content"] == batch[k]["Content"], k
 
 
 def test_streaming_state_survives_checkpoint_restart(spark, tmp_path):
-    """Recovery semantics: run the resilience stream over an initial
-    file with a checkpoint, stop, add a later file, restart from the
-    SAME checkpoint — the per-url digest/recurrence state must carry
-    across the restart, and the union of both runs' emissions must
-    equal the batch series over the combined input (no re-emission of
-    already-closed days, no gap)."""
+    """Recovery semantics: run the scored stream over an initial file
+    with a checkpoint, stop, add a later file, restart from the SAME
+    checkpoint — the per-url digest map, both recurrences' registers
+    and the fixity carry-over digest must survive the restart, and the
+    union of both runs' emissions must equal the batch series over the
+    combined input (no re-emission of already-closed days, no gap)."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from trendmachine_spark.streaming.capture_stream import resilience_scores_stream
+    from trendmachine_spark.streaming.scored_stream import scored_daily_stream
 
     events_dir = tmp_path / "events_src"
     events_dir.mkdir()
@@ -457,11 +262,13 @@ def test_streaming_state_survives_checkpoint_restart(spark, tmp_path):
         })
         pq.write_table(t, str(events_dir / name))
 
-    # first batch of files: days 1-3 for user 7 (click=200, purchase=404)
+    # first batch of files: days 1-3 for user 7 (click=200, purchase=404);
+    # day 3 repeats day 2's digest, so its 'Unchanged' content (scored
+    # only after the restart) needs the carried closing digest
     write_file("events.parquet", [
         (1, "2024-01-01 01:00:00", 7, "click", "n1x"),
         (2, "2024-01-02 01:00:00", 7, "purchase", "n2x"),
-        (3, "2024-01-03 01:00:00", 7, "click", "n1x"),
+        (3, "2024-01-03 01:00:00", 7, "click", "n2x"),
     ])
 
     out_dir = str(tmp_path / "out")
@@ -471,7 +278,7 @@ def test_streaming_state_survives_checkpoint_restart(spark, tmp_path):
         # restarting from a checkpoint
         stream = events_capture_stream(spark, str(events_dir))
         q = (
-            resilience_scores_stream(stream)
+            scored_daily_stream(stream)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
@@ -528,6 +335,8 @@ def test_streaming_state_survives_checkpoint_restart(spark, tmp_path):
     assert set(got) == set(batch)
     for d, r in got.items():
         assert r["resilience"] == pytest.approx(batch[d]["Resilience"], abs=1e-12), d
+        assert r["fixity"] == pytest.approx(batch[d]["Fixity"], abs=1e-12), d
+        assert r["content"] == batch[d]["Content"], d
 
 
 def test_streaming_state_ttl_gc(spark, tmp_path):
@@ -542,7 +351,7 @@ def test_streaming_state_ttl_gc(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from trendmachine_spark.params import DEFAULT_SIGPARAMS
-    from trendmachine_spark.streaming.capture_stream import resilience_scores_stream
+    from trendmachine_spark.streaming.scored_stream import scored_daily_stream
 
     events_dir = tmp_path / "src"
     events_dir.mkdir()
@@ -563,7 +372,7 @@ def test_streaming_state_ttl_gc(spark, tmp_path):
     def run_once():
         stream = events_capture_stream(spark, str(events_dir))
         q = (
-            resilience_scores_stream(stream, state_ttl_sec=86400)
+            scored_daily_stream(stream, state_ttl_sec=86400)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
@@ -599,13 +408,20 @@ def test_streaming_state_ttl_gc(spark, tmp_path):
     # 40-day gap a retained state would have scored
     assert set(a_rows) == {"2024-01-01", "2024-01-02", "2024-01-03",
                            "2024-02-12"}, sorted(a_rows)
-    # the revived day scores from the 0.5 priors, x=1
-    p = DEFAULT_SIGPARAMS["2xx"].as_tuple()
-    fresh = 0.5 + 0.5 * (p[2] / (1.0 + math.exp(p[0] - 1.0 / p[1])))
-    assert a_rows["2024-02-12"]["resilience"] == pytest.approx(fresh, abs=1e-12)
+    # the revived day scores from the 0.5 priors, x=1 — both scores;
+    # its digest is compared against the fresh '~' carry-over, so the
+    # content is 'Changed' (the retained digest would have repeated)
+    def fresh(k):  # base 0.5, so scale is 0.5 for growth and decay alike
+        shift, slope, spread = DEFAULT_SIGPARAMS[k].as_tuple()
+        return 0.5 + 0.5 * (spread / (1.0 + math.exp(shift - 1.0 / slope)))
+
+    revived = a_rows["2024-02-12"]
+    assert revived["resilience"] == pytest.approx(fresh("2xx"), abs=1e-12)
+    assert revived["content"] == "Changed"
+    assert revived["fixity"] == pytest.approx(fresh("Changed"), abs=1e-12)
     # and it does NOT continue the retained-state series (which would
     # have decayed through 40 '~' days first)
-    assert a_rows["2024-01-03"]["resilience"] != pytest.approx(fresh, abs=1e-9)
+    assert a_rows["2024-01-03"]["resilience"] != pytest.approx(fresh("2xx"), abs=1e-9)
 
 
 def test_stateless_corpus_ops_run_on_streams(spark):

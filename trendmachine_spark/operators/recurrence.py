@@ -120,7 +120,6 @@ def _make_runner(params: dict):
 
 
 def score_daily_series(dense: DataFrame, sigparams=None,
-                       slim_arrow: bool = False,
                        url_buckets: int | None = None) -> DataFrame:
     """Add ``resilience`` and ``fixity`` columns to the dense daily series.
 
@@ -136,12 +135,9 @@ def score_daily_series(dense: DataFrame, sigparams=None,
     bit-identical results — pinned by the partition/batch-invariance
     test — it only trades parallelism against per-task constants.
 
-    ``slim_arrow=False`` (default) routes the whole dense row through
-    the map and returns scored rows directly — no join-back, the dense
-    subtree appears once in the plan; with large streamed batches the
-    extra columns ride nearly free. ``slim_arrow=True`` keeps the
-    historical shape: only (url, day, specimen, content) cross the
-    Python boundary and the two score columns hash-join back.
+    The whole dense row goes through the map and comes back scored —
+    no join-back, so the dense subtree appears once in the plan; with
+    large streamed batches the extra columns ride nearly free.
 
     The map function and its helpers are deliberately *nested* so
     cloudpickle serializes them by value — workers never need the
@@ -152,14 +148,8 @@ def score_daily_series(dense: DataFrame, sigparams=None,
     known = list(params)
     nparts = url_buckets if url_buckets is not None else _partition_count(dense)
 
-    src = dense.select("url", "day", "specimen", "content") if slim_arrow else dense
-    in_cols = [f.name for f in src.schema.fields]
-    if slim_arrow:
-        out_fields = [src.schema["url"], src.schema["day"]]
-    else:
-        out_fields = list(src.schema.fields)
     out_schema = T.StructType(
-        out_fields
+        list(dense.schema.fields)
         + [T.StructField("resilience", T.DoubleType()), T.StructField("fixity", T.DoubleType())]
     )
     out_cols = [f.name for f in out_schema.fields]
@@ -175,7 +165,6 @@ def score_daily_series(dense: DataFrame, sigparams=None,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            pdf = pdf[in_cols]
             urls = pdf["url"].to_numpy(dtype=object)
             spec = pdf["specimen"].to_numpy(dtype=object)
             spec = np.where(np.isin(spec, known), spec, "~")
@@ -187,39 +176,31 @@ def score_daily_series(dense: DataFrame, sigparams=None,
             pdf["fixity"] = fix
             yield pdf[out_cols]
 
-    scored = (
-        src.repartition(nparts, "url")
+    return (
+        dense.repartition(nparts, "url")
         .sortWithinPartitions("url", "day")
         .mapInPandas(stream, schema=out_schema)
     )
-    if slim_arrow:
-        return dense.join(
-            scored.select("url", "day", "resilience", "fixity"), ["url", "day"]
-        )
-    return scored
 
 
-def score_daily_series_multi(dense: DataFrame, param_sets: dict,
-                             slim_arrow: bool = True,
-                             url_buckets: int | None = None) -> DataFrame:
+def score_daily_series_multi(dense: DataFrame, param_sets: dict) -> DataFrame:
     """Score the same dense series under several sigmoid-parameter sets
     in ONE streamed scan (reference entry point 2 — slider re-tuning —
     generalized: the expensive upstream rollup/spine is reused, and a
     whole parameter sweep costs one pass; output gains a ``param_set``
     key column). Same streaming shape as score_daily_series, with one
-    resumable run state per (param_set, recurrence).
+    resumable run state per (param_set, recurrence); only (url, day,
+    specimen, content) cross the Python boundary and the scores
+    hash-join back, since every row leaves the map once per param set.
     """
     tables = {name: _param_table(p) for name, p in param_sets.items()}
     known = {name: list(t) for name, t in tables.items()}
-    nparts = url_buckets if url_buckets is not None else _partition_count(dense)
-
-    src = dense.select("url", "day", "specimen", "content") if slim_arrow else dense
+    src = dense.select("url", "day", "specimen", "content")
     out_schema = T.StructType(
         [T.StructField("param_set", T.StringType())]
         + list(src.schema.fields)
         + [T.StructField("resilience", T.DoubleType()), T.StructField("fixity", T.DoubleType())]
     )
-    base_cols = [f.name for f in src.schema.fields]
     # Driver-built runner closures: picklable by value (see
     # score_daily_series) — workers never import this package.
     runners = {name: _make_runner(t) for name, t in tables.items()}
@@ -229,7 +210,6 @@ def score_daily_series_multi(dense: DataFrame, param_sets: dict,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            pdf = pdf[base_cols]
             urls = pdf["url"].to_numpy(dtype=object)
             spec_raw = pdf["specimen"].to_numpy(dtype=object)
             content = pdf["content"].to_numpy(dtype=object)
@@ -246,18 +226,16 @@ def score_daily_series_multi(dense: DataFrame, param_sets: dict,
             yield pd.concat(outs, ignore_index=True)
 
     scored = (
-        src.repartition(nparts, "url")
+        src.repartition(_partition_count(dense), "url")
         .sortWithinPartitions("url", "day")
         .mapInPandas(stream, schema=out_schema)
     )
-    if slim_arrow:
-        return dense.join(
-            scored.select("url", "day", "param_set", "resilience", "fixity"),
-            ["url", "day"],
-        ).select(
-            "param_set",
-            *[f.name for f in dense.schema.fields],
-            "resilience",
-            "fixity",
-        )
-    return scored
+    return dense.join(
+        scored.select("url", "day", "param_set", "resilience", "fixity"),
+        ["url", "day"],
+    ).select(
+        "param_set",
+        *[f.name for f in dense.schema.fields],
+        "resilience",
+        "fixity",
+    )

@@ -1767,16 +1767,16 @@ def q_funnel_streaming(spark, sf_dir):
 
 @register("resilience_streaming", None)  # streaming stateful: rows-only
 def q_resilience_streaming(spark, sf_dir):
-    """Streaming O34 driven to completion over the sf parquet (the
-    batch-equivalence test lives in tests/test_streaming.py)."""
-    from trendmachine_spark.streaming.capture_stream import (
-        events_capture_stream,
-        resilience_scores_stream,
-    )
+    """Streaming O34 driven to completion over the sf parquet: the
+    resilience projection of the day-close scorer (batch equivalence
+    pinned in tests/test_streaming.py)."""
+    from trendmachine_spark.streaming.capture_stream import events_capture_stream
+    from trendmachine_spark.streaming.scored_stream import scored_daily_stream
 
     stream = events_capture_stream(spark, sf_dir)
     q = (
-        resilience_scores_stream(stream)
+        scored_daily_stream(stream)
+        .select("url", "day", "specimen", "resilience")
         .writeStream.format("memory")
         .queryName("_res_stream_q")
         .outputMode("append")

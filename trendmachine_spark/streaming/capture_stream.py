@@ -76,6 +76,27 @@ CHAOS_OUT_SCHEMA = (
 DIGEST_CAP = 65536
 
 
+def _make_status_resolver(digest_cap: int):
+    """Status class + revisit-digest LRU of the stateful streams (rule:
+    chaos_scores_stream). ``resolve`` is nested so cloudpickle ships it
+    by value (workers never import this package)."""
+
+    def resolve(digests, s, d):
+        s = s[:1] + "xx" if "200" <= s <= "599" else s
+        if s != "-":
+            digests.pop(d, None)
+            digests[d] = s
+            if len(digests) > digest_cap:
+                digests.pop(next(iter(digests)))
+        elif d in digests:
+            s = digests[d] = digests.pop(d)  # pop+reinsert = LRU touch
+        else:
+            s = "~"
+        return s
+
+    return resolve
+
+
 def chaos_scores_stream(stream: DataFrame, digest_cap: int = DIGEST_CAP) -> DataFrame:
     """Streaming O21: emits the running chaos/chaosn per url after each
     micro-batch — the unbounded twin of the batch daily close values.
@@ -94,6 +115,7 @@ def chaos_scores_stream(stream: DataFrame, digest_cap: int = DIGEST_CAP) -> Data
     workers don't need this package importable.
     """
     sws = SWS
+    resolve = _make_status_resolver(digest_cap)
 
     def chaos_state_fn(
         key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -112,18 +134,7 @@ def chaos_scores_stream(stream: DataFrame, digest_cap: int = DIGEST_CAP) -> Data
         for pdf in pdfs:
             pdf = pdf.sort_values("event_time", kind="mergesort")
             for s, d, ts in zip(pdf["status"], pdf["digest"], pdf["event_time"]):
-                s = s[:1] + "xx" if "200" <= s <= "599" else s
-                if s == "-":
-                    if d in digests:
-                        s = digests.pop(d)  # pop+reinsert = LRU touch
-                        digests[d] = s
-                    else:
-                        s = "~"
-                else:
-                    digests.pop(d, None)
-                    digests[d] = s
-                    if len(digests) > digest_cap:
-                        digests.pop(next(iter(digests)))
+                s = resolve(digests, s, d)
                 wp = rs % sws
                 rs += 1
                 if s != prev:
@@ -200,170 +211,4 @@ def events_capture_stream(spark, sf_dir: str) -> DataFrame:
         event_time.alias("event_time"),
         F.coalesce(status, F.col("event_type")).alias("status"),
         F.concat(F.lit("DG"), F.regexp_extract("props", "[0-9]+", 0), F.lit("000000")).alias("digest"),
-    )
-
-
-RES_STATE_SCHEMA = (
-    "digests map<string,string>, cur_day string, cur_pr int, cur_spec string, "
-    "base double, scale double, h double, x bigint, prev string, closed boolean"
-)
-RES_OUT_SCHEMA = "url string, day string, specimen string, resilience double"
-
-
-def resilience_scores_stream(stream: DataFrame, sigparams=None,
-                             digest_cap: int = DIGEST_CAP,
-                             watermark: str = "1 day",
-                             state_ttl_sec: int | None = None) -> DataFrame:
-    """Streaming O34: per-url resilience emitted at each day close.
-
-    State carries the revisit digest map, the open day's best specimen
-    (priority + first-capture-wins, O20), and the recurrence registers
-    (base/scale/h/x/prev). When a capture for a later day arrives, the
-    operator closes the open day, synthesizes any interior missing days
-    as '~' (the reference's dense-spine iteration, O31, done lazily),
-    scores them, and emits one row per closed day.
-
-    The still-open day additionally closes by EVENT-TIME TIMEOUT: each
-    key arms a timer at its open day's end, and once the stream's
-    watermark (``watermark`` behind max event time) passes it with no
-    newer capture, the day is scored and emitted — so a url that goes
-    quiet still surfaces its final day, batch-equivalent. A ``closed``
-    flag in state makes the flush idempotent: a later capture resumes
-    the spine from the flushed day without re-scoring it (late events
-    for an already-flushed day are dropped, standard watermark
-    semantics). Flushed keys retain their ~few-hundred-byte recurrence
-    state so a revival continues the exact series; ``state_ttl_sec``
-    (None = keep forever) bounds total state at 100 TB url churn: after
-    a flush, a GC timer is armed at watermark + ttl, and if the url
-    stays quiet that long its state is REMOVED — a later revival then
-    restarts the recurrence from the 0.5 priors (documented divergence
-    from batch, which remembers all history; test-pinned). ``digest_cap``:
-    LRU bound on the digest map (see chaos_scores_stream — same
-    eviction rule and divergence note).
-    """
-    from trendmachine_spark.params import DEFAULT_SIGPARAMS, SigmoidParam
-
-    params = {}
-    for k, v in (sigparams or DEFAULT_SIGPARAMS).items():
-        params[k] = v.as_tuple() if isinstance(v, SigmoidParam) else tuple(v)
-    priority = {"2xx": 4, "4xx": 3, "5xx": 2, "3xx": 1}
-
-    def state_fn(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
-        from datetime import date, datetime, time, timedelta, timezone
-
-        if state.exists:
-            (digests, cur_day, cur_pr, cur_spec,
-             base, scale, h, x, prev, closed) = state.get
-            digests = dict(digests)
-        else:
-            digests, cur_day, cur_spec = {}, None, "~"
-            cur_pr = -1
-            base = scale = h = 0.5
-            x = 0
-            prev = "~"
-            closed = False
-
-        out_rows = []
-
-        def score_day(day_str, spec):
-            nonlocal base, scale, h, x, prev
-            p = params.get(spec) or params["~"]
-            if spec != prev:
-                base = h
-                scale = base if p[2] < 0 else 1.0 - base
-                prev = spec
-                x = 0
-            x += 1
-            h = base + scale * (p[2] / (1.0 + math.exp(p[0] - x / p[1])))
-            out_rows.append((key[0], day_str, spec, h))
-
-        def finish():
-            state.update((digests, cur_day, cur_pr, cur_spec,
-                          base, scale, h, x, prev, closed))
-            if cur_day is not None and not closed:
-                nxt = date.fromisoformat(cur_day) + timedelta(days=1)
-                end_ms = int(datetime.combine(
-                    nxt, time.min, tzinfo=timezone.utc).timestamp() * 1000)
-                # timers must be strictly ahead of the current watermark
-                state.setTimeoutTimestamp(
-                    max(end_ms, state.getCurrentWatermarkMs() + 1))
-            elif closed and state_ttl_sec is not None:
-                # idle-key GC: drop this url's state if it stays quiet
-                # a full TTL past the flush
-                state.setTimeoutTimestamp(
-                    state.getCurrentWatermarkMs() + state_ttl_sec * 1000)
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows, columns=["url", "day", "specimen", "resilience"])
-
-        if state.hasTimedOut:
-            if cur_day is not None and not closed:
-                # watermark passed the open day's end with no newer
-                # capture: close it, then (if a TTL is set) arm the GC
-                # timer — finish() handles both because closed is True
-                score_day(cur_day, cur_spec if cur_spec in params else "~")
-                closed = True
-                yield from finish()
-            else:
-                # the GC timer (only armed when state_ttl_sec is set):
-                # the url stayed quiet a full TTL past its flush
-                state.remove()
-            return
-
-        def close_through(next_day_str):
-            # close the open day, then synthesize '~' days up to next_day
-            nonlocal cur_day, cur_pr, cur_spec, closed
-            if cur_day is None:
-                cur_day = next_day_str
-                cur_pr = -1
-                cur_spec = "~"
-                closed = False
-                return
-            if next_day_str == cur_day:
-                return
-            if not closed:
-                score_day(cur_day, cur_spec if cur_spec in params else "~")
-            d = date.fromisoformat(cur_day) + timedelta(days=1)
-            end = date.fromisoformat(next_day_str)
-            while d < end:
-                score_day(d.isoformat(), "~")
-                d += timedelta(days=1)
-            cur_day = next_day_str
-            cur_pr = -1
-            cur_spec = "~"
-            closed = False
-
-        for pdf in pdfs:
-            pdf = pdf.sort_values("event_time", kind="mergesort")
-            for s, dg, ts in zip(pdf["status"], pdf["digest"], pdf["event_time"]):
-                s = s[:1] + "xx" if "200" <= s <= "599" else s
-                if s == "-":
-                    if dg in digests:
-                        s = digests.pop(dg)  # pop+reinsert = LRU touch
-                        digests[dg] = s
-                    else:
-                        s = "~"
-                else:
-                    digests.pop(dg, None)
-                    digests[dg] = s
-                    if len(digests) > digest_cap:
-                        digests.pop(next(iter(digests)))
-                day_str = ts.strftime("%Y-%m-%d")
-                close_through(day_str)
-                pr = priority.get(s, 0)
-                if pr > cur_pr:
-                    cur_spec = s
-                    cur_pr = pr
-
-        yield from finish()
-
-    return stream.withWatermark("event_time", watermark).groupBy("url").applyInPandasWithState(
-        state_fn,
-        outputStructType=RES_OUT_SCHEMA,
-        stateStructType=RES_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

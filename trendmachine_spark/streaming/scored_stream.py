@@ -1,12 +1,32 @@
 """Streaming scored daily series: resilience + fixity at each day close.
 
-Extends streaming/capture_stream.resilience_scores_stream with the
-fixity recurrence (O35): state additionally tracks the open day's
-winning digest and the previous observed day's closing digest, so the
-day's content state ('Unchanged' if the specimen digest repeats, else
+The streaming day-close scorer (O34 + O35). Per-url state carries the
+revisit digest map, the open day's best specimen (priority + first-
+capture-wins, O20) and winning digest, the previous observed day's
+closing digest, and both recurrences' registers. When a capture for a
+later day arrives, the operator closes the open day, synthesizes any
+interior missing days (the reference's dense-spine iteration, O31,
+done lazily), scores them and emits one row per closed day. The day's
+content state ('Unchanged' if the specimen digest repeats, else
 'Changed'; synthesized missing days are 'Unknown' — main.py:155/:168 +
-archive.py:17 semantics) drives the second recurrence. The batch-
+archive.py:17 semantics) drives the fixity recurrence. The batch-
 equivalence test pins both scores to 1e-12 on every closed day.
+
+The still-open day additionally closes by EVENT-TIME TIMEOUT: each
+key arms a timer at its open day's end, and once the stream's
+watermark (``watermark`` behind max event time) passes it with no
+newer capture, the day is scored and emitted — so a url that goes
+quiet still surfaces its final day, batch-equivalent. A ``closed``
+flag in state makes the flush idempotent: a later capture resumes the
+spine from the flushed day without re-scoring it (late events for an
+already-flushed day are dropped, standard watermark semantics).
+Flushed keys retain their ~few-hundred-byte state so a revival
+continues the exact series; ``state_ttl_sec`` (None = keep forever)
+bounds total state at 100 TB url churn: after a flush, a GC timer is
+armed at watermark + ttl, and if the url stays quiet that long its
+state is REMOVED — a later revival then restarts both recurrences
+from the 0.5 priors (documented divergence from batch, which
+remembers all history; test-pinned).
 """
 
 from __future__ import annotations
@@ -38,26 +58,17 @@ def scored_daily_stream(stream: DataFrame, sigparams=None,
 
     ``digest_cap`` (default capture_stream.DIGEST_CAP): LRU bound on
     the per-url digest map — see chaos_scores_stream for the eviction
-    rule and the documented divergence on evicted revisits.
-
-    Like resilience_scores_stream, the open day closes by event-time
-    timeout once the watermark passes its end, so a quiet url still
-    emits its final day (both scores + the fixity digest carry-over are
-    applied at flush, exactly as a capture-driven close would), and
-    ``state_ttl_sec`` arms a post-flush GC timer that removes the
-    state of urls quiet a full TTL past their flush (None = keep
-    forever; a revival after GC restarts both recurrences at priors).
+    rule and the documented divergence on evicted revisits. Timeout
+    flush and ``state_ttl_sec`` GC: module docstring.
     """
-    from trendmachine_spark.params import DEFAULT_SIGPARAMS, SigmoidParam
-    from trendmachine_spark.streaming.capture_stream import DIGEST_CAP
+    from trendmachine_spark.operators.recurrence import _param_table
+    from trendmachine_spark.params import STATUS_PRIORITY
+    from trendmachine_spark.streaming.capture_stream import DIGEST_CAP, _make_status_resolver
 
-    if digest_cap is None:
-        digest_cap = DIGEST_CAP
-
-    params = {}
-    for k, v in (sigparams or DEFAULT_SIGPARAMS).items():
-        params[k] = v.as_tuple() if isinstance(v, SigmoidParam) else tuple(v)
-    priority = {"2xx": 4, "4xx": 3, "5xx": 2, "3xx": 1}
+    # driver-side locals: the closure captures them by value
+    params = _param_table(sigparams)
+    priority = STATUS_PRIORITY
+    resolve = _make_status_resolver(DIGEST_CAP if digest_cap is None else digest_cap)
 
     def state_fn(
         key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -67,66 +78,63 @@ def scored_daily_stream(stream: DataFrame, sigparams=None,
 
         if state.exists:
             (digests, cur_day, cur_pr, cur_spec, cur_digest, prev_close_digest,
-             base, scale, h, x, prev, basec, scalec, hc, xc, prevc,
-             closed) = state.get
+             *regs, closed) = state.get
             digests = dict(digests)
+            # recurrence registers [base, scale, h, x, prev] per score
+            res, fix = list(regs[:5]), list(regs[5:])
         else:
             digests, cur_day, cur_spec, cur_digest = {}, None, "~", "~"
             prev_close_digest = "~"
             cur_pr = -1
-            base = scale = h = basec = scalec = hc = 0.5
-            x = xc = 0
-            prev = "~"
-            prevc = "Unknown"
+            res = [0.5, 0.5, 0.5, 0, "~"]
+            fix = [0.5, 0.5, 0.5, 0, "Unknown"]
             closed = False
 
         out_rows = []
 
-        def recur(spec, content):
-            nonlocal base, scale, h, x, prev, basec, scalec, hc, xc, prevc
-            p = params.get(spec) or params["~"]
-            if spec != prev:
+        def step(reg, k, p):
+            # one day of the run-based recurrence (main.py:194-227)
+            base, scale, h, x, prev = reg
+            if k != prev:
                 base = h
                 scale = base if p[2] < 0 else 1.0 - base
-                prev = spec
                 x = 0
             x += 1
             h = base + scale * (p[2] / (1.0 + math.exp(p[0] - x / p[1])))
-            cp = params.get(content) or params["Unknown"]
-            if content != prevc:
-                basec = hc
-                scalec = basec if cp[2] < 0 else 1.0 - basec
-                prevc = content
-                xc = 0
-            xc += 1
-            hc = basec + scalec * (cp[2] / (1.0 + math.exp(cp[0] - xc / cp[1])))
-            return h, hc
+            reg[:] = base, scale, h, x, k
+            return h
+
+        def emit(day_str, spec, content):
+            out_rows.append((
+                key[0], day_str, spec, content,
+                step(res, spec, params.get(spec) or params["~"]),
+                step(fix, content, params.get(content) or params["Unknown"]),
+            ))
 
         def close_day():
             # score + emit the open day and roll the fixity digest
             nonlocal prev_close_digest, closed
             spec = cur_spec if cur_spec in params else "~"
-            content = "Unchanged" if cur_digest == prev_close_digest else "Changed"
-            r, f = recur(spec, content)
-            out_rows.append((key[0], cur_day, spec, content, r, f))
+            emit(cur_day, spec,
+                 "Unchanged" if cur_digest == prev_close_digest else "Changed")
             prev_close_digest = cur_digest
             closed = True
 
         def finish():
-            state.update((
-                digests, cur_day, cur_pr, cur_spec, cur_digest, prev_close_digest,
-                base, scale, h, x, prev, basec, scalec, hc, xc, prevc, closed,
-            ))
+            state.update((digests, cur_day, cur_pr, cur_spec, cur_digest,
+                          prev_close_digest, *res, *fix, closed))
             if cur_day is not None and not closed:
                 from datetime import datetime, time, timezone
 
                 nxt = date.fromisoformat(cur_day) + timedelta(days=1)
                 end_ms = int(datetime.combine(
                     nxt, time.min, tzinfo=timezone.utc).timestamp() * 1000)
+                # timers must be strictly ahead of the current watermark
                 state.setTimeoutTimestamp(
                     max(end_ms, state.getCurrentWatermarkMs() + 1))
             elif closed and state_ttl_sec is not None:
-                # idle-key GC (see resilience_scores_stream)
+                # idle-key GC: drop this url's state if it stays quiet
+                # a full TTL past the flush
                 state.setTimeoutTimestamp(
                     state.getCurrentWatermarkMs() + state_ttl_sec * 1000)
             if out_rows:
@@ -146,23 +154,16 @@ def scored_daily_stream(stream: DataFrame, sigparams=None,
 
         def close_through(next_day_str):
             nonlocal cur_day, cur_pr, cur_spec, cur_digest, closed
-            if cur_day is None:
-                cur_day = next_day_str
-                cur_pr = -1
-                cur_spec = "~"
-                cur_digest = "~"
-                closed = False
-                return
             if next_day_str == cur_day:
                 return
-            if not closed:
-                close_day()
-            d = date.fromisoformat(cur_day) + timedelta(days=1)
-            end = date.fromisoformat(next_day_str)
-            while d < end:
-                r, f = recur("~", "Unknown")
-                out_rows.append((key[0], d.isoformat(), "~", "Unknown", r, f))
-                d += timedelta(days=1)
+            if cur_day is not None:
+                if not closed:
+                    close_day()
+                d = date.fromisoformat(cur_day) + timedelta(days=1)
+                end = date.fromisoformat(next_day_str)
+                while d < end:
+                    emit(d.isoformat(), "~", "Unknown")
+                    d += timedelta(days=1)
             cur_day = next_day_str
             cur_pr = -1
             cur_spec = "~"
@@ -172,18 +173,7 @@ def scored_daily_stream(stream: DataFrame, sigparams=None,
         for pdf in pdfs:
             pdf = pdf.sort_values("event_time", kind="mergesort")
             for s, dg, ts in zip(pdf["status"], pdf["digest"], pdf["event_time"]):
-                s = s[:1] + "xx" if "200" <= s <= "599" else s
-                if s == "-":
-                    if dg in digests:
-                        s = digests.pop(dg)  # pop+reinsert = LRU touch
-                        digests[dg] = s
-                    else:
-                        s = "~"
-                else:
-                    digests.pop(dg, None)
-                    digests[dg] = s
-                    if len(digests) > digest_cap:
-                        digests.pop(next(iter(digests)))
+                s = resolve(digests, s, dg)
                 close_through(ts.strftime("%Y-%m-%d"))
                 pr = priority.get(s, 0)
                 if pr > cur_pr:
