@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +14,13 @@ from trendmachine_spark.operators.recurrence import (
 )
 from trendmachine_spark.params import DEFAULT_SIGPARAMS, SigmoidParam
 from trendmachine_spark.pipeline import daily_series, dense_daily
-from trendmachine_spark.sinks import read_daily_report, write_daily_report
+from trendmachine_spark.sinks import (
+    ROLLUP_BUCKETS,
+    _url_bucket,
+    read_daily_report,
+    read_report_urls,
+    write_daily_report,
+)
 from trendmachine_spark.sources.captures import captures_from_fixture
 
 
@@ -46,19 +54,60 @@ def test_multi_param_default_matches_single(spark):
     )
 
 
+def _initial_exchanges(plan: str) -> int:
+    """Shuffle exchanges in an adaptive plan's initial tree. (The final
+    tree depends on timing: AQE may turn a sort-merge join into a
+    broadcast join before or after the join's exchanges ran.)"""
+    tree = plan.split("== Initial Plan ==")[-1].split("\n\n")[0]
+    return len(re.findall(r"\bExchange\b", tree))
+
+
+def _files_read(df) -> int:
+    """Files the scan of ``df`` lists, after partition pruning (its
+    "number of files read" metric, set when the scan plans its input)."""
+    plan = df._jdf.queryExecution().executedPlan()  # no exchange: no AQE
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    scans = [p for p in scans if p.nodeName().startswith("Scan parquet")]
+    assert len(scans) == 1, [p.nodeName() for p in scans]
+    scans[0].executeColumnar()
+    return int(scans[0].metrics().apply("numFiles").value())
+
+
 def test_report_sink_roundtrip(spark, tmp_path):
-    caps = captures_from_fixture(spark, FIXTURE_LINES_A)
+    """The url-bucket layout: rows round-trip, at most ROLLUP_BUCKETS
+    files, a one-URL read opens only its bucket's files, and the write
+    adds no exchange to the report's plan."""
+    caps = captures_from_fixture(spark, FIXTURE_LINES_A, url="u0")
+    for i in range(1, 12):
+        caps = caps.unionByName(captures_from_fixture(spark, FIXTURE_LINES_A, url=f"u{i}"))
     report = daily_series(caps, fill=0, as_of="2020-01-05")
+    want = sorted(map(tuple, report.collect()))
     path = str(tmp_path / "report")
     write_daily_report(report, path)
+    # the write's plan (the latest SQL execution) has exactly the
+    # report's exchanges: no month or bucket reshuffle
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    write = execs.apply(execs.size() - 1).physicalPlanDescription()
+    assert "InsertIntoHadoopFsRelationCommand" in write
+    assert _initial_exchanges(write) == _initial_exchanges(
+        report._jdf.queryExecution().executedPlan().toString())
 
     back = read_daily_report(spark, path)
-    assert back.count() == report.count()
-    assert set(back.columns) == set(report.columns) | {"month"}
-    # partition pruning works on the month column
-    pruned = back.filter(F.col("month") == "2020-01")
-    assert pruned.count() == report.count()
-    assert "PartitionFilters: [isnotnull(month" in pruned._jdf.queryExecution().executedPlan().toString() or pruned.count() > 0
+    assert back.columns == report.columns
+    assert sorted(map(tuple, back.collect())) == want
+    files = [str(f) for f in (tmp_path / "report").rglob("*.parquet")]
+    assert 1 < len(files) <= ROLLUP_BUCKETS
+
+    # a one-URL read scans only its bucket's directory
+    bucket = spark.range(1).select(_url_bucket(F.lit("u3"))).first()[0]
+    one = read_report_urls(spark, path, ["u3"])
+    assert sorted(map(tuple, one.collect())) == [r for r in want if r[0] == "u3"]
+    in_bucket = [f for f in files if f"/url_bucket={bucket}/" in f]
+    assert _files_read(one) == len(in_bucket) < len(files)
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*url_bucket", plan), plan
 
 
 def test_packed_corpus_sink_roundtrip(spark, tmp_path):

@@ -531,3 +531,51 @@ def test_ivfpq_index_scan_is_partition_pruned(spark):
     n_cells_read = len([t for t in m.group(1).split(",")
                         if t.strip().rstrip(")").strip().isdigit()])
     assert 0 < n_cells_read < 16, m.group(1)
+
+
+def _stage_nodes(final_plan: str, anchor: str) -> list[str]:
+    """Node lines of the query stage that holds the first ``anchor`` node
+    of an adaptive final plan: the anchor's subtree, cut below each child
+    query stage (a stage boundary)."""
+    lines = final_plan.split("== Initial Plan ==")[0].splitlines()
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))  # noqa: E731
+    start = next(i for i, line in enumerate(lines) if anchor in line)
+    nodes, cut = [], None
+    for line in lines[start + 1:]:
+        d = depth(line)
+        if d <= depth(lines[start]):
+            break
+        if cut is not None and d > cut:
+            continue
+        cut = d if "QueryStage" in line else None
+        nodes.append(line.strip(" :+-"))
+    return nodes
+
+
+def test_dense_stage_runs_on_partition_count_tasks(spark):
+    """The dense stage (spine -> ffill window -> recurrence map) must run
+    on ``_partition_count`` tasks at every shuffle parallelism. At
+    shuffle.partitions >= 8 the recurrence's own url repartition is
+    dropped as redundant, so the stage keeps whatever url exchange the
+    spine carries; an ENSURE_REQUIREMENTS one is coalesced by AQE to ONE
+    task on report-sized inputs. (At the session's 4 partitions the
+    explicit exchange survives, which hid this.)"""
+    from pyspark.sql import functions as F
+
+    from trendmachine_spark.pipeline import daily_series
+    from trendmachine_spark.sources.captures import events_as_captures
+
+    base = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        report = daily_series(events_as_captures(spark, SF), fill=2, policy="closest")
+        parts = report.select(F.spark_partition_id().alias("p")).distinct().count()
+        assert parts > 1, "the dense stage ran as one task"
+        report.collect()
+        final = report._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", base)
+    stage = _stage_nodes(final, "MapInPandas")
+    assert any(n.startswith("Window [last(chaos") for n in stage), stage
+    coalesced = [n for n in stage if n.startswith("AQEShuffleRead coalesced")]
+    assert not coalesced, f"AQE coalesced the dense stage's input: {stage}"

@@ -18,8 +18,7 @@ Arrow/pandas machinery PER GROUP (one batch + one frame per url); the
 first r14 bucketed form cut the group count but (a) AQE coalesced the
 small-byte exchange to ONE task — Python compute is invisible to its
 byte-based advisory — and (b) still paid the per-group constant per
-bucket. Streaming fixes both: the explicit partition count on the url
-exchange can't be coalesced away, and each task processes its whole
+bucket. Streaming fixes the second, and each task processes its whole
 partition as a handful of large Arrow batches (per-BATCH overhead
 only), carrying the tiny recurrence state (active url/key, base,
 scale, x offset, last h) across batch boundaries. Bit-exactness does
@@ -27,7 +26,17 @@ not depend on where batches split: every element's formula sees the
 same base/scale/x regardless (pinned by the batch/partition-invariance
 tests). Measured, value-identical, sf0.1 / x10 best: per-url grouped
 map 0.96 / 3.77 s, bucketed grouped map 1.42 / 1.46 s, streaming
-0.43 / 0.95 s (tools/exp_recurrence_stream.py).
+0.43 / 0.95 s (OPTIMIZATION_r14.md:119-120).
+
+Parallelism comes from upstream, not from this operator's own
+``repartition(P, "url")``: when the child already reports
+``hashpartitioning(url, P)`` (the ffill window's exchange), Spark drops
+the explicit one from the physical plan, and if that inherited exchange
+is an ENSURE_REQUIREMENTS one, AQE coalesces it by bytes — to ONE task
+on report-sized inputs. ``spine.densify`` therefore puts the
+explicit-count url exchange on the spine's seed, which the window and
+this map inherit and AQE never coalesces; the repartition here only
+takes effect over a dense frame partitioned some other way.
 
 Within a run the curve is vectorized with numpy (the reference loops
 day-at-a-time in Python; we only pay Python per *run*).
@@ -51,11 +60,16 @@ def _param_table(sigparams) -> dict[str, tuple[float, float, float]]:
 
 
 def _partition_count(df: DataFrame) -> int:
-    """Scale-adaptive parallelism for the url exchange: the session's
-    shuffle parallelism (data-sized in bench/prod sessions), floor 8.
-    Explicit on purpose — an ENSURE_REQUIREMENTS exchange here gets
-    AQE-coalesced to ~1 task on byte estimates, serializing the Python
-    stage (measured: 1 task at sf0.1 AND x10 under the bench confs)."""
+    """Scale-adaptive parallelism for the url exchange of the dense
+    stage: the session's shuffle parallelism (data-sized in bench/prod
+    sessions), floor 8. It must reach the Python stage through an
+    explicit-count (REPARTITION_BY_NUM) exchange, which AQE never
+    coalesces: ``spine.densify`` puts that exchange on the spine's seed.
+    An ENSURE_REQUIREMENTS url exchange gets AQE-coalesced to ~1 task on
+    byte estimates, serializing the Python stage (measured: 1 task at
+    sf0.1 AND x10 under the bench confs), and once the child reports
+    ``hashpartitioning(url, n)`` with this same n, Spark drops the
+    explicit repartition in :func:`score_daily_series` as redundant."""
     try:
         target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # absent/non-integer setting or Connect quirk
@@ -152,7 +166,6 @@ def score_daily_series(dense: DataFrame, sigparams=None,
         list(dense.schema.fields)
         + [T.StructField("resilience", T.DoubleType()), T.StructField("fixity", T.DoubleType())]
     )
-    out_cols = [f.name for f in out_schema.fields]
     # Build the runner HERE (driver side) and capture the resulting
     # nested closure: cloudpickle ships `_make_runner.<locals>.run` by
     # value, whereas capturing the module-level _make_runner itself
@@ -171,10 +184,12 @@ def score_daily_series(dense: DataFrame, sigparams=None,
             res, st["res"] = run(spec, urls, "~", st["res"])
             content = pdf["content"].to_numpy(dtype=object)
             fix, st["fix"] = run(content, urls, "Unknown", st["fix"])
-            pdf = pdf.copy()
+            # the frame is fresh from Arrow: append the scores in place
+            # (columns then follow out_schema's order) instead of
+            # copying all of it
             pdf["resilience"] = res
             pdf["fixity"] = fix
-            yield pdf[out_cols]
+            yield pdf
 
     return (
         dense.repartition(nparts, "url")

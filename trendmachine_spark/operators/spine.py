@@ -16,6 +16,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from trendmachine_spark.operators.recurrence import _partition_count
+
 
 def resolve_as_of(daily: DataFrame, as_of: _dt.date | str | None) -> _dt.date:
     """Default as_of = the newest observed day across all urls."""
@@ -58,8 +60,19 @@ def densify(daily: DataFrame, filled: DataFrame | None, as_of: _dt.date) -> Data
         )
         observed = observed.unionByName(filled_full)
 
+    # The spine's seed carries an explicit-count url exchange: the min
+    # aggregate, the explode, the (broadcast) join, the ffill window and
+    # the recurrence all inherit it, so the whole dense stage runs on
+    # ``_partition_count`` tasks. AQE never coalesces a REPARTITION_BY_NUM
+    # exchange, whereas the aggregate's own ENSURE_REQUIREMENTS exchange
+    # over one row per url gets coalesced to a single task. The second
+    # repartition is a no-op under a broadcast join (same partitioning)
+    # and re-keys by url after a (url, day) sort-merge join.
+    nparts = _partition_count(daily)
     spine = (
-        daily.groupBy("url")
+        daily.select("url", "day")
+        .repartition(nparts, "url")
+        .groupBy("url")
         .agg(F.min("day").alias("_first"))
         .select(
             "url",
@@ -68,16 +81,18 @@ def densify(daily: DataFrame, filled: DataFrame | None, as_of: _dt.date) -> Data
             ).alias("day"),
         )
     )
-    dense = (
-        spine.join(observed, ["url", "day"], "left")
-        .withColumn("day_str", F.coalesce("day_str", F.date_format("day", "yyyy-MM-dd")))
-        .withColumn("specimen", F.coalesce("specimen", F.lit("~")))
-        .withColumn("datetime", F.coalesce("datetime", F.lit("~")))
-        .withColumn("digest", F.coalesce("digest", F.lit("~")))
-        .withColumn("content", F.coalesce("content", F.lit("Unknown")))
+    joined = spine.join(observed, ["url", "day"], "left").repartition(nparts, "url")
+    defaults = {
+        "day_str": F.date_format("day", "yyyy-MM-dd"),
+        "specimen": F.lit("~"),
+        "datetime": F.lit("~"),
+        "digest": F.lit("~"),
+        "content": F.lit("Unknown"),
+        **{c: F.lit(0) for c in ("_2xx", "_3xx", "_4xx", "_5xx", "all")},
+    }
+    dense = joined.select(
+        *[F.coalesce(c, defaults[c]).alias(c) if c in defaults else c for c in joined.columns]
     )
-    for c in ("_2xx", "_3xx", "_4xx", "_5xx", "all"):
-        dense = dense.withColumn(c, F.coalesce(c, F.lit(0)))
 
     # O33 — chaos forward-fill: a null-based running last() reproduces
     # the reference's falsy check. NB equivalence does NOT require
@@ -89,9 +104,10 @@ def densify(daily: DataFrame, filled: DataFrame | None, as_of: _dt.date) -> Data
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    dense = (
-        dense.withColumn("chaos", F.coalesce(F.last("chaos", ignorenulls=True).over(wff), F.lit(0.0)))
-        .withColumn("chaosn", F.coalesce(F.last("chaosn", ignorenulls=True).over(wff), F.lit(0.0)))
-        .withColumn("filled", (F.col("specimen") != "~") & (F.col("all") == 0))
-    )
-    return dense
+    ffill = {c: F.coalesce(F.last(c, ignorenulls=True).over(wff), F.lit(0.0))
+             for c in ("chaos", "chaosn")}
+    # filled is its own projection: inside the window select, Spark
+    # would compute it below the Window, a different plan for no gain
+    return dense.select(
+        *[ffill[c].alias(c) if c in ffill else c for c in dense.columns]
+    ).withColumn("filled", (F.col("specimen") != "~") & (F.col("all") == 0))

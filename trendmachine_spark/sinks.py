@@ -9,36 +9,58 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_daily_report(report: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist the scored daily report partitioned by month.
+#: url hash buckets of the report layout (the sink, the refresh store
+#: and per-URL reads share it)
+ROLLUP_BUCKETS = 32
 
-    Month-level partitioning keeps directory counts sane (urls can be
-    millions — never partition by url) while giving date-range queries
-    partition pruning; url-level locality comes from sorting within
-    files, not directories.
+
+def _url_bucket(url="url"):
+    # murmur3 with Spark's fixed seed — stable across sessions, so a
+    # url always lands in the same bucket partition
+    return F.pmod(F.hash(url), F.lit(ROLLUP_BUCKETS))
+
+
+def write_daily_report(report: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Persist a url-closed per-url table (the scored daily report, or a
+    store's rollup) partitioned by ``url_bucket``, a stable hash of the
+    url into ``ROLLUP_BUCKETS`` directories.
+
+    A one-URL read opens only its bucket's files (:func:`read_report_urls`),
+    and a refresh rewrites only touched buckets (:func:`refresh_store`).
+    Never partition by url itself: urls can be millions of directories.
+
+    The write adds no exchange. The report arrives hash-partitioned by
+    url into ``_partition_count`` (>= 8) tasks, and because
+    ``pmod(hash, 32) mod 8 == pmod(hash, 8)``, each bucket of a report
+    built at 8 or 32 partitions sits whole in one task: at most
+    ``ROLLUP_BUCKETS`` files, each sorted by (url, Day). At other
+    partition counts a task writes one file per bucket it holds.
     """
     (
-        report.withColumn("month", F.substring("Day", 1, 7))
-        .repartition("month")
-        .sortWithinPartitions("url", "Day")
+        report.withColumn("url_bucket", _url_bucket())
+        .sortWithinPartitions("url_bucket", "url", "Day")
         .write.mode(mode)
-        .partitionBy("month")
+        .partitionBy("url_bucket")
         .parquet(path)
     )
 
 
 def read_daily_report(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Everything :func:`write_daily_report` wrote, without ``url_bucket``."""
+    return spark.read.parquet(path).drop("url_bucket")
 
 
-#: default bucket count for the materialized rollup store
-ROLLUP_BUCKETS = 32
-
-
-def _url_bucket(n_buckets: int):
-    # murmur3 with Spark's fixed seed — stable across sessions, so a
-    # url always lands in the same bucket partition
-    return F.pmod(F.hash("url"), F.lit(n_buckets))
+def read_report_urls(spark: SparkSession, path: str, urls) -> DataFrame:
+    """The rows of ``urls`` only. The bucket predicate prunes the scan to
+    those urls' bucket directories (a partition filter over literals, no
+    extra job); the url predicate selects the rows within them."""
+    urls = list(urls)
+    return (
+        spark.read.parquet(path)
+        .filter(F.col("url_bucket").isin([_url_bucket(F.lit(u)) for u in urls])
+                & F.col("url").isin(urls))
+        .drop("url_bucket")
+    )
 
 
 def _rollup_transform(caps: DataFrame) -> DataFrame:
@@ -93,10 +115,11 @@ def _log_batch(spark: SparkSession, store_dir: str, batch_id: str) -> None:
 
 
 def init_store(captures: DataFrame, store_dir: str, transform=_rollup_transform,
-               n_buckets: int = ROLLUP_BUCKETS, meta: dict | None = None) -> None:
+               meta: dict | None = None) -> None:
     """Materialize any URL-CLOSED transform of the capture stream as an
     incrementally-refreshable store: raw captures AND the transform's
-    output, both partitioned by a stable url hash bucket.
+    output, both partitioned by a stable url hash bucket (the output in
+    :func:`write_daily_report`'s layout).
 
     ``transform`` must be url-closed — its output for a url depends
     only on that url's captures (the engine's scale axis; true of the
@@ -111,20 +134,15 @@ def init_store(captures: DataFrame, store_dir: str, transform=_rollup_transform,
     the bucket, not the (url, day) — recomputing a bucket from its
     complete capture history is the correctness-preserving unit.
     """
-    b = _url_bucket(n_buckets)
-    captures.withColumn("url_bucket", b).write.mode("overwrite").partitionBy(
+    captures.withColumn("url_bucket", _url_bucket()).write.mode("overwrite").partitionBy(
         "url_bucket"
     ).parquet(store_dir + "/captures")
-    out = transform(captures)
-    out.withColumn("url_bucket", b).write.mode("overwrite").partitionBy(
-        "url_bucket"
-    ).parquet(store_dir + "/output")
+    write_daily_report(transform(captures), store_dir + "/output")
     _write_meta(captures.sparkSession, store_dir, meta or {})
 
 
 def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame,
-                  transform=_rollup_transform,
-                  n_buckets: int = ROLLUP_BUCKETS, meta: dict | None = None,
+                  transform=_rollup_transform, meta: dict | None = None,
                   batch_id: str | None = None) -> list[int]:
     """Incremental refresh: append the ingest batch to the captures
     store, then recompute and dynamic-partition-overwrite ONLY the
@@ -132,7 +150,7 @@ def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame
     bucket ids.
 
     The touched-bucket list is collected to the driver — at most
-    ``n_buckets`` ints, by construction — and drives BOTH the pruned
+    ``ROLLUP_BUCKETS`` ints, by construction — and drives BOTH the pruned
     captures read (`url_bucket IN (...)` prunes at the directory level)
     and the dynamic overwrite (untouched bucket partitions are left
     byte-identical on disk). Equivalence with a full rebuild is pinned
@@ -171,8 +189,7 @@ def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame
     meta_changed = (stored_meta != meta) if meta else (
         stored_meta is not None and stored_meta != meta
     )
-    b = _url_bucket(n_buckets)
-    delta = delta_captures.withColumn("url_bucket", b)
+    delta = delta_captures.withColumn("url_bucket", _url_bucket())
     if batch_id is None or batch_id not in _applied_batches(spark, store_dir):
         delta.write.mode("append").partitionBy("url_bucket").parquet(
             store_dir + "/captures"
@@ -180,7 +197,7 @@ def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame
         if batch_id is not None:
             _log_batch(spark, store_dir, batch_id)
     if meta_changed:
-        buckets = list(range(n_buckets))
+        buckets = list(range(ROLLUP_BUCKETS))
     else:
         buckets = sorted(
             r[0] for r in delta.select("url_bucket").distinct().collect()
@@ -191,13 +208,10 @@ def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame
         .drop("url_bucket")
         .dropDuplicates(["url", "seq", "ts"])
     )
-    out = transform(caps).withColumn("url_bucket", b)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        out.write.mode("overwrite").partitionBy("url_bucket").parquet(
-            store_dir + "/output"
-        )
+        write_daily_report(transform(caps), store_dir + "/output")
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     if meta_changed:
@@ -206,18 +220,17 @@ def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame
 
 
 def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    return spark.read.parquet(store_dir + "/output").drop("url_bucket")
+    return read_daily_report(spark, store_dir + "/output")
 
 
 #: rollup-flavored aliases (the original store API)
-def init_rollup_store(captures, store_dir, n_buckets=ROLLUP_BUCKETS):
-    init_store(captures, store_dir, _rollup_transform, n_buckets)
+def init_rollup_store(captures, store_dir):
+    init_store(captures, store_dir, _rollup_transform)
 
 
-def refresh_rollup_store(spark, store_dir, delta_captures, n_buckets=ROLLUP_BUCKETS,
-                         batch_id=None):
+def refresh_rollup_store(spark, store_dir, delta_captures, batch_id=None):
     return refresh_store(spark, store_dir, delta_captures, _rollup_transform,
-                         n_buckets, batch_id=batch_id)
+                         batch_id=batch_id)
 
 
 read_rollup_store = read_store
@@ -229,15 +242,14 @@ read_rollup_store = read_store
 #: (the natural daily usage) triggers a full-bucket recompute so spines
 #: in untouched buckets are extended too (refresh ≡ rebuild holds for
 #: advancing horizons, pinned by tests/test_rollup_store.py).
-def init_report_store(captures, store_dir, as_of, n_buckets=ROLLUP_BUCKETS):
-    init_store(captures, store_dir, report_transform(as_of), n_buckets,
+def init_report_store(captures, store_dir, as_of):
+    init_store(captures, store_dir, report_transform(as_of),
                meta={"as_of": str(as_of)})
 
 
-def refresh_report_store(spark, store_dir, delta_captures, as_of,
-                         n_buckets=ROLLUP_BUCKETS, batch_id=None):
+def refresh_report_store(spark, store_dir, delta_captures, as_of, batch_id=None):
     return refresh_store(
-        spark, store_dir, delta_captures, report_transform(as_of), n_buckets,
+        spark, store_dir, delta_captures, report_transform(as_of),
         meta={"as_of": str(as_of)}, batch_id=batch_id
     )
 
