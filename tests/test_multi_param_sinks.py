@@ -54,11 +54,9 @@ def test_multi_param_default_matches_single(spark):
     )
 
 
-def _initial_exchanges(plan: str) -> int:
-    """Shuffle exchanges in an adaptive plan's initial tree. (The final
-    tree depends on timing: AQE may turn a sort-merge join into a
-    broadcast join before or after the join's exchanges ran.)"""
-    tree = plan.split("== Initial Plan ==")[-1].split("\n\n")[0]
+def _exchanges(plan: str) -> int:
+    """Shuffle exchanges in an adaptive plan's final tree."""
+    tree = plan.split("== Initial Plan ==")[0]
     return len(re.findall(r"\bExchange\b", tree))
 
 
@@ -75,30 +73,56 @@ def _files_read(df) -> int:
 
 
 def test_report_sink_roundtrip(spark, tmp_path):
-    """The url-bucket layout: rows round-trip, at most ROLLUP_BUCKETS
-    files, a one-URL read opens only its bucket's files, and the write
-    adds no exchange to the report's plan."""
-    caps = captures_from_fixture(spark, FIXTURE_LINES_A, url="u0")
-    for i in range(1, 12):
-        caps = caps.unionByName(captures_from_fixture(spark, FIXTURE_LINES_A, url=f"u{i}"))
-    report = daily_series(caps, fill=0, as_of="2020-01-05")
-    want = sorted(map(tuple, report.collect()))
-    path = str(tmp_path / "report")
-    write_daily_report(report, path)
-    # the write's plan (the latest SQL execution) has exactly the
-    # report's exchanges: no month or bucket reshuffle
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    write = execs.apply(execs.size() - 1).physicalPlanDescription()
+    """The url-bucket layout: rows round-trip, a one-URL read opens only
+    its bucket's files, and the write adds no exchange to the report's
+    plan. The session's P = 4 url partitions divide ROLLUP_BUCKETS, so
+    each bucket sits whole in one task: at most ROLLUP_BUCKETS files."""
+    _check_report_sink(spark, tmp_path, None)
+
+
+def test_report_sink_roundtrip_partitions_not_dividing_buckets(spark, tmp_path):
+    """At P = 12 url partitions (which does not divide 32) the layout
+    still round-trips without an exchange, within lcm(12, 32) = 96 files."""
+    _check_report_sink(spark, tmp_path, "12")
+
+
+def _check_report_sink(spark, tmp_path, partitions):
+    """The file count is at most lcm(P, ROLLUP_BUCKETS) for the report's
+    P url partitions."""
+    import math
+
+    from trendmachine_spark.operators.recurrence import _partition_count
+
+    base = spark.conf.get("spark.sql.shuffle.partitions")
+    if partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    try:
+        caps = captures_from_fixture(spark, FIXTURE_LINES_A, url="u0")
+        for i in range(1, 12):
+            caps = caps.unionByName(captures_from_fixture(spark, FIXTURE_LINES_A, url=f"u{i}"))
+        report = daily_series(caps, fill=0, as_of="2020-01-05")
+        nparts = _partition_count(report)
+        want = sorted(map(tuple, report.collect()))
+        path = str(tmp_path / "report")
+        write_daily_report(report, path)
+        # the write's plan (the latest SQL execution) has exactly the
+        # report's exchanges: no month or bucket reshuffle
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        write = execs.apply(execs.size() - 1).physicalPlanDescription()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", base)
     assert "InsertIntoHadoopFsRelationCommand" in write
-    assert _initial_exchanges(write) == _initial_exchanges(
+    assert _exchanges(write) == _exchanges(
         report._jdf.queryExecution().executedPlan().toString())
 
     back = read_daily_report(spark, path)
     assert back.columns == report.columns
     assert sorted(map(tuple, back.collect())) == want
     files = [str(f) for f in (tmp_path / "report").rglob("*.parquet")]
-    assert 1 < len(files) <= ROLLUP_BUCKETS
+    assert 1 < len(files) <= math.lcm(nparts, ROLLUP_BUCKETS)
+    if partitions is None:
+        assert ROLLUP_BUCKETS % nparts == 0 and len(files) <= ROLLUP_BUCKETS
 
     # a one-URL read scans only its bucket's directory
     bucket = spark.range(1).select(_url_bucket(F.lit("u3"))).first()[0]

@@ -553,11 +553,11 @@ def _stage_nodes(final_plan: str, anchor: str) -> list[str]:
 
 
 def test_dense_stage_runs_on_partition_count_tasks(spark):
-    """The dense stage (spine -> ffill window -> recurrence map) must run
-    on ``_partition_count`` tasks at every shuffle parallelism. At
+    """The dense stage (spine window -> recurrence map) must run on
+    ``_partition_count`` tasks at every shuffle parallelism. At
     shuffle.partitions >= 8 the recurrence's own url repartition is
-    dropped as redundant, so the stage keeps whatever url exchange the
-    spine carries; an ENSURE_REQUIREMENTS one is coalesced by AQE to ONE
+    dropped as redundant, so the stage keeps whatever url exchange it
+    inherits; an ENSURE_REQUIREMENTS one is coalesced by AQE to ONE
     task on report-sized inputs. (At the session's 4 partitions the
     explicit exchange survives, which hid this.)"""
     from pyspark.sql import functions as F
@@ -579,3 +579,29 @@ def test_dense_stage_runs_on_partition_count_tasks(spark):
     assert any(n.startswith("Window [last(chaos") for n in stage), stage
     coalesced = [n for n in stage if n.startswith("AQEShuffleRead coalesced")]
     assert not coalesced, f"AQE coalesced the dense stage's input: {stage}"
+
+
+def test_url_exchange_skipped_for_few_literal_urls(spark):
+    """The capture -> report stage takes its explicit-count url exchange
+    only when the captures may hold at least that many urls: a build
+    filtered to fewer url literals (a one-URL dashboard) would leave
+    the surplus tasks empty, each still starting a Python worker."""
+    from pyspark.sql import functions as F
+
+    from trendmachine_spark.pipeline import _url_literal_count, daily_series
+    from trendmachine_spark.sources.captures import events_as_captures
+
+    caps = events_as_captures(spark, SF)
+    urls = [r["url"] for r in caps.select("url").distinct().limit(3).collect()]
+    one = caps.filter(F.col("url") == urls[0])
+    assert _url_literal_count(caps) is None
+    assert _url_literal_count(one) == 1
+    assert _url_literal_count(caps.filter(F.col("url").isin(urls))) == 3
+    assert _url_literal_count(caps.filter(F.col("status") == "200")) is None
+
+    def forced(df):
+        plan = daily_series(df)._jdf.queryExecution().executedPlan()
+        return "REPARTITION_BY_NUM" in plan.toString()
+
+    assert forced(caps)
+    assert not forced(one)

@@ -30,13 +30,13 @@ map 0.96 / 3.77 s, bucketed grouped map 1.42 / 1.46 s, streaming
 
 Parallelism comes from upstream, not from this operator's own
 ``repartition(P, "url")``: when the child already reports
-``hashpartitioning(url, P)`` (the ffill window's exchange), Spark drops
-the explicit one from the physical plan, and if that inherited exchange
-is an ENSURE_REQUIREMENTS one, AQE coalesces it by bytes — to ONE task
-on report-sized inputs. ``spine.densify`` therefore puts the
-explicit-count url exchange on the spine's seed, which the window and
-this map inherit and AQE never coalesces; the repartition here only
-takes effect over a dense frame partitioned some other way.
+``hashpartitioning(url, P)``, Spark drops the explicit one from the
+physical plan, and if the inherited exchange is an ENSURE_REQUIREMENTS
+one, AQE coalesces it by bytes — to ONE task on report-sized inputs.
+``pipeline.dense_daily`` therefore puts the explicit-count url exchange
+on the captures, which every url-keyed operator down to this map
+inherits and AQE never coalesces; the repartition here only takes
+effect over a dense frame partitioned some other way.
 
 Within a run the curve is vectorized with numpy (the reference loops
 day-at-a-time in Python; we only pay Python per *run*).
@@ -60,21 +60,23 @@ def _param_table(sigparams) -> dict[str, tuple[float, float, float]]:
 
 
 def _partition_count(df: DataFrame) -> int:
-    """Scale-adaptive parallelism for the url exchange of the dense
-    stage: the session's shuffle parallelism (data-sized in bench/prod
-    sessions), floor 8. It must reach the Python stage through an
+    """Scale-adaptive parallelism for the url exchange of the capture ->
+    report stage: the session's shuffle parallelism (data-sized in
+    bench/prod sessions). It reaches the Python stage only through an
     explicit-count (REPARTITION_BY_NUM) exchange, which AQE never
-    coalesces: ``spine.densify`` puts that exchange on the spine's seed.
-    An ENSURE_REQUIREMENTS url exchange gets AQE-coalesced to ~1 task on
-    byte estimates, serializing the Python stage (measured: 1 task at
-    sf0.1 AND x10 under the bench confs), and once the child reports
-    ``hashpartitioning(url, n)`` with this same n, Spark drops the
-    explicit repartition in :func:`score_daily_series` as redundant."""
+    coalesces: ``pipeline.dense_daily`` puts that exchange on the
+    captures. An ENSURE_REQUIREMENTS url exchange gets AQE-coalesced to
+    ~1 task on byte estimates, serializing the Python stage (measured:
+    1 task at sf0.1 AND x10 under the bench confs). No floor: at the
+    session's own count, the repartition in :func:`score_daily_series`
+    is redundant over any url exchange, explicit or planned by Spark, so
+    Spark drops it, and a one-URL build that skips the explicit exchange
+    (``pipeline._url_parallel``) gains none here."""
     try:
         target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # absent/non-integer setting or Connect quirk
         target = 8
-    return max(target, 8)
+    return target
 
 
 def _make_runner(params: dict):

@@ -4,9 +4,10 @@ Covers SURVEY.md §2 operators O31 (date spine), O33 (chaos ffill), O40
 (union of observed + filled days).
 
 The reference builds the spine as ``pd.date_range(first_day, today)``
-with dict point-lookups (main.py:199-207). Spark-first: per-url
-``sequence()`` + ``explode`` left-joined onto the daily table. ``today``
-becomes an explicit ``as_of`` date so results are deterministic.
+with dict point-lookups (main.py:199-207). Spark-first: one url window
+over the daily table, whose rows each ``explode`` a ``sequence()`` over
+the gap up to the next observed day. ``today`` becomes an explicit
+``as_of`` date so results are deterministic.
 """
 
 from __future__ import annotations
@@ -15,8 +16,6 @@ import datetime as _dt
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from trendmachine_spark.operators.recurrence import _partition_count
 
 
 def resolve_as_of(daily: DataFrame, as_of: _dt.date | str | None) -> _dt.date:
@@ -34,9 +33,11 @@ def densify(daily: DataFrame, filled: DataFrame | None, as_of: _dt.date) -> Data
 
     ``filled`` carries (url, day, specimen) synthesized by the gap
     filler; its rows only ever land on days absent from ``daily``
-    (interior gap days), so a left join against the union is safe.
-    Missing days default to the DailyRecord defaults (archive.py:4-20):
-    specimen '~', digest '~', datetime '~', content 'Unknown', counts 0.
+    (interior gap days), so the union still starts each url's series
+    on its first observed day and holds each day at most once. Days
+    after ``as_of`` are dropped. Missing days default to the DailyRecord
+    defaults (archive.py:4-20): specimen '~', digest '~', datetime '~',
+    content 'Unknown', counts 0.
     Chaos values forward-fill from the previous observed day
     (main.py:202-207); before any observed day they are 0.0.
     """
@@ -60,28 +61,37 @@ def densify(daily: DataFrame, filled: DataFrame | None, as_of: _dt.date) -> Data
         )
         observed = observed.unionByName(filled_full)
 
-    # The spine's seed carries an explicit-count url exchange: the min
-    # aggregate, the explode, the (broadcast) join, the ffill window and
-    # the recurrence all inherit it, so the whole dense stage runs on
-    # ``_partition_count`` tasks. AQE never coalesces a REPARTITION_BY_NUM
-    # exchange, whereas the aggregate's own ENSURE_REQUIREMENTS exchange
-    # over one row per url gets coalesced to a single task. The second
-    # repartition is a no-op under a broadcast join (same partitioning)
-    # and re-keys by url after a (url, day) sort-merge join.
-    nparts = _partition_count(daily)
-    spine = (
-        daily.select("url", "day")
-        .repartition(nparts, "url")
-        .groupBy("url")
-        .agg(F.min("day").alias("_first"))
-        .select(
-            "url",
-            F.explode(
-                F.sequence(F.col("_first"), F.lit(as_of), F.expr("interval 1 day"))
-            ).alias("day"),
-        )
+    # One url window over the observed rows builds the spine: each
+    # observed day emits itself plus the gap days up to the day before
+    # the next observed day (as_of for the last one), and hands them its
+    # forward-filled chaos. The only sort and the only url requirement
+    # are then over the daily rows, not the ~16x denser spine, and no
+    # (url, day) join needs its own exchanges at scale.
+    #
+    # O33 — chaos forward-fill: a null-based running last() reproduces
+    # the reference's falsy check. NB equivalence does NOT require
+    # observed chaos > 0: an all-revisit url can close a day at 0.0, but
+    # then the reference's falsy forward-fill also propagates 0.0, so
+    # carrying the explicit 0.0 forward yields the same series. A gap
+    # day's value is that of the observed day before it, as in a fill
+    # over the dense rows (whose gap rows are all null).
+    w = Window.partitionBy("url").orderBy("day")
+    wff = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ffill = {c: F.coalesce(F.last(c, ignorenulls=True).over(wff), F.lit(0.0))
+             for c in ("chaos", "chaosn")}
+    # greatest(): a repeated (url, day) row emits just itself instead of
+    # a descending sequence, which raises
+    last_day = F.coalesce(F.date_sub(F.lead("day").over(w), 1), F.lit(as_of))
+    runs = observed.filter(F.col("day") <= F.lit(as_of)).select(
+        *[ffill[c].alias(c) if c in ffill else c for c in observed.columns],
+        F.col("day").alias("_obs"),
+        F.sequence("day", F.greatest("day", last_day), F.expr("interval 1 day")).alias("_days"),
     )
-    joined = spine.join(observed, ["url", "day"], "left").repartition(nparts, "url")
+    days = runs.select(
+        *[c for c in runs.columns if c not in ("day", "_days")],
+        F.explode("_days").alias("day"),
+    )
+    observed_day = F.col("day") == F.col("_obs")
     defaults = {
         "day_str": F.date_format("day", "yyyy-MM-dd"),
         "specimen": F.lit("~"),
@@ -90,24 +100,8 @@ def densify(daily: DataFrame, filled: DataFrame | None, as_of: _dt.date) -> Data
         "content": F.lit("Unknown"),
         **{c: F.lit(0) for c in ("_2xx", "_3xx", "_4xx", "_5xx", "all")},
     }
-    dense = joined.select(
-        *[F.coalesce(c, defaults[c]).alias(c) if c in defaults else c for c in joined.columns]
-    )
-
-    # O33 — chaos forward-fill: a null-based running last() reproduces
-    # the reference's falsy check. NB equivalence does NOT require
-    # observed chaos > 0: an all-revisit url can close a day at 0.0, but
-    # then the reference's falsy forward-fill also propagates 0.0, so
-    # carrying the explicit 0.0 forward yields the same series.
-    wff = (
-        Window.partitionBy("url")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ffill = {c: F.coalesce(F.last(c, ignorenulls=True).over(wff), F.lit(0.0))
-             for c in ("chaos", "chaosn")}
-    # filled is its own projection: inside the window select, Spark
-    # would compute it below the Window, a different plan for no gain
-    return dense.select(
-        *[ffill[c].alias(c) if c in ffill else c for c in dense.columns]
+    cols = ["url", "day"] + [c for c in observed.columns if c not in ("url", "day")]
+    return days.select(
+        *[F.coalesce(F.when(observed_day, F.col(c)), defaults[c]).alias(c)
+          if c in defaults else c for c in cols]
     ).withColumn("filled", (F.col("specimen") != "~") & (F.col("all") == 0))

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from trendmachine_spark.functions.scalars import urim
 from trendmachine_spark.operators.fill import gap_fill
 from trendmachine_spark.operators.normalize import normalize_captures
-from trendmachine_spark.operators.recurrence import score_daily_series
+from trendmachine_spark.operators.recurrence import _partition_count, score_daily_series
 from trendmachine_spark.operators.rollup import daily_rollup
 from trendmachine_spark.operators.spine import densify, resolve_as_of
 
@@ -29,9 +29,57 @@ def dense_daily(
     as_of: _dt.date | str | None = None,
 ) -> DataFrame:
     """captures -> dense (gap-free) per-url daily series, unscored."""
-    daily = daily_rollup(normalize_captures(captures))
+    daily = daily_rollup(normalize_captures(_url_parallel(captures)))
     filled = gap_fill(daily, fill, policy) if fill != 0 else None
     return densify(daily, filled, resolve_as_of(daily, as_of))
+
+
+def _url_parallel(captures: DataFrame) -> DataFrame:
+    """Hash-partition the captures by url into ``_partition_count``
+    tasks through one explicit-count exchange, which AQE never
+    coalesces. Every operator after it is keyed by url first (the
+    revisit window, the rollup, the gap filler, the spine window, the
+    recurrence map, the url-bucket sink), so the whole capture -> report
+    stage inherits it and runs url-parallel with no other exchange.
+
+    Left out when the plan filters ``url`` to fewer literals than that
+    count (a one-URL dashboard build): the surplus tasks would be empty
+    yet each still start a Python worker for the recurrence map, and
+    AQE sizes so small an input to one task anyway.
+    """
+    n = _partition_count(captures)
+    bound = _url_literal_count(captures)
+    if bound is not None and bound < n:
+        return captures
+    return captures.repartition(n, "url")
+
+
+def _url_literal_count(df: DataFrame) -> int | None:
+    """How many urls ``df`` can hold when its optimized plan filters
+    ``url`` to literals (``url = 'x'``, ``url IN (...)``), else None
+    (also where the plan is out of reach, e.g. over Spark Connect)."""
+    try:
+        constraints = df._jdf.queryExecution().optimizedPlan().constraints()
+        it = constraints.toSeq().iterator()
+    except Exception:
+        return None
+    best = None
+    while it.hasNext():
+        e = it.next()
+        refs = e.references()
+        if refs.size() != 1 or refs.head().name() != "url":
+            continue
+        kind = e.getClass().getSimpleName()
+        if kind == "EqualTo" and (e.left().foldable() or e.right().foldable()):
+            n = 1
+        elif kind == "In":
+            n = e.list().size()
+        elif kind == "InSet":
+            n = e.hset().size()
+        else:
+            continue
+        best = n if best is None else min(best, n)
+    return best
 
 
 def require_captures(captures: DataFrame) -> DataFrame:
