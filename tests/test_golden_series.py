@@ -6,6 +6,7 @@ import pytest
 
 from tests.conftest import FIXTURE_LINES_A, FIXTURE_LINES_B
 from trendmachine_spark.functions.scalars import ymd, ymd_py
+from trendmachine_spark.operators import dashboard
 from trendmachine_spark.operators.transitions import transition_matrix
 from trendmachine_spark.pipeline import daily_series, dense_daily
 from trendmachine_spark.sources.captures import captures_from_fixture
@@ -83,6 +84,59 @@ def test_transition_matrix_variant_a(spark):
     assert cells[("2xx", "2xx")] == 1  # 01-01 -> 01-02
     assert cells[("2xx", "5xx")] == 1  # 01-02 -> 01-04 (the '~' day is skipped)
     assert sum(cells.values()) == 2
+
+
+def test_dashboard_panes_variant_a(spark):
+    """FIXTURES.md §3.4 dashboard goldens, each pane over the scored
+    variant A report (spine to 2020-01-05: three observed days, the 01-03
+    and 01-05 gaps unfilled), plus the §3.2 last/previous scores."""
+    report = daily_series(captures_from_fixture(spark, FIXTURE_LINES_A), as_of="2020-01-05")
+
+    def rows(pane, *key):
+        return {tuple(r[k] for k in key): r for r in getattr(dashboard, pane)(report).collect()}
+
+    counts = ("2xx", "3xx", "4xx", "5xx", "All")
+    (month,) = rows("monthly_rollup", "Month").items()
+    assert month[0] == ("2020-01-15",)
+    assert tuple(month[1][c] for c in counts) == (3, 1, 1, 1, 6)
+    totals = rows("totals", "Status")
+    assert {s: r["Total"] for (s,), r in totals.items()} == dict(zip(counts, (3, 1, 1, 1, 6)))
+
+    summary = rows("summary_stats", "Status")
+    ok = summary[("2xx",)]
+    assert (ok["count"], ok["mean"], ok["min"], ok["max"]) == (2, 1.5, 1, 2)
+    assert ok["std"] == pytest.approx(0.707107, abs=1e-6)
+    for s in ("3xx", "4xx", "5xx"):  # one non-zero day: std 0, not NaN
+        assert (summary[(s,)]["count"], summary[(s,)]["std"]) == (1, 0.0), s
+    every = summary[("All",)]  # day totals 3, 2, 1
+    assert (every["count"], every["mean"], every["std"]) == (3, 2.0, 1.0)
+    assert (every["q1"], every["median"], every["q3"]) == (1.5, 2.0, 2.5)
+
+    specimens = {s: r["Days"] for (s,), r in rows("specimen_breakdown", "Specimen").items()}
+    assert specimens == {"Active": 3, "Filled": 0, "Missing": 2}
+    content = {c: r["Count"] for (c,), r in rows("content_value_counts", "Content").items()}
+    assert content == {"Changed": 2, "Unchanged": 1, "Unknown": 2}
+
+    (first_last,) = dashboard.first_last_capture(report).collect()
+    assert (first_last["first_day"], first_last["first_datetime"]) == ("2020-01-01", "20200101020000")
+    assert (first_last["last_day"], first_last["last_datetime"]) == ("2020-01-04", "20200104010000")
+
+    (head,) = dashboard.headline_metrics(report).collect()
+    assert (head["captures"], head["ok_ratio"]) == (6, 0.5)
+    assert (head["span_days"], head["gaps"], head["filled"], head["inactive_days"]) == (5, 2, 0, 1)
+    assert head["changed_ratio"] == pytest.approx(2 / 3)
+    assert head["last_resilience"] == pytest.approx(0.549510, abs=1e-6)
+    assert head["prev_resilience"] == pytest.approx(0.549523, abs=1e-6)
+    assert head["last_fixity"] == pytest.approx(0.517017, abs=1e-6)
+    assert head["last_chaos"] == pytest.approx(0.833333, abs=1e-6)
+    assert head["last_specimen"] == "~"
+
+    # a one-day series has no previous day: its previous resilience is 0.5
+    one_day = daily_series(captures_from_fixture(spark, FIXTURE_LINES_A[:3]), as_of="2020-01-01")
+    (head,) = dashboard.headline_metrics(one_day).collect()
+    assert head["span_days"] == 1
+    assert head["last_resilience"] == pytest.approx(0.523713, abs=1e-6)
+    assert head["prev_resilience"] == 0.5
 
 
 def test_ymd_goldens(spark):

@@ -605,3 +605,23 @@ def test_url_exchange_skipped_for_few_literal_urls(spark):
 
     assert forced(caps)
     assert not forced(one)
+
+
+@pytest.mark.parametrize("pane", ("monthly_rollup", "totals", "summary_stats",
+                                  "content_value_counts", "specimen_breakdown",
+                                  "first_last_capture", "headline_metrics"))
+def test_dashboard_pane_reads_report_once(spark, pane):
+    """A dashboard pane reads its report once: over a report that is not
+    persisted, the final plan holds exactly one recurrence MapInPandas
+    (a union or self-join of the report would run it once per branch),
+    and no pane sorts globally (no range-partitioning exchange)."""
+    from trendmachine_spark.operators import dashboard
+    from trendmachine_spark.pipeline import daily_series
+    from trendmachine_spark.sources.captures import events_as_captures
+
+    report = daily_series(events_as_captures(spark, SF), fill=2, policy="closest")
+    df = getattr(dashboard, pane)(report)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final
+    assert "rangepartitioning" not in final, final

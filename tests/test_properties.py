@@ -79,7 +79,7 @@ def test_transition_total(spark, series):
     dense = series.select(
         "url", F.to_date("Day").alias("day"), F.col("Specimen").alias("specimen")
     )
-    t = transition_matrix(dense, dense_cells=False)
+    t = transition_matrix(dense)
     totals = {r["url"]: r["s"] for r in t.groupBy("url").agg(F.sum("Count").alias("s")).collect()}
     valid = {
         r["url"]: r["n"]

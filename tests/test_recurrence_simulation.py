@@ -74,10 +74,11 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
     """r14: the recurrence is a streaming mapInPandas over
     repartition(P, url) + sortWithinPartitions(url, day), resuming the
     active run across Arrow batch boundaries. Pin: the output is
-    bit-identical for ANY partition count (url_buckets override:
-    1 = every url in one task, maximal boundary mixing; 64 = urls
-    mostly alone) and for ANY Arrow batch size (maxRecordsPerBatch=3
-    forces url runs AND key runs to straddle batch boundaries, so the
+    bit-identical for ANY partition count (the session's
+    shuffle.partitions, which sets the url exchange: 1 = every url in
+    one task, maximal boundary mixing; 64 = urls mostly alone) and for
+    ANY Arrow batch size (maxRecordsPerBatch=3 forces url runs AND key
+    runs to straddle batch boundaries, so the
     carried [base, scale, x_next, h_last] state is exercised on every
     path)."""
     rng = random.Random(seed)
@@ -101,17 +102,25 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
             (r["url"], r["day"], r["resilience"], r["fixity"])
             for r in df.collect()
         )
-    one = rows_of(score_daily_series(dense, url_buckets=1))
-    many = rows_of(score_daily_series(dense, url_buckets=64))
-    assert one == many  # bit-identical, not approx
-    # tiny Arrow batches: every run straddles batch boundaries
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
+
+    def scored(n):
+        # the url exchange takes the session's shuffle parallelism
+        spark.conf.set(part_key, str(n))
+        return rows_of(score_daily_series(dense))
+
+    part_key = "spark.sql.shuffle.partitions"
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev_parts, prev_batch = spark.conf.get(part_key), spark.conf.get(batch_key)
     try:
-        spark.conf.set(key, "3")
-        tiny = rows_of(score_daily_series(dense, url_buckets=1))
-        tiny_many = rows_of(score_daily_series(dense, url_buckets=5))
+        one = scored(1)
+        many = scored(64)
+        assert one == many  # bit-identical, not approx
+        # tiny Arrow batches: every run straddles batch boundaries
+        spark.conf.set(batch_key, "3")
+        tiny = scored(1)
+        tiny_many = scored(5)
     finally:
-        spark.conf.set(key, prev)
+        spark.conf.set(part_key, prev_parts)
+        spark.conf.set(batch_key, prev_batch)
     assert tiny == one  # bit-identical across batch splits
     assert tiny_many == one

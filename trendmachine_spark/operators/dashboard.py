@@ -1,13 +1,18 @@
-"""Dashboard derivations over the daily report table.
+"""Dashboard panes over the daily report table.
 
 Covers SURVEY.md §2 operators O11 (observed filter), O13 (zero->NULL),
 O23 (monthly rollup), O24 (summary stats), O25 (totals), O26 (value
 counts), O27 (specimen breakdown), O30 (headline metrics), O37 (melt),
 O41 (first/last) — reference main.py:383-405.
 
-All inputs are the report table produced by
-:func:`trendmachine_spark.pipeline.daily_series` (url + REPORT_COLUMNS).
-Everything here is built-in aggregations — no UDFs, fully codegen'd.
+Every input is a report: url + the REPORT_COLUMNS names. The product
+passes the scored table of :func:`trendmachine_spark.pipeline.daily_series`;
+the registry queries of O23-O27, O30 and O41 pass a
+:func:`trendmachine_spark.pipeline.report_view` of the shared rollup or
+dense series and check these same panes against their DuckDB oracles.
+Each pane reads its input once (no union or self-join of it), so over an
+unpersisted report it runs the report's recurrence once. Everything
+here is built-in aggregations — no UDFs, fully codegen'd.
 """
 
 from __future__ import annotations
@@ -18,6 +23,10 @@ from pyspark.sql import functions as F
 from trendmachine_spark.functions.scalars import ymd
 
 STATUS_COLS = ["2xx", "3xx", "4xx", "5xx", "All"]
+#: the status columns as (name, value) rows
+_STATUS_STACK = "stack({}, {})".format(
+    len(STATUS_COLS), ", ".join(f"'{c}', `{c}`" for c in STATUS_COLS)
+)
 
 
 def observed_days(report: DataFrame) -> DataFrame:
@@ -41,59 +50,51 @@ def totals(report: DataFrame) -> DataFrame:
     """O25 — per-url column totals over observed days, long form."""
     orig = observed_days(report)
     wide = orig.groupBy("url").agg(*[F.sum(c).alias(c) for c in STATUS_COLS])
-    stack = ", ".join(f"'{c}', `{c}`" for c in STATUS_COLS)
-    return wide.selectExpr("url", f"stack({len(STATUS_COLS)}, {stack}) as (Status, Total)")
+    return wide.selectExpr("url", f"{_STATUS_STACK} as (Status, Total)")
 
 
 def summary_stats(report: DataFrame) -> DataFrame:
-    """O24 — pandas-describe equivalents per status column over non-zero
-    days (zero counts become NULL first — O13), transposed to one row per
-    Status. std of a single observation is 0 (reference replaces NaN)."""
+    """O24 — pandas-describe equivalents per status column over its
+    non-zero days (zero counts are NULL — O13), one row per (url,
+    Status): one ``stack`` of the five columns, one aggregate. mean and
+    std come from integer count/sum/sum-of-squares with one float chain
+    each, so they do not depend on partition order and match the
+    registry oracle bit for bit; std of a single observation is 0 (the
+    reference replaces NaN)."""
     orig = observed_days(report)
-    pieces = []
-    for c in STATUS_COLS:
-        v = F.when(F.col(c) != 0, F.col(c)).otherwise(F.lit(None)).cast("double")
-        pieces.append(
-            orig.select("url", v.alias("v"))
-            .filter(F.col("v").isNotNull())
-            .groupBy("url")
-            .agg(
-                F.count("v").alias("count"),
-                F.avg("v").alias("mean"),
-                F.coalesce(F.stddev_samp("v"), F.lit(0.0)).alias("std"),
-                F.min("v").cast("long").alias("min"),
-                F.expr("percentile(v, 0.25)").alias("q1"),
-                F.expr("percentile(v, 0.5)").alias("median"),
-                F.expr("percentile(v, 0.75)").alias("q3"),
-                F.max("v").cast("long").alias("max"),
-            )
-            .withColumn("Status", F.lit(c))
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "url", "Status", "count", "mean", "std", "min", "q1", "median", "q3", "max"
+    v = orig.selectExpr("url", f"{_STATUS_STACK} as (Status, v)").filter(
+        F.col("v") != 0
+    )
+    n, s, ss = F.count("v"), F.sum("v"), F.sum(F.col("v") * F.col("v"))
+    return v.groupBy("url", "Status").agg(
+        n.alias("count"),
+        (s.cast("double") / n).alias("mean"),
+        F.when(
+            n > 1, F.sqrt((ss.cast("double") - s.cast("double") * s / n) / (n - 1))
+        ).otherwise(0.0).alias("std"),
+        F.min("v").alias("min"),
+        F.expr("percentile(v, 0.25)").alias("q1"),
+        F.expr("percentile(v, 0.5)").alias("median"),
+        F.expr("percentile(v, 0.75)").alias("q3"),
+        F.max("v").alias("max"),
     )
 
 
 def content_value_counts(report: DataFrame) -> DataFrame:
     """O26 — fixity breakdown: count of days per Content state."""
-    return (
-        report.groupBy("url", "Content")
-        .agg(F.count(F.lit(1)).alias("Count"))
-        .orderBy("url", "Content")
-    )
+    return report.groupBy("url", "Content").agg(F.count(F.lit(1)).alias("Count"))
 
 
 def specimen_breakdown(report: DataFrame) -> DataFrame:
-    """O27 — Active / Filled / Missing day counts per url."""
+    """O27 — Active / Filled / Missing day counts per url; Missing is
+    the rest of the spine (``Filled`` is specimen set and no count,
+    archive.py:43-45)."""
     agg = report.groupBy("url").agg(
         F.sum((F.col("All") != 0).cast("long")).alias("Active"),
         F.sum(F.col("Filled").cast("long")).alias("Filled"),
         F.count(F.lit(1)).alias("_n"),
     )
-    wide = agg.withColumn("Missing", F.col("_n") - F.col("Active") - F.col("Filled")).drop("_n")
+    wide = agg.withColumn("Missing", F.col("_n") - F.col("Active") - F.col("Filled"))
     return wide.selectExpr(
         "url", "stack(3, 'Active', Active, 'Filled', Filled, 'Missing', Missing) as (Specimen, Days)"
     )
@@ -110,58 +111,48 @@ def first_last_capture(report: DataFrame) -> DataFrame:
     """O41 — first and last observed capture day + datetime per url."""
     orig = observed_days(report)
     return orig.groupBy("url").agg(
-        F.min_by("Day", "Day").alias("first_day"),
+        F.min("Day").alias("first_day"),
         F.min_by("Datetime", "Day").alias("first_datetime"),
-        F.max_by("Day", "Day").alias("last_day"),
+        F.max("Day").alias("last_day"),
         F.max_by("Datetime", "Day").alias("last_datetime"),
     )
 
 
-def headline_metrics(report: DataFrame, as_of_day: str | None = None) -> DataFrame:
+def headline_metrics(report: DataFrame) -> DataFrame:
     """O30 — per-url scalar metrics (main.py:387-405).
 
     captures (mmct), ok ratio, span (days + humanized), inactivity days
-    vs ``as_of_day`` (default: each url's last spine day), gap/filled
-    counts, last/prev resilience, last fixity, changed ratio, last
-    chaos/chaosn.
+    from the last observed day to the url's last spine day, gap/filled
+    counts, changed ratio, and the last day's resilience, fixity,
+    chaos/chaosn and specimen, with the day before's resilience (0.5
+    for a one-day series). One ``lag`` window for that previous value,
+    then one ``groupBy(url)`` taking the last day's values by
+    ``max_by(…, Day)``.
     """
-    w = Window.partitionBy("url").orderBy("Day")
-    ranked = report.withColumn("_rn_desc", F.row_number().over(
-        Window.partitionBy("url").orderBy(F.col("Day").desc())
-    ))
-    last_rows = ranked.filter(F.col("_rn_desc") <= 2).groupBy("url").agg(
-        F.max_by("Resilience", F.lit(1) - F.col("_rn_desc")).alias("last_resilience"),
-        F.min_by("Resilience", F.lit(1) - F.col("_rn_desc")).alias("_maybe_prev"),
-        F.count(F.lit(1)).alias("_tail_n"),
-        F.max_by("Fixity", F.lit(1) - F.col("_rn_desc")).alias("last_fixity"),
-        F.max_by("Chaos", F.lit(1) - F.col("_rn_desc")).alias("last_chaos"),
-        F.max_by("Chaosn", F.lit(1) - F.col("_rn_desc")).alias("last_chaosn"),
-        F.max_by("Specimen", F.lit(1) - F.col("_rn_desc")).alias("last_specimen"),
-    ).withColumn(
-        "prev_resilience",
-        F.when(F.col("_tail_n") > 1, F.col("_maybe_prev")).otherwise(F.lit(0.5)),
-    ).drop("_maybe_prev", "_tail_n")
-
-    base = report.groupBy("url").agg(
+    prev = F.lag("Resilience", 1, 0.5).over(Window.partitionBy("url").orderBy("Day"))
+    agg = report.withColumn("_prev", prev).groupBy("url").agg(
         F.sum("All").alias("captures"),
         F.sum("2xx").alias("_ok"),
         F.count(F.lit(1)).alias("span_days"),
         F.max(F.when(F.col("All") != 0, F.col("Day"))).alias("last_observed_day"),
-        F.max("Day").alias("spine_end"),
+        F.max("Day").alias("_end"),
         F.sum((F.col("All") == 0).cast("long")).alias("gaps"),
         F.sum(F.col("Filled").cast("long")).alias("filled"),
         F.sum((F.col("Content") == "Changed").cast("long")).alias("changed_days"),
         F.sum((F.col("All") != 0).cast("long")).alias("active_days"),
+        *[F.max_by(c, "Day").alias(f"last_{c.lower()}")
+          for c in ("Resilience", "Fixity", "Chaos", "Chaosn", "Specimen")],
+        F.max_by("_prev", "Day").alias("prev_resilience"),
     )
-    end = F.lit(as_of_day) if as_of_day else F.col("spine_end")
-    out = (
-        base.withColumn("ok_ratio", F.col("_ok") / F.nullif(F.col("captures"), F.lit(0)))
-        .withColumn("span_human", ymd(F.col("span_days")))
-        .withColumn("inactive_days", F.datediff(end, F.col("last_observed_day")))
-        .withColumn(
-            "changed_ratio",
-            F.col("changed_days") / F.nullif(F.col("active_days"), F.lit(0)),
-        )
-        .drop("_ok", "spine_end")
+    return agg.select(
+        "url", "captures", "span_days", "last_observed_day", "gaps", "filled",
+        "changed_days", "active_days",
+        (F.col("_ok") / F.nullif(F.col("captures"), F.lit(0))).alias("ok_ratio"),
+        ymd(F.col("span_days")).alias("span_human"),
+        F.datediff(F.to_date("_end"), F.to_date("last_observed_day"))
+        .cast("long").alias("inactive_days"),
+        (F.col("changed_days") / F.nullif(F.col("active_days"), F.lit(0)))
+        .alias("changed_ratio"),
+        "last_resilience", "prev_resilience", "last_fixity", "last_chaos",
+        "last_chaosn", "last_specimen",
     )
-    return out.join(last_rows, "url")

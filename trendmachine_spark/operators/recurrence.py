@@ -135,8 +135,7 @@ def _make_runner(params: dict):
     return run
 
 
-def score_daily_series(dense: DataFrame, sigparams=None,
-                       url_buckets: int | None = None) -> DataFrame:
+def score_daily_series(dense: DataFrame, sigparams=None) -> DataFrame:
     """Add ``resilience`` and ``fixity`` columns to the dense daily series.
 
     ``dense`` must contain url, day, specimen, content (one row per
@@ -146,10 +145,10 @@ def score_daily_series(dense: DataFrame, sigparams=None,
     and scored by a mapInPandas that resumes runs across Arrow batch
     boundaries (module docstring).
 
-    ``url_buckets`` overrides the partition count of the url exchange
-    (default: the session's shuffle parallelism). Any value yields
-    bit-identical results — pinned by the partition/batch-invariance
-    test — it only trades parallelism against per-task constants.
+    The url exchange has the session's shuffle parallelism
+    (``_partition_count``). Any count yields bit-identical results —
+    pinned by the partition/batch-invariance test — it only trades
+    parallelism against per-task constants.
 
     The whole dense row goes through the map and comes back scored —
     no join-back, so the dense subtree appears once in the plan; with
@@ -162,7 +161,7 @@ def score_daily_series(dense: DataFrame, sigparams=None,
     """
     params = _param_table(sigparams)
     known = list(params)
-    nparts = url_buckets if url_buckets is not None else _partition_count(dense)
+    nparts = _partition_count(dense)
 
     out_schema = T.StructType(
         list(dense.schema.fields)

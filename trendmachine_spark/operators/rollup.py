@@ -40,38 +40,36 @@ def _priority(cls) -> Column:
     return expr
 
 
-def daily_rollup(normalized: DataFrame, with_chaos: bool = True) -> DataFrame:
+def daily_rollup(normalized: DataFrame) -> DataFrame:
     """normalized captures -> one row per (url, day).
 
     Output: url, day, day_str, _2xx, _3xx, _4xx, _5xx, all, specimen,
-    datetime, digest, content[, chaos, chaosn].
+    datetime, digest, content, chaos, chaosn.
     """
-    c = normalized
     worder = Window.partitionBy("url").orderBy("ts", "seq")
 
-    if with_chaos:
-        # O21 — run-change flag over the url's full capture stream.
-        chg = (
-            F.col("cls") != F.coalesce(F.lag("cls").over(worder), F.lit("~"))
-        ).cast("long")
-        rn = F.row_number().over(worder)
-        cum = Window.partitionBy("url").orderBy("ts", "seq").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
+    # O21 — run-change flag over the url's full capture stream.
+    chg = (
+        F.col("cls") != F.coalesce(F.lag("cls").over(worder), F.lit("~"))
+    ).cast("long")
+    rn = F.row_number().over(worder)
+    cum = Window.partitionBy("url").orderBy("ts", "seq").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    # SWS-1 transitions = the internal boundaries of SWS rows (see
+    # module docstring for the eviction off-by-one)
+    sliding = Window.partitionBy("url").orderBy("ts", "seq").rowsBetween(
+        -(SWS - 2), Window.currentRow
+    )
+    c = (
+        normalized.withColumn("_chg", chg)
+        .withColumn("_rn", rn)
+        .withColumn("_chaos", F.sum("_chg").over(cum) / F.col("_rn"))
+        .withColumn(
+            "_chaosn",
+            F.sum("_chg").over(sliding) / F.least(F.lit(SWS), F.col("_rn")),
         )
-        # SWS-1 transitions = the internal boundaries of SWS rows (see
-        # module docstring for the eviction off-by-one)
-        sliding = Window.partitionBy("url").orderBy("ts", "seq").rowsBetween(
-            -(SWS - 2), Window.currentRow
-        )
-        c = (
-            c.withColumn("_chg", chg)
-            .withColumn("_rn", rn)
-            .withColumn("_chaos", F.sum("_chg").over(cum) / F.col("_rn"))
-            .withColumn(
-                "_chaosn",
-                F.sum("_chg").over(sliding) / F.least(F.lit(SWS), F.col("_rn")),
-            )
-        )
+    )
 
     # Arg-max ordering key: highest priority, then earliest (ts, seq).
     # ts is a 14-digit string => numeric negation gives the reversal.
@@ -85,22 +83,18 @@ def daily_rollup(normalized: DataFrame, with_chaos: bool = True) -> DataFrame:
         F.col("digest").alias("digest"),
         F.col("cls").alias("specimen"),
     )
-    aggs = [
-        F.sum((F.col("cls") == "2xx").cast("long")).alias("_2xx"),
-        F.sum((F.col("cls") == "3xx").cast("long")).alias("_3xx"),
-        F.sum((F.col("cls") == "4xx").cast("long")).alias("_4xx"),
-        F.sum((F.col("cls") == "5xx").cast("long")).alias("_5xx"),
-        F.max_by(payload, order_key).alias("_spec"),
-    ]
-    if with_chaos:
-        close_key = F.struct(F.col("ts").cast("long").alias("ts"), F.col("seq").alias("seq"))
-        aggs += [
-            F.max_by("_chaos", close_key).alias("chaos"),
-            F.max_by("_chaosn", close_key).alias("chaosn"),
-        ]
+    close_key = F.struct(F.col("ts").cast("long").alias("ts"), F.col("seq").alias("seq"))
     d = (
         c.groupBy("url", "day", "day_str")
-        .agg(*aggs)
+        .agg(
+            F.sum((F.col("cls") == "2xx").cast("long")).alias("_2xx"),
+            F.sum((F.col("cls") == "3xx").cast("long")).alias("_3xx"),
+            F.sum((F.col("cls") == "4xx").cast("long")).alias("_4xx"),
+            F.sum((F.col("cls") == "5xx").cast("long")).alias("_5xx"),
+            F.max_by(payload, order_key).alias("_spec"),
+            F.max_by("_chaos", close_key).alias("chaos"),
+            F.max_by("_chaosn", close_key).alias("chaosn"),
+        )
         .withColumn("all", F.col("_2xx") + F.col("_3xx") + F.col("_4xx") + F.col("_5xx"))
         .withColumn("specimen", F.col("_spec.specimen"))
         .withColumn("datetime", F.col("_spec.datetime"))
@@ -115,8 +109,5 @@ def daily_rollup(normalized: DataFrame, with_chaos: bool = True) -> DataFrame:
         "content",
         F.when(F.col("digest") == prev_digest, "Unchanged").otherwise("Changed"),
     )
-    cols = ["url", "day", "day_str", "_2xx", "_3xx", "_4xx", "_5xx", "all",
-            "specimen", "datetime", "digest", "content"]
-    if with_chaos:
-        cols += ["chaos", "chaosn"]
-    return d.select(*cols)
+    return d.select("url", "day", "day_str", "_2xx", "_3xx", "_4xx", "_5xx", "all",
+                    "specimen", "datetime", "digest", "content", "chaos", "chaosn")

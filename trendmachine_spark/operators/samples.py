@@ -5,8 +5,7 @@ Covers SURVEY.md §2 operator O29 (reference samples.py:1-28).
 The reference counts *runs* of equal timestamp prefixes at 6
 granularities over a sorted stream; for sorted-per-url input that equals
 ``count(distinct prefix)`` per granularity, which is how the engine
-computes it — one aggregation, six countDistincts, no state. At 100 TB
-swap ``exact=False`` to use HyperLogLog sketches.
+computes it — one aggregation, six countDistincts, no state.
 """
 
 from __future__ import annotations
@@ -17,15 +16,14 @@ from pyspark.sql import functions as F
 from trendmachine_spark.params import PERIOD_PREFIX
 
 
-def periodic_samples(captures: DataFrame, exact: bool = True, per_url: bool = True) -> DataFrame:
+def periodic_samples(captures: DataFrame, per_url: bool = True) -> DataFrame:
     """captures (url, ts, ...) -> (url?, Period, Samples) long form.
 
     Period ordering follows the reference (Second..Year); a ``PeriodRank``
     column is included so callers can sort without re-deriving it.
     """
-    agg_fn = F.countDistinct if exact else (lambda c: F.approx_count_distinct(c))
     aggs = [
-        agg_fn(F.substring("ts", 1, n)).alias(p) for p, n in PERIOD_PREFIX.items()
+        F.countDistinct(F.substring("ts", 1, n)).alias(p) for p, n in PERIOD_PREFIX.items()
     ]
     keys = ["url"] if per_url else []
     wide = captures.groupBy(*keys).agg(*aggs) if keys else captures.agg(*aggs)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from trendmachine_spark.params import TRANSITION_CLASSES
 
 
-def transition_matrix(dense_daily: DataFrame, dense_cells: bool = True) -> DataFrame:
+def transition_matrix(dense_daily: DataFrame) -> DataFrame:
     """dense daily series -> (url, Source, Target, Count).
 
     ``dense_daily`` needs url, day, specimen; filled days participate
@@ -66,5 +66,4 @@ def transition_matrix(dense_daily: DataFrame, dense_cells: bool = True) -> DataF
             for j, t in enumerate(TRANSITION_CLASSES)
         ),
     )
-    out = wide.selectExpr("url", stack_expr)
-    return out if dense_cells else out.filter(F.col("Count") > 0)
+    return wide.selectExpr("url", stack_expr)

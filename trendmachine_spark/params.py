@@ -70,23 +70,26 @@ DEFAULT_SIGPARAMS: dict[str, SigmoidParam] = {
 #: Gap-fill policies supported by the engine (main.py:81-86).
 FILL_POLICIES = ("identical", "closest", "forward", "backward")
 
-#: Canonical daily-table report column order (main.py:230-231, verified by
-#: executing the reference — see SURVEY.md §1.2).
-REPORT_COLUMNS = [
-    "Day",
-    "Datetime",
-    "2xx",
-    "3xx",
-    "4xx",
-    "5xx",
-    "All",
-    "Specimen",
-    "Filled",
-    "Resilience",
-    "Digest",
-    "Content",
-    "Fixity",
-    "Chaos",
-    "Chaosn",
-    "URIM",
-]
+#: Daily-series column -> report column, in the canonical report order
+#: (main.py:230-231, verified by executing the reference — see SURVEY.md
+#: §1.2); the report's last column, URIM, is derived from Datetime + url.
+REPORT_NAMES = {
+    "day_str": "Day",
+    "datetime": "Datetime",
+    "_2xx": "2xx",
+    "_3xx": "3xx",
+    "_4xx": "4xx",
+    "_5xx": "5xx",
+    "all": "All",
+    "specimen": "Specimen",
+    "filled": "Filled",
+    "resilience": "Resilience",
+    "digest": "Digest",
+    "content": "Content",
+    "fixity": "Fixity",
+    "chaos": "Chaos",
+    "chaosn": "Chaosn",
+}
+
+#: Canonical daily-table report column order.
+REPORT_COLUMNS = [*REPORT_NAMES.values(), "URIM"]

@@ -20,6 +20,7 @@ from trendmachine_spark.operators.normalize import normalize_captures
 from trendmachine_spark.operators.recurrence import _partition_count, score_daily_series
 from trendmachine_spark.operators.rollup import daily_rollup
 from trendmachine_spark.operators.spine import densify, resolve_as_of
+from trendmachine_spark.params import REPORT_NAMES
 
 
 def dense_daily(
@@ -122,20 +123,20 @@ def report_projection(scored: DataFrame) -> DataFrame:
     """Canonical report-column projection over a scored dense series."""
     return scored.select(
         "url",
-        F.col("day_str").alias("Day"),
-        F.col("datetime").alias("Datetime"),
-        F.col("_2xx").alias("2xx"),
-        F.col("_3xx").alias("3xx"),
-        F.col("_4xx").alias("4xx"),
-        F.col("_5xx").alias("5xx"),
-        F.col("all").alias("All"),
-        F.col("specimen").alias("Specimen"),
-        F.col("filled").alias("Filled"),
-        F.col("resilience").alias("Resilience"),
-        F.col("digest").alias("Digest"),
-        F.col("content").alias("Content"),
-        F.col("fixity").alias("Fixity"),
-        F.col("chaos").alias("Chaos"),
-        F.col("chaosn").alias("Chaosn"),
+        *[F.col(c).alias(r) for c, r in REPORT_NAMES.items()],
         urim(F.col("datetime"), F.col("url")).alias("URIM"),
     )
+
+
+def report_view(series: DataFrame) -> DataFrame:
+    """A daily series under its report column names, without URIM: the
+    report's projection over the rollup or the dense series, which the
+    dashboard panes read like the scored report. Columns the series
+    lacks are left out, except the two scores, which come as typed
+    nulls that column pruning drops from any plan not using them."""
+    have = set(series.columns)
+    return series.select("url", *[
+        (F.col(c) if c in have else F.lit(None).cast("double")).alias(r)
+        for c, r in REPORT_NAMES.items()
+        if c in have or c in ("resilience", "fixity")
+    ])

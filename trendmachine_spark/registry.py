@@ -84,7 +84,7 @@ from trendmachine_spark.registry_queries.dedup_text import (  # noqa: F401
     q_dedup_minhash_lsh,
     q_lsh_bucket_health,
     q_minhash_accuracy,
-    _side_minhash_ctes,
+    _band_ctes,
     _INCR_U,
     q_dedup_incremental,
     q_dedup_clusters,

@@ -2,7 +2,7 @@
 
 POSITION-CONTIGUOUS slice of the original registry.py — import
 order of the registry_queries modules IS the driver-contract
-registration order; do not reorder. Body lines are verbatim.
+registration order; do not reorder.
 """
 
 from __future__ import annotations
@@ -10,12 +10,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from trendmachine_spark import oracle_sql as osql
-from trendmachine_spark.functions.scalars import urim, ymd, ymd_sql
+from trendmachine_spark.functions.scalars import urim, ymd_sql
+from trendmachine_spark.operators import dashboard
 from trendmachine_spark.operators.fill import gap_fill
 from trendmachine_spark.operators.normalize import normalize_captures
 from trendmachine_spark.operators.samples import periodic_samples
 from trendmachine_spark.operators.spine import densify, resolve_as_of
 from trendmachine_spark.operators.transitions import transition_matrix
+from trendmachine_spark.pipeline import report_view
 from trendmachine_spark.sources.captures import events_as_captures
 
 from trendmachine_spark.registry_core import (
@@ -253,7 +255,7 @@ def q_chaos_ffill(spark, sf_dir):
 )
 def q_transition_matrix(spark, sf_dir):
     daily = _daily(spark, sf_dir)
-    out = transition_matrix(daily, dense_cells=True)
+    out = transition_matrix(daily)
     return out.select(
         "url", F.col("Source").alias("source"), F.col("Target").alias("target"),
         F.col("Count").alias("cnt"),
@@ -306,11 +308,24 @@ def q_transition_matrix(spark, sf_dir):
 )
 def q_transition_matrix_filled(spark, sf_dir):
     dense = _dense(spark, sf_dir, fill=-1, policy="closest")
-    out = transition_matrix(dense, dense_cells=True)
+    out = transition_matrix(dense)
     return out.select(
         "url", F.col("Source").alias("source"), F.col("Target").alias("target"),
         F.col("Count").alias("cnt"),
     )
+
+
+# ------------------------------------------------- O23-O27, O30, O41 panes
+# Each builder below runs its operators.dashboard pane over a report_view
+# of the shared rollup or dense series and renames the pane's columns to
+# the oracle's.
+
+#: report count column -> oracle column
+_COUNT_NAMES = {"2xx": "c2xx", "3xx": "c3xx", "4xx": "c4xx", "5xx": "c5xx", "All": "all_cnt"}
+
+
+def _renamed(df: DataFrame, names: dict) -> DataFrame:
+    return df.select(*[F.col(c).alias(names.get(c, c)) for c in df.columns])
 
 
 # ----------------------------------------------------------------------- O23
@@ -325,14 +340,8 @@ def q_transition_matrix_filled(spark, sf_dir):
     FROM daily WHERE all_cnt <> 0 GROUP BY url, month""",
 )
 def q_monthly_rollup(spark, sf_dir):
-    d = _daily(spark, sf_dir).filter(F.col("all") != 0)
-    return d.groupBy(
-        "url", F.concat(F.substring("day_str", 1, 8), F.lit("15")).alias("month")
-    ).agg(
-        F.sum("_2xx").alias("c2xx"), F.sum("_3xx").alias("c3xx"),
-        F.sum("_4xx").alias("c4xx"), F.sum("_5xx").alias("c5xx"),
-        F.sum("all").alias("all_cnt"),
-    )
+    out = dashboard.monthly_rollup(report_view(_daily(spark, sf_dir)))
+    return _renamed(out, {"Month": "month", **_COUNT_NAMES})
 
 
 # ----------------------------------------------------------------------- O25
@@ -351,16 +360,8 @@ def q_monthly_rollup(spark, sf_dir):
     FROM wide UNPIVOT (total FOR status IN ("2xx", "3xx", "4xx", "5xx", "All"))""",
 )
 def q_status_totals(spark, sf_dir):
-    d = _daily(spark, sf_dir).filter(F.col("all") != 0)
-    wide = d.groupBy("url").agg(
-        F.sum("_2xx").alias("2xx"), F.sum("_3xx").alias("3xx"),
-        F.sum("_4xx").alias("4xx"), F.sum("_5xx").alias("5xx"),
-        F.sum("all").alias("All"),
-    )
-    return wide.selectExpr(
-        "url",
-        "stack(5, '2xx', `2xx`, '3xx', `3xx`, '4xx', `4xx`, '5xx', `5xx`, 'All', `All`) as (status, total)",
-    )
+    out = dashboard.totals(report_view(_daily(spark, sf_dir)))
+    return _renamed(out, {"Status": "status", "Total": "total"})
 
 
 # ----------------------------------------------------------------------- O24
@@ -388,33 +389,8 @@ def _summary_sql() -> str:
 
 @register("summary_stats", _summary_sql())
 def q_summary_stats(spark, sf_dir):
-    d = _daily(spark, sf_dir).filter(F.col("all") != 0)
-    pieces = []
-    for c, col in [("2xx", "_2xx"), ("3xx", "_3xx"), ("4xx", "_4xx"),
-                   ("5xx", "_5xx"), ("All", "all")]:
-        v = d.filter(F.col(col) != 0).select("url", F.col(col).alias("v"))
-        n = F.count("v")
-        s = F.sum("v")
-        ss = F.sum(F.col("v") * F.col("v"))
-        pieces.append(
-            v.groupBy("url").agg(
-                n.alias("cnt"),
-                (s.cast("double") / n).alias("mean"),
-                F.when(
-                    n > 1,
-                    F.sqrt((ss.cast("double") - s.cast("double") * s / n) / (n - 1)),
-                ).otherwise(0.0).alias("std"),
-                F.min("v").cast("long").alias("minv"),
-                F.expr("percentile(v, 0.25)").alias("q1"),
-                F.expr("percentile(v, 0.5)").alias("median"),
-                F.expr("percentile(v, 0.75)").alias("q3"),
-                F.max("v").cast("long").alias("maxv"),
-            ).withColumn("status", F.lit(c))
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out.select("url", "status", "cnt", "mean", "std", "minv", "q1", "median", "q3", "maxv")
+    out = dashboard.summary_stats(report_view(_daily(spark, sf_dir)))
+    return _renamed(out, {"Status": "status", "count": "cnt", "min": "minv", "max": "maxv"})
 
 
 # ----------------------------------------------------------------------- O26
@@ -430,8 +406,8 @@ def q_summary_stats(spark, sf_dir):
     FROM dense GROUP BY url, content""",
 )
 def q_content_value_counts(spark, sf_dir):
-    dense = _dense(spark, sf_dir)
-    return dense.groupBy("url", "content").agg(F.count(F.lit(1)).alias("cnt"))
+    out = dashboard.content_value_counts(report_view(_dense(spark, sf_dir)))
+    return _renamed(out, {"Content": "content", "Count": "cnt"})
 
 
 # ----------------------------------------------------------------------- O27
@@ -468,15 +444,8 @@ def q_content_value_counts(spark, sf_dir):
 )
 def q_specimen_breakdown(spark, sf_dir):
     dense = _dense(spark, sf_dir, fill=-1, policy="forward")
-    wide = dense.groupBy("url").agg(
-        F.sum((F.col("all") != 0).cast("long")).alias("Active"),
-        F.sum(F.col("filled").cast("long")).alias("Filled"),
-        F.sum(((F.col("specimen") == "~") & (F.col("all") == 0)).cast("long")).alias("Missing"),
-    )
-    return wide.selectExpr(
-        "url",
-        "stack(3, 'Active', Active, 'Filled', Filled, 'Missing', Missing) as (specimen_src, days)",
-    )
+    out = dashboard.specimen_breakdown(report_view(dense))
+    return _renamed(out, {"Specimen": "specimen_src", "Days": "days"})
 
 
 # ----------------------------------------------------------------------- O41
@@ -489,13 +458,7 @@ def q_specimen_breakdown(spark, sf_dir):
     FROM daily WHERE all_cnt <> 0 GROUP BY url""",
 )
 def q_first_last_capture(spark, sf_dir):
-    d = _daily(spark, sf_dir).filter(F.col("all") != 0)
-    return d.groupBy("url").agg(
-        F.min("day_str").alias("first_day"),
-        F.min_by("datetime", "day_str").alias("first_datetime"),
-        F.max("day_str").alias("last_day"),
-        F.max_by("datetime", "day_str").alias("last_datetime"),
-    )
+    return dashboard.first_last_capture(report_view(_daily(spark, sf_dir)))
 
 
 # ----------------------------------------------------------------------- O14
@@ -547,23 +510,11 @@ def q_urim_projection(spark, sf_dir):
     FROM agg""",
 )
 def q_headline_metrics(spark, sf_dir):
-    dense = _dense(spark, sf_dir)
-    agg = dense.groupBy("url").agg(
-        F.sum("all").alias("captures"),
-        F.sum("_2xx").alias("_ok"),
-        F.count(F.lit(1)).alias("span_days"),
-        F.max(F.when(F.col("all") != 0, F.col("day_str"))).alias("last_observed_day"),
-        F.max("day_str").alias("_spine_end"),
-        F.sum((F.col("all") == 0).cast("long")).alias("gap_days"),
-        F.sum((F.col("content") == "Changed").cast("long")).alias("changed_days"),
-        F.sum((F.col("all") != 0).cast("long")).alias("active_days"),
-    )
-    return agg.select(
-        "url", "captures", "span_days", "last_observed_day", "gap_days",
-        "changed_days", "active_days",
-        (F.col("_ok").cast("double") / F.col("captures")).alias("ok_ratio"),
-        ymd(F.col("span_days")).alias("span_human"),
-        F.datediff(
-            F.to_date("_spine_end"), F.to_date("last_observed_day")
-        ).cast("long").alias("inactive_days"),
+    # the SQL-safe subset: the score columns of the unscored dense view
+    # are typed nulls, and pruning drops the aggregates over them
+    out = dashboard.headline_metrics(report_view(_dense(spark, sf_dir)))
+    return out.select(
+        "url", "captures", "span_days", "last_observed_day",
+        F.col("gaps").alias("gap_days"), "changed_days", "active_days",
+        "ok_ratio", "span_human", "inactive_days",
     )

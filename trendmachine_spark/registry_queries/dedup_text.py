@@ -74,32 +74,49 @@ def q_dedup_exact_norm(spark, sf_dir):
     return exact_norm_dedup(_docs(spark, sf_dir))
 
 
+def _band_ctes(p: str = "", src: str | None = None) -> str:
+    """The one SQL copy of the shingle -> hash -> signature -> band CTE
+    chain (``dedup.shingle_hash``/``minhash_columns`` and the LSH
+    banding of ``minhash_near_dup``), ending in ``{p}bands``. Over
+    ``documents`` with ``bands`` MATERIALIZED by default; ``p``/``src``
+    give one prefixed side of a two-corpus query reading CTE ``src``."""
+    from trendmachine_spark.extensions.dedup import BANDS, HASH_MASKS, ROWS_PER_BAND
+
+    sig_cols = ", ".join(
+        f"min(xor(h, {m})) AS mh{j}" for j, m in enumerate(HASH_MASKS)
+    )
+    band_rows = " UNION ALL ".join(
+        "SELECT doc_id, {b} AS band, md5(concat_ws('|', {cols})) AS bucket FROM {p}sig".format(
+            b=b, p=p,
+            cols=", ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
+        )
+        for b in range(BANDS)
+    )
+    if src is None:
+        shingles, materialized = _SHINGLES_SQL, " MATERIALIZED"
+    else:
+        shingles, materialized = f"""{p}words AS (SELECT doc_id, string_split(text, ' ') AS w FROM {src}),
+    {p}sh AS (
+      SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
+      FROM {p}words, unnest(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
+    )""", ""
+    return f"""{shingles},
+    {p}hashed AS (
+      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM {p}sh
+    ),
+    {p}sig AS (SELECT doc_id, {sig_cols} FROM {p}hashed GROUP BY doc_id),
+    {p}bands AS{materialized} ({band_rows})"""
+
+
 def _minhash_ctes() -> str:
     """CTE chain ending in ``cand`` = the LSH candidate pairs (bucket
     cap mirrored from dedup.minhash_near_dup: all-pairs for buckets up
     to MAX_LSH_BUCKET, md5-SHARDED chains above it — intra-shard
     consecutive ids plus one link per adjacent non-empty shard, the
     round-6 default over-cap path of _sharded_chain_pairs)."""
-    from trendmachine_spark.extensions.dedup import (
-        BANDS, HASH_MASKS, MAX_LSH_BUCKET, ROWS_PER_BAND,
-    )
+    from trendmachine_spark.extensions.dedup import MAX_LSH_BUCKET
 
-    sig_cols = ", ".join(
-        f"min(xor(h, {m})) AS mh{j}" for j, m in enumerate(HASH_MASKS)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5(concat_ws('|', {cols})) AS bucket FROM sig".format(
-            b=b,
-            cols=", ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
-        )
-        for b in range(BANDS)
-    )
-    return f"""{_SHINGLES_SQL},
-    hashed AS (
-      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM sh
-    ),
-    sig AS (SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id),
-    bands AS MATERIALIZED ({band_rows}),
+    return f"""{_band_ctes()},
     bsizes AS (
       SELECT band, bucket, count(*) AS bn FROM bands GROUP BY band, bucket
     ),
@@ -202,33 +219,6 @@ def q_minhash_accuracy(spark, sf_dir):
     return minhash_accuracy(_docs(spark, sf_dir))
 
 
-def _side_minhash_ctes(p: str, src: str) -> str:
-    """Shingle/signature/band CTE chain for one side of the incremental
-    dedup, prefixed ``p`` (e.g. 'd'/'b'), reading from CTE ``src``."""
-    from trendmachine_spark.extensions.dedup import BANDS, HASH_MASKS, ROWS_PER_BAND
-
-    sig_cols = ", ".join(
-        f"min(xor(h, {m})) AS mh{j}" for j, m in enumerate(HASH_MASKS)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5(concat_ws('|', {cols})) AS bucket FROM {p}sig".format(
-            b=b, p=p,
-            cols=", ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
-        )
-        for b in range(BANDS)
-    )
-    return f"""{p}words AS (SELECT doc_id, string_split(text, ' ') AS w FROM {src}),
-    {p}sh AS (
-      SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
-      FROM {p}words, unnest(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
-    ),
-    {p}hashed AS (
-      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM {p}sh
-    ),
-    {p}sig AS (SELECT doc_id, {sig_cols} FROM {p}hashed GROUP BY doc_id),
-    {p}bands AS ({band_rows})"""
-
-
 #: deterministic 20% ingest-batch split for the incremental-dedup query
 _INCR_U = ("('0x' || substr(md5('incr:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
            " / 1152921504606846976.0")
@@ -238,8 +228,8 @@ _INCR_U = ("('0x' || substr(md5('incr:' || CAST(doc_id AS VARCHAR)), 1, 15))::BI
     "dedup_incremental",
     f"""WITH delta AS (SELECT doc_id, text FROM documents WHERE {_INCR_U} < 0.2),
     base AS (SELECT doc_id, text FROM documents WHERE {_INCR_U} >= 0.2),
-    {_side_minhash_ctes('d', 'delta')},
-    {_side_minhash_ctes('b', 'base')},
+    {_band_ctes('d', 'delta')},
+    {_band_ctes('b', 'base')},
     dh AS (SELECT doc_id, md5(text) AS h FROM delta),
     bh AS (SELECT DISTINCT md5(text) AS h FROM base),
     keeper AS (SELECT h, min(doc_id) AS k FROM dh GROUP BY h),
@@ -1085,42 +1075,30 @@ def q_multimodal_frame_sample(spark, sf_dir):
     return frame_sample(to_binary_assets(_docs(spark, sf_dir)))
 
 
-def _cross_corpus_oracle(min_jaccard: float = 0.8) -> str:
-    """Exact mirror of dedup.cross_corpus_near_dup on the even/odd
-    doc_id split: shared shingle/signature/band chain (verbatim the
-    _minhash_ctes idioms), side = doc_id % 2, candidate buckets must
-    hold BOTH sides with NEITHER side over MAX_LSH_BUCKET (the
-    boilerplate-template drop, mirrored), pairs are A x B only, and
-    the verifier recomputes exact distinct-shingle jaccard as one
-    double division of exact integers (same expression order as the
-    Spark filter)."""
-    from trendmachine_spark.extensions.dedup import (
-        BANDS, HASH_MASKS, MAX_LSH_BUCKET, ROWS_PER_BAND,
-    )
-
-    sig_cols = ", ".join(
-        f"min(xor(h, {m})) AS mh{j}" for j, m in enumerate(HASH_MASKS)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5(concat_ws('|', {cols})) AS bucket FROM sig".format(
-            b=b,
-            cols=", ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
-        )
-        for b in range(BANDS)
-    )
-    return f"""WITH {_SHINGLES_SQL},
-    hashed AS (
-      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM sh
-    ),
-    sig AS (SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id),
-    bands AS MATERIALIZED ({band_rows}),
-    sided AS (SELECT doc_id, band, bucket, doc_id % 2 AS side FROM bands),
+#: side = doc_id % 2 over ``bands`` and the per-side bucket counts,
+#: shared by the two cross-corpus oracles
+_SIDED_SQL = """sided AS (SELECT doc_id, band, bucket, doc_id % 2 AS side FROM bands),
     scnt AS (
       SELECT band, bucket,
              sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS na,
              sum(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS nb
       FROM sided GROUP BY band, bucket
-    ),
+    )"""
+
+
+def _cross_corpus_oracle(min_jaccard: float = 0.8) -> str:
+    """Exact mirror of dedup.cross_corpus_near_dup on the even/odd
+    doc_id split: the _band_ctes chain, side = doc_id % 2
+    (_SIDED_SQL), candidate buckets must hold BOTH sides with NEITHER
+    side over MAX_LSH_BUCKET (the
+    boilerplate-template drop, mirrored), pairs are A x B only, and
+    the verifier recomputes exact distinct-shingle jaccard as one
+    double division of exact integers (same expression order as the
+    Spark filter)."""
+    from trendmachine_spark.extensions.dedup import MAX_LSH_BUCKET
+
+    return f"""WITH {_band_ctes()},
+    {_SIDED_SQL},
     ok AS (
       SELECT band, bucket FROM scnt
       WHERE na > 0 AND nb > 0
@@ -1168,36 +1146,13 @@ def q_dedup_cross_corpus(spark, sf_dir):
 
 def _cross_corpus_health_oracle() -> str:
     """Per-band health of the cross-corpus candidate generation —
-    shares the sided/scnt chain with _cross_corpus_oracle and reports
+    shares the _SIDED_SQL chain with _cross_corpus_oracle and reports
     the exact candidate-pair volume the per-side cap dropped vs kept
     (the no-silent-caps metric for the merge shape)."""
-    from trendmachine_spark.extensions.dedup import (
-        BANDS, HASH_MASKS, MAX_LSH_BUCKET, ROWS_PER_BAND,
-    )
+    from trendmachine_spark.extensions.dedup import MAX_LSH_BUCKET
 
-    sig_cols = ", ".join(
-        f"min(xor(h, {m})) AS mh{j}" for j, m in enumerate(HASH_MASKS)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5(concat_ws('|', {cols})) AS bucket FROM sig".format(
-            b=b,
-            cols=", ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
-        )
-        for b in range(BANDS)
-    )
-    return f"""WITH {_SHINGLES_SQL},
-    hashed AS (
-      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM sh
-    ),
-    sig AS (SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id),
-    bands AS MATERIALIZED ({band_rows}),
-    sided AS (SELECT doc_id, band, bucket, doc_id % 2 AS side FROM bands),
-    scnt AS (
-      SELECT band, bucket,
-             sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS na,
-             sum(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS nb
-      FROM sided GROUP BY band, bucket
-    ),
+    return f"""WITH {_band_ctes()},
+    {_SIDED_SQL},
     shared AS (
       SELECT band, bucket, na, nb,
              CASE WHEN na > {MAX_LSH_BUCKET} OR nb > {MAX_LSH_BUCKET}
