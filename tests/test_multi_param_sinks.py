@@ -94,14 +94,20 @@ def _check_report_sink(spark, tmp_path, partitions):
     from trendmachine_spark.operators.recurrence import _partition_count
 
     base = spark.conf.get("spark.sql.shuffle.partitions")
+    size_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    base_size = spark.conf.get(size_key)
     if partitions is not None:
+        # a 1-byte advisory size sizes the url exchange to shuffle.partitions
         spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        spark.conf.set(size_key, "1")
     try:
         caps = captures_from_fixture(spark, FIXTURE_LINES_A, url="u0")
         for i in range(1, 12):
             caps = caps.unionByName(captures_from_fixture(spark, FIXTURE_LINES_A, url=f"u{i}"))
         report = daily_series(caps, fill=0, as_of="2020-01-05")
         nparts = _partition_count(report)
+        if partitions is not None:
+            assert nparts == int(partitions)
         want = sorted(map(tuple, report.collect()))
         path = str(tmp_path / "report")
         write_daily_report(report, path)
@@ -112,6 +118,7 @@ def _check_report_sink(spark, tmp_path, partitions):
         write = execs.apply(execs.size() - 1).physicalPlanDescription()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", base)
+        spark.conf.set(size_key, base_size)
     assert "InsertIntoHadoopFsRelationCommand" in write
     assert _exchanges(write) == _exchanges(
         report._jdf.queryExecution().executedPlan().toString())

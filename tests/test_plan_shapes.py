@@ -554,12 +554,11 @@ def _stage_nodes(final_plan: str, anchor: str) -> list[str]:
 
 def test_dense_stage_runs_on_partition_count_tasks(spark):
     """The dense stage (spine window -> recurrence map) must run on
-    ``_partition_count`` tasks at every shuffle parallelism. At
-    shuffle.partitions >= 8 the recurrence's own url repartition is
-    dropped as redundant, so the stage keeps whatever url exchange it
-    inherits; an ENSURE_REQUIREMENTS one is coalesced by AQE to ONE
-    task on report-sized inputs. (At the session's 4 partitions the
-    explicit exchange survives, which hid this.)"""
+    ``_partition_count`` tasks at every shuffle parallelism. The
+    pipeline scores the dense frame without a url repartition of its
+    own, so the stage keeps whatever url exchange it inherits; an
+    ENSURE_REQUIREMENTS one is coalesced by AQE to ONE task on
+    report-sized inputs."""
     from pyspark.sql import functions as F
 
     from trendmachine_spark.pipeline import daily_series
@@ -625,3 +624,53 @@ def test_dashboard_pane_reads_report_once(spark, pane):
     final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert final.count("MapInPandas") == 1, final
     assert "rangepartitioning" not in final, final
+
+
+def test_url_exchange_sized_to_input(spark):
+    """The capture -> report url exchange is sized to its input: on the
+    sf0.001 captures, at shuffle.partitions = 8 (more than the session's
+    task slots), it runs on ``defaultParallelism`` tasks, and the
+    captures and the dense frame built from them get the same count; a
+    1-byte advisory size restores shuffle.partitions. The full report
+    has that one explicit-count exchange and no other; a one-URL build,
+    which skips it, gains none from the recurrence (its own repartition
+    would differ from the spine window's 8-way exchange)."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from trendmachine_spark.operators.recurrence import _partition_count
+    from trendmachine_spark.pipeline import daily_series, dense_daily
+    from trendmachine_spark.sources.captures import events_as_captures
+
+    def by_num(plan: str) -> dict[str, int]:
+        # plan_id -> count of each REPARTITION_BY_NUM exchange (a reused
+        # exchange repeats its plan_id)
+        return {pid: int(n) for n, pid in re.findall(
+            r"Exchange hashpartitioning\(url#\d+, (\d+)\), REPARTITION_BY_NUM, \[plan_id=(\d+)\]",
+            plan)}
+
+    size_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    base, base_size = spark.conf.get("spark.sql.shuffle.partitions"), spark.conf.get(size_key)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        caps = events_as_captures(spark, SF)
+        n = _partition_count(caps)
+        assert n == min(8, spark.sparkContext.defaultParallelism)
+        assert _partition_count(dense_daily(caps, fill=2, policy="closest")) == n
+        spark.conf.set(size_key, "1")
+        assert _partition_count(caps) == 8
+        spark.conf.set(size_key, base_size)
+
+        report = daily_series(caps, fill=2, policy="closest")
+        report.collect()
+        final = report._jdf.queryExecution().executedPlan().toString()
+        assert list(by_num(final.split("== Initial Plan ==")[0]).values()) == [n], final
+
+        url = caps.select("url").first()["url"]
+        one = daily_series(caps.filter(F.col("url") == url), fill=2, policy="closest")
+        plan = one._jdf.queryExecution().executedPlan().toString()
+        assert not by_num(plan), plan
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", base)
+        spark.conf.set(size_key, base_size)

@@ -7,6 +7,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from trendmachine_spark.operators.recurrence import _partition_count
 from trendmachine_spark.operators.transitions import transition_matrix
 from trendmachine_spark.pipeline import daily_series, dense_daily
 from trendmachine_spark.sources.captures import CAPTURES_SCHEMA
@@ -114,11 +115,16 @@ def test_fill_zero_unknown_status_days_are_filled_flagged(spark):
 def test_partition_invariance(spark):
     """Identical results at 1 vs 32 shuffle partitions (FIXTURES.md §4)."""
     caps = random_captures(spark, n_urls=4, seed=23)
+    size_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    base_size = spark.conf.get(size_key)
     results = []
     for parts in ("1", "32"):
         spark.conf.set("spark.sql.shuffle.partitions", parts)
+        # a 1-byte advisory size sizes the url exchange to shuffle.partitions
+        spark.conf.set(size_key, "1")
         try:
             rep = daily_series(caps.repartition(int(parts)), fill=2, policy="closest")
+            assert _partition_count(rep) == int(parts)
             rows = sorted(
                 (r["url"], r["Day"], r["Specimen"], r["All"],
                  round(r["Resilience"], 12), round(r["Fixity"], 12),
@@ -128,6 +134,7 @@ def test_partition_invariance(spark):
             results.append(rows)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", "4")
+            spark.conf.set(size_key, base_size)
     assert results[0] == results[1]
 
 

@@ -15,7 +15,7 @@ import random
 
 import pytest
 
-from trendmachine_spark.operators.recurrence import score_daily_series
+from trendmachine_spark.operators.recurrence import _partition_count, score_daily_series
 from trendmachine_spark.params import DEFAULT_SIGPARAMS
 
 
@@ -75,7 +75,8 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
     repartition(P, url) + sortWithinPartitions(url, day), resuming the
     active run across Arrow batch boundaries. Pin: the output is
     bit-identical for ANY partition count (the session's
-    shuffle.partitions, which sets the url exchange: 1 = every url in
+    shuffle.partitions, which sets the url exchange under a 1-byte
+    advisory partition size: 1 = every url in
     one task, maximal boundary mixing; 64 = urls mostly alone) and for
     ANY Arrow batch size (maxRecordsPerBatch=3 forces url runs AND key
     runs to straddle batch boundaries, so the
@@ -104,13 +105,18 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
         )
 
     def scored(n):
-        # the url exchange takes the session's shuffle parallelism
+        # the url exchange takes the session's shuffle parallelism: a
+        # 1-byte advisory size sizes it to shuffle.partitions
         spark.conf.set(part_key, str(n))
+        assert _partition_count(dense) == n
         return rows_of(score_daily_series(dense))
 
     part_key = "spark.sql.shuffle.partitions"
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    size_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev_parts, prev_batch = spark.conf.get(part_key), spark.conf.get(batch_key)
+    prev_size = spark.conf.get(size_key)
+    spark.conf.set(size_key, "1")
     try:
         one = scored(1)
         many = scored(64)
@@ -122,5 +128,6 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
     finally:
         spark.conf.set(part_key, prev_parts)
         spark.conf.set(batch_key, prev_batch)
+        spark.conf.set(size_key, prev_size)
     assert tiny == one  # bit-identical across batch splits
     assert tiny_many == one

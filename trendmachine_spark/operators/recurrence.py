@@ -35,8 +35,17 @@ physical plan, and if the inherited exchange is an ENSURE_REQUIREMENTS
 one, AQE coalesces it by bytes — to ONE task on report-sized inputs.
 ``pipeline.dense_daily`` therefore puts the explicit-count url exchange
 on the captures, which every url-keyed operator down to this map
-inherits and AQE never coalesces; the repartition here only takes
-effect over a dense frame partitioned some other way.
+inherits and AQE never coalesces, and ``pipeline.daily_series`` scores
+its url-clustered output with :func:`_score_clustered`, without the
+repartition; :func:`score_daily_series`'s repartition only takes effect
+over a dense frame partitioned some other way.
+
+P is sized to the input (:func:`_partition_count`): the session's
+default parallelism, or one task per advisory partition size of input
+bytes when that is more, capped at ``shuffle.partitions``. Each Python
+map task costs a fixed 70-85 ms of worker start before it sees a row
+(most of it ``importlib.invalidate_caches()`` re-reading the zips on the
+worker's path), so on a small archive 8 tasks cost more than 2.
 
 Within a run the curve is vectorized with numpy (the reference loops
 day-at-a-time in Python; we only pay Python per *run*).
@@ -60,23 +69,42 @@ def _param_table(sigparams) -> dict[str, tuple[float, float, float]]:
 
 
 def _partition_count(df: DataFrame) -> int:
-    """Scale-adaptive parallelism for the url exchange of the capture ->
-    report stage: the session's shuffle parallelism (data-sized in
-    bench/prod sessions). It reaches the Python stage only through an
-    explicit-count (REPARTITION_BY_NUM) exchange, which AQE never
-    coalesces: ``pipeline.dense_daily`` puts that exchange on the
-    captures. An ENSURE_REQUIREMENTS url exchange gets AQE-coalesced to
-    ~1 task on byte estimates, serializing the Python stage (measured:
-    1 task at sf0.1 AND x10 under the bench confs). No floor: at the
-    session's own count, the repartition in :func:`score_daily_series`
-    is redundant over any url exchange, explicit or planned by Spark, so
-    Spark drops it, and a one-URL build that skips the explicit exchange
-    (``pipeline._url_parallel``) gains none here."""
+    """Tasks for the url exchange of the capture -> report stage:
+
+        min(shuffle.partitions,
+            max(defaultParallelism, ceil(input bytes / advisory size)))
+
+    where input bytes is the sum of ``sizeInBytes`` over the leaves of
+    ``df``'s analyzed plan (no optimizer pass; the captures and every
+    frame built from them get the same count) and the advisory size is
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. Each task of the
+    recurrence's Python map pays a fixed worker start (70-85 ms) before
+    its first row, so a small input runs on the session's task slots,
+    not on ``shuffle.partitions`` mostly idle tasks; inputs above
+    ``shuffle.partitions`` advisory sizes keep that count. Where the plan
+    is out of reach (Spark Connect), the count is ``shuffle.partitions``.
+
+    The count reaches the Python stage only through an explicit-count
+    (REPARTITION_BY_NUM) exchange, which AQE never coalesces:
+    ``pipeline.dense_daily`` puts that exchange on the captures. An
+    ENSURE_REQUIREMENTS url exchange gets AQE-coalesced to ~1 task on
+    byte estimates, serializing the Python stage (measured: 1 task at
+    sf0.1 AND x10 under the bench confs)."""
+    spark = df.sparkSession
     try:
-        target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # absent/non-integer setting or Connect quirk
         target = 8
-    return target
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        size = sum(int(str(leaves.apply(i).stats().sizeInBytes()))
+                   for i in range(leaves.size()))
+        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        slots = spark.sparkContext.defaultParallelism
+    except Exception:  # no JVM plan (Connect)
+        return target
+    return min(target, max(slots, -(-size // advisory)))
 
 
 def _make_runner(params: dict):
@@ -139,16 +167,21 @@ def score_daily_series(dense: DataFrame, sigparams=None) -> DataFrame:
     """Add ``resilience`` and ``fixity`` columns to the dense daily series.
 
     ``dense`` must contain url, day, specimen, content (one row per
-    calendar day per url). Both recurrences run in a single streamed
-    scan: rows are hash-partitioned by url (every url's series lands
-    whole in one partition), sorted by (url, day) within the partition,
-    and scored by a mapInPandas that resumes runs across Arrow batch
-    boundaries (module docstring).
+    calendar day per url). Rows are hash-partitioned by url into
+    ``_partition_count`` tasks (every url's series lands whole in one
+    partition) and scored by :func:`_score_clustered`. Any count yields
+    bit-identical results — pinned by the partition/batch-invariance
+    test — it only trades parallelism against per-task constants.
+    """
+    return _score_clustered(dense.repartition(_partition_count(dense), "url"), sigparams)
 
-    The url exchange has the session's shuffle parallelism
-    (``_partition_count``). Any count yields bit-identical results —
-    pinned by the partition/batch-invariance test — it only trades
-    parallelism against per-task constants.
+
+def _score_clustered(dense: DataFrame, sigparams=None) -> DataFrame:
+    """:func:`score_daily_series` over a frame whose partitions already
+    hold each url whole (``pipeline.dense_daily``'s output, clustered by
+    its url window): both recurrences run in a single streamed scan,
+    sorted by (url, day) within the partition, by a mapInPandas that
+    resumes runs across Arrow batch boundaries (module docstring).
 
     The whole dense row goes through the map and comes back scored —
     no join-back, so the dense subtree appears once in the plan; with
@@ -161,7 +194,6 @@ def score_daily_series(dense: DataFrame, sigparams=None) -> DataFrame:
     """
     params = _param_table(sigparams)
     known = list(params)
-    nparts = _partition_count(dense)
 
     out_schema = T.StructType(
         list(dense.schema.fields)
@@ -193,8 +225,7 @@ def score_daily_series(dense: DataFrame, sigparams=None) -> DataFrame:
             yield pdf
 
     return (
-        dense.repartition(nparts, "url")
-        .sortWithinPartitions("url", "day")
+        dense.sortWithinPartitions("url", "day")
         .mapInPandas(stream, schema=out_schema)
     )
 
@@ -218,7 +249,7 @@ def score_daily_series_multi(dense: DataFrame, param_sets: dict) -> DataFrame:
         + [T.StructField("resilience", T.DoubleType()), T.StructField("fixity", T.DoubleType())]
     )
     # Driver-built runner closures: picklable by value (see
-    # score_daily_series) — workers never import this package.
+    # _score_clustered) — workers never import this package.
     runners = {name: _make_runner(t) for name, t in tables.items()}
 
     def stream(batches):

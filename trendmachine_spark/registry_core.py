@@ -8,22 +8,13 @@ chunk (importing registry from a chunk would be circular).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from trendmachine_spark import oracle_sql as osql
-from trendmachine_spark.functions.scalars import urim, ymd, ymd_sql
-from trendmachine_spark.operators.fill import gap_fill
 from trendmachine_spark.operators.normalize import normalize_captures
 from trendmachine_spark.operators.rollup import daily_rollup
-from trendmachine_spark.operators.samples import periodic_samples
-from trendmachine_spark.operators.spine import densify, resolve_as_of
-from trendmachine_spark.operators.transitions import transition_matrix
-from trendmachine_spark.pipeline import daily_series
 from trendmachine_spark.sources.captures import events_as_captures
 from trendmachine_spark.sources.tables import load_table
 
