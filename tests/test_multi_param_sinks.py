@@ -81,9 +81,10 @@ def test_report_sink_roundtrip(spark, tmp_path):
 
 
 def test_report_sink_roundtrip_partitions_not_dividing_buckets(spark, tmp_path):
-    """At P = 12 url partitions (which does not divide 32) the layout
-    still round-trips without an exchange, within lcm(12, 32) = 96 files."""
-    _check_report_sink(spark, tmp_path, "12")
+    """At P = 3 url partitions (which does not divide 32; the url
+    exchange never exceeds the session's 4 task slots) the layout still
+    round-trips without an exchange, within lcm(3, 32) = 96 files."""
+    _check_report_sink(spark, tmp_path, "3")
 
 
 def _check_report_sink(spark, tmp_path, partitions):
@@ -94,12 +95,8 @@ def _check_report_sink(spark, tmp_path, partitions):
     from trendmachine_spark.operators.recurrence import _partition_count
 
     base = spark.conf.get("spark.sql.shuffle.partitions")
-    size_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    base_size = spark.conf.get(size_key)
     if partitions is not None:
-        # a 1-byte advisory size sizes the url exchange to shuffle.partitions
         spark.conf.set("spark.sql.shuffle.partitions", partitions)
-        spark.conf.set(size_key, "1")
     try:
         caps = captures_from_fixture(spark, FIXTURE_LINES_A, url="u0")
         for i in range(1, 12):
@@ -118,7 +115,6 @@ def _check_report_sink(spark, tmp_path, partitions):
         write = execs.apply(execs.size() - 1).physicalPlanDescription()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", base)
-        spark.conf.set(size_key, base_size)
     assert "InsertIntoHadoopFsRelationCommand" in write
     assert _exchanges(write) == _exchanges(
         report._jdf.queryExecution().executedPlan().toString())

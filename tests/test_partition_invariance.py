@@ -16,15 +16,9 @@ from __future__ import annotations
 
 import pytest
 
-from trendmachine_spark.operators.recurrence import _partition_count
 from trendmachine_spark.registry import QUERIES, clear_cache
 
 SF = "/root/testdata/sf0.001"
-
-SIZE_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-
-#: queries whose url exchange is sized by ``_partition_count``
-SIZED_BY_INPUT = {"resilience_daily_series"}
 
 INVARIANT_QUERIES = [
     "capture_normalize",
@@ -80,8 +74,6 @@ def _rows(spark, name, partitions):
     clear_cache()  # force rebuild: cached frames remember their shuffle
     try:
         df = QUERIES[name].builder(spark, SF)
-        if name in SIZED_BY_INPUT:
-            assert _partition_count(df) == partitions
         return sorted(map(tuple, df.collect()))
     finally:
         clear_cache()
@@ -90,16 +82,11 @@ def _rows(spark, name, partitions):
 @pytest.mark.parametrize("name", INVARIANT_QUERIES)
 def test_partition_invariance(spark, name):
     base = spark.conf.get("spark.sql.shuffle.partitions")
-    base_size = spark.conf.get(SIZE_KEY)
-    # a 1-byte advisory size sizes the recurrence's url exchange
-    # (_partition_count) to shuffle.partitions, as every other exchange
-    spark.conf.set(SIZE_KEY, "1")
     try:
         one = _rows(spark, name, 1)
         many = _rows(spark, name, 32)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", base)
-        spark.conf.set(SIZE_KEY, base_size)
     assert len(one) == len(many)
     assert one == many
 

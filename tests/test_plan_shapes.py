@@ -626,21 +626,22 @@ def test_dashboard_pane_reads_report_once(spark, pane):
     assert "rangepartitioning" not in final, final
 
 
-def test_url_exchange_sized_to_input(spark):
-    """The capture -> report url exchange is sized to its input: on the
-    sf0.001 captures, at shuffle.partitions = 8 (more than the session's
-    task slots), it runs on ``defaultParallelism`` tasks, and the
-    captures and the dense frame built from them get the same count; a
-    1-byte advisory size restores shuffle.partitions. The full report
-    has that one explicit-count exchange and no other; a one-URL build,
-    which skips it, gains none from the recurrence (its own repartition
-    would differ from the spine window's 8-way exchange)."""
+def test_url_exchange_runs_on_task_slots(spark):
+    """At shuffle.partitions = 8, more than the session's task slots,
+    the capture -> report url exchange runs on one task per slot: the
+    full report has that one explicit-count exchange and no other, and
+    a one-URL build, which skips it, has none. The scorer adds no
+    exchange of its own, so the registry's recurrence queries, over
+    densify's url-clustered output, shuffle the dense rows no second
+    time (a repartition to the slot count would not match the spine
+    window's 8-way exchange)."""
     import re
 
     from pyspark.sql import functions as F
 
     from trendmachine_spark.operators.recurrence import _partition_count
-    from trendmachine_spark.pipeline import daily_series, dense_daily
+    from trendmachine_spark.pipeline import daily_series
+    from trendmachine_spark.registry import QUERIES, clear_cache
     from trendmachine_spark.sources.captures import events_as_captures
 
     def by_num(plan: str) -> dict[str, int]:
@@ -650,27 +651,29 @@ def test_url_exchange_sized_to_input(spark):
             r"Exchange hashpartitioning\(url#\d+, (\d+)\), REPARTITION_BY_NUM, \[plan_id=(\d+)\]",
             plan)}
 
-    size_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    base, base_size = spark.conf.get("spark.sql.shuffle.partitions"), spark.conf.get(size_key)
+    def plan_of(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    base = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
+    clear_cache()  # cached frames remember their shuffle
     try:
         caps = events_as_captures(spark, SF)
         n = _partition_count(caps)
         assert n == min(8, spark.sparkContext.defaultParallelism)
-        assert _partition_count(dense_daily(caps, fill=2, policy="closest")) == n
-        spark.conf.set(size_key, "1")
-        assert _partition_count(caps) == 8
-        spark.conf.set(size_key, base_size)
 
         report = daily_series(caps, fill=2, policy="closest")
         report.collect()
-        final = report._jdf.queryExecution().executedPlan().toString()
-        assert list(by_num(final.split("== Initial Plan ==")[0]).values()) == [n], final
+        final = plan_of(report).split("== Initial Plan ==")[0]
+        assert list(by_num(final).values()) == [n], final
 
         url = caps.select("url").first()["url"]
         one = daily_series(caps.filter(F.col("url") == url), fill=2, policy="closest")
-        plan = one._jdf.queryExecution().executedPlan().toString()
-        assert not by_num(plan), plan
+        assert "REPARTITION_BY_NUM" not in plan_of(one), plan_of(one)
+
+        for name in ("resilience_daily_series", "multi_param_scoring"):
+            plan = plan_of(QUERIES[name].builder(spark, SF))
+            assert "REPARTITION_BY_NUM" not in plan, (name, plan)
     finally:
+        clear_cache()
         spark.conf.set("spark.sql.shuffle.partitions", base)
-        spark.conf.set(size_key, base_size)

@@ -15,7 +15,7 @@ import random
 
 import pytest
 
-from trendmachine_spark.operators.recurrence import _partition_count, score_daily_series
+from trendmachine_spark.operators.recurrence import score_daily_series
 from trendmachine_spark.params import DEFAULT_SIGPARAMS
 
 
@@ -59,7 +59,7 @@ def test_recurrence_matches_simulation(spark, seed):
     )
     got = {
         r["day"]: (r["resilience"], r["fixity"])
-        for r in score_daily_series(dense).collect()
+        for r in score_daily_series(dense.repartition("url")).collect()
     }
     want_res = simulate(specs, DEFAULT_SIGPARAMS, "~")
     want_fix = simulate(contents, DEFAULT_SIGPARAMS, "Unknown")
@@ -72,12 +72,10 @@ def test_recurrence_matches_simulation(spark, seed):
 @pytest.mark.parametrize("seed", [11])
 def test_bucketed_grouping_is_url_invariant(spark, seed):
     """r14: the recurrence is a streaming mapInPandas over
-    repartition(P, url) + sortWithinPartitions(url, day), resuming the
-    active run across Arrow batch boundaries. Pin: the output is
-    bit-identical for ANY partition count (the session's
-    shuffle.partitions, which sets the url exchange under a 1-byte
-    advisory partition size: 1 = every url in
-    one task, maximal boundary mixing; 64 = urls mostly alone) and for
+    url-clustered partitions + sortWithinPartitions(url, day), resuming
+    the active run across Arrow batch boundaries. Pin: the output is
+    bit-identical for ANY url partition count (1 = every url in one
+    task, maximal boundary mixing; 64 = urls mostly alone) and for
     ANY Arrow batch size (maxRecordsPerBatch=3 forces url runs AND key
     runs to straddle batch boundaries, so the
     carried [base, scale, x_next, h_last] state is exercised on every
@@ -105,18 +103,10 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
         )
 
     def scored(n):
-        # the url exchange takes the session's shuffle parallelism: a
-        # 1-byte advisory size sizes it to shuffle.partitions
-        spark.conf.set(part_key, str(n))
-        assert _partition_count(dense) == n
-        return rows_of(score_daily_series(dense))
+        return rows_of(score_daily_series(dense.repartition(n, "url")))
 
-    part_key = "spark.sql.shuffle.partitions"
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    size_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    prev_parts, prev_batch = spark.conf.get(part_key), spark.conf.get(batch_key)
-    prev_size = spark.conf.get(size_key)
-    spark.conf.set(size_key, "1")
+    prev_batch = spark.conf.get(batch_key)
     try:
         one = scored(1)
         many = scored(64)
@@ -126,8 +116,6 @@ def test_bucketed_grouping_is_url_invariant(spark, seed):
         tiny = scored(1)
         tiny_many = scored(5)
     finally:
-        spark.conf.set(part_key, prev_parts)
         spark.conf.set(batch_key, prev_batch)
-        spark.conf.set(size_key, prev_size)
     assert tiny == one  # bit-identical across batch splits
     assert tiny_many == one

@@ -28,24 +28,20 @@ tests). Measured, value-identical, sf0.1 / x10 best: per-url grouped
 map 0.96 / 3.77 s, bucketed grouped map 1.42 / 1.46 s, streaming
 0.43 / 0.95 s (OPTIMIZATION_r14.md:119-120).
 
-Parallelism comes from upstream, not from this operator's own
-``repartition(P, "url")``: when the child already reports
-``hashpartitioning(url, P)``, Spark drops the explicit one from the
-physical plan, and if the inherited exchange is an ENSURE_REQUIREMENTS
-one, AQE coalesces it by bytes — to ONE task on report-sized inputs.
-``pipeline.dense_daily`` therefore puts the explicit-count url exchange
-on the captures, which every url-keyed operator down to this map
-inherits and AQE never coalesces, and ``pipeline.daily_series`` scores
-its url-clustered output with :func:`_score_clustered`, without the
-repartition; :func:`score_daily_series`'s repartition only takes effect
-over a dense frame partitioned some other way.
+Parallelism comes from upstream: the scorer adds no exchange and maps
+the partitions it is given, which must hold each url whole. A url
+window clusters them, so ``densify``'s output qualifies. Its
+ENSURE_REQUIREMENTS url exchange is coalesced by AQE to few tasks (ONE
+on report-sized inputs), since AQE sizes by bytes and Python compute is
+invisible to it. ``pipeline.dense_daily`` therefore puts an
+explicit-count url exchange, which AQE never coalesces, on the
+captures; every url-keyed operator down to this map inherits it.
 
-P is sized to the input (:func:`_partition_count`): the session's
-default parallelism, or one task per advisory partition size of input
-bytes when that is more, capped at ``shuffle.partitions``. Each Python
-map task costs a fixed 70-85 ms of worker start before it sees a row
-(most of it ``importlib.invalidate_caches()`` re-reading the zips on the
-worker's path), so on a small archive 8 tasks cost more than 2.
+That count is :func:`_partition_count`: one task per task slot. Each
+Python map task pays a fixed 70-85 ms of worker start before its first
+row (most of it ``importlib.invalidate_caches()`` re-reading the zips on
+the worker's path), so tasks beyond the slots add cost without adding
+parallelism.
 
 Within a run the curve is vectorized with numpy (the reference loops
 day-at-a-time in Python; we only pay Python per *run*).
@@ -69,25 +65,21 @@ def _param_table(sigparams) -> dict[str, tuple[float, float, float]]:
 
 
 def _partition_count(df: DataFrame) -> int:
-    """Tasks for the url exchange of the capture -> report stage:
+    """Tasks for the explicit url exchange of the capture -> report
+    stage: ``min(shuffle.partitions, defaultParallelism)``, one per task
+    slot. Every task of the recurrence's Python map pays a fixed worker
+    start (70-85 ms) before its first row, so on a small archive
+    ``shuffle.partitions`` tasks over fewer slots mostly queue up to pay
+    it (at ``archive_batch``, 2 slots: a whole build took ~25 % longer
+    on 8 tasks than on 2). Over Spark Connect, which has no SparkContext,
+    the count is ``shuffle.partitions``.
 
-        min(shuffle.partitions,
-            max(defaultParallelism, ceil(input bytes / advisory size)))
+    Not measured: large inputs, where one task per slot means larger
+    sorts per task and no slack for a skewed url; at the sizes this
+    repository runs, the per-task start dominates.
 
-    where input bytes is the sum of ``sizeInBytes`` over the leaves of
-    ``df``'s analyzed plan (no optimizer pass; the captures and every
-    frame built from them get the same count) and the advisory size is
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. Each task of the
-    recurrence's Python map pays a fixed worker start (70-85 ms) before
-    its first row, so a small input runs on the session's task slots,
-    not on ``shuffle.partitions`` mostly idle tasks; inputs above
-    ``shuffle.partitions`` advisory sizes keep that count. Where the plan
-    is out of reach (Spark Connect), the count is ``shuffle.partitions``.
-
-    The count reaches the Python stage only through an explicit-count
-    (REPARTITION_BY_NUM) exchange, which AQE never coalesces:
-    ``pipeline.dense_daily`` puts that exchange on the captures. An
-    ENSURE_REQUIREMENTS url exchange gets AQE-coalesced to ~1 task on
+    AQE never coalesces this exchange (REPARTITION_BY_NUM), unlike an
+    ENSURE_REQUIREMENTS url exchange, which it coalesces to ~1 task on
     byte estimates, serializing the Python stage (measured: 1 task at
     sf0.1 AND x10 under the bench confs)."""
     spark = df.sparkSession
@@ -96,15 +88,9 @@ def _partition_count(df: DataFrame) -> int:
     except Exception:  # absent/non-integer setting or Connect quirk
         target = 8
     try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        size = sum(int(str(leaves.apply(i).stats().sizeInBytes()))
-                   for i in range(leaves.size()))
-        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-        slots = spark.sparkContext.defaultParallelism
-    except Exception:  # no JVM plan (Connect)
+        return min(target, spark.sparkContext.defaultParallelism)
+    except Exception:  # no SparkContext (Spark Connect)
         return target
-    return min(target, max(slots, -(-size // advisory)))
 
 
 def _make_runner(params: dict):
@@ -167,21 +153,14 @@ def score_daily_series(dense: DataFrame, sigparams=None) -> DataFrame:
     """Add ``resilience`` and ``fixity`` columns to the dense daily series.
 
     ``dense`` must contain url, day, specimen, content (one row per
-    calendar day per url). Rows are hash-partitioned by url into
-    ``_partition_count`` tasks (every url's series lands whole in one
-    partition) and scored by :func:`_score_clustered`. Any count yields
-    bit-identical results — pinned by the partition/batch-invariance
-    test — it only trades parallelism against per-task constants.
-    """
-    return _score_clustered(dense.repartition(_partition_count(dense), "url"), sigparams)
-
-
-def _score_clustered(dense: DataFrame, sigparams=None) -> DataFrame:
-    """:func:`score_daily_series` over a frame whose partitions already
-    hold each url whole (``pipeline.dense_daily``'s output, clustered by
-    its url window): both recurrences run in a single streamed scan,
-    sorted by (url, day) within the partition, by a mapInPandas that
-    resumes runs across Arrow batch boundaries (module docstring).
+    calendar day per url) and hold each url whole in one partition:
+    ``densify``'s output does (its url window clusters it); repartition
+    any other frame by url first. No exchange is added (module
+    docstring): any url clustering yields bit-identical results —
+    pinned by the partition/batch-invariance test — it only trades
+    parallelism against per-task constants. Both recurrences run in a
+    single streamed scan, sorted by (url, day) within the partition, by
+    a mapInPandas that resumes runs across Arrow batch boundaries.
 
     The whole dense row goes through the map and comes back scored —
     no join-back, so the dense subtree appears once in the plan; with
@@ -235,10 +214,11 @@ def score_daily_series_multi(dense: DataFrame, param_sets: dict) -> DataFrame:
     in ONE streamed scan (reference entry point 2 — slider re-tuning —
     generalized: the expensive upstream rollup/spine is reused, and a
     whole parameter sweep costs one pass; output gains a ``param_set``
-    key column). Same streaming shape as score_daily_series, with one
-    resumable run state per (param_set, recurrence); only (url, day,
-    specimen, content) cross the Python boundary and the scores
-    hash-join back, since every row leaves the map once per param set.
+    key column). Same streaming shape and url-clustered input as
+    score_daily_series, with one resumable run state per (param_set,
+    recurrence); only (url, day, specimen, content) cross the Python
+    boundary and the scores hash-join back, since every row leaves the
+    map once per param set.
     """
     tables = {name: _param_table(p) for name, p in param_sets.items()}
     known = {name: list(t) for name, t in tables.items()}
@@ -249,7 +229,7 @@ def score_daily_series_multi(dense: DataFrame, param_sets: dict) -> DataFrame:
         + [T.StructField("resilience", T.DoubleType()), T.StructField("fixity", T.DoubleType())]
     )
     # Driver-built runner closures: picklable by value (see
-    # _score_clustered) — workers never import this package.
+    # score_daily_series) — workers never import this package.
     runners = {name: _make_runner(t) for name, t in tables.items()}
 
     def stream(batches):
@@ -273,8 +253,7 @@ def score_daily_series_multi(dense: DataFrame, param_sets: dict) -> DataFrame:
             yield pd.concat(outs, ignore_index=True)
 
     scored = (
-        src.repartition(_partition_count(dense), "url")
-        .sortWithinPartitions("url", "day")
+        src.sortWithinPartitions("url", "day")
         .mapInPandas(stream, schema=out_schema)
     )
     return dense.join(

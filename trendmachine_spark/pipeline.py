@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from trendmachine_spark.functions.scalars import urim
 from trendmachine_spark.operators.fill import gap_fill
 from trendmachine_spark.operators.normalize import normalize_captures
-from trendmachine_spark.operators.recurrence import _partition_count, _score_clustered
+from trendmachine_spark.operators.recurrence import _partition_count, score_daily_series
 from trendmachine_spark.operators.rollup import daily_rollup
 from trendmachine_spark.operators.spine import densify, resolve_as_of
 from trendmachine_spark.params import REPORT_NAMES
@@ -38,12 +38,12 @@ def dense_daily(
 def _url_parallel(captures: DataFrame) -> DataFrame:
     """Hash-partition the captures by url into P tasks through one
     explicit-count exchange, which AQE never coalesces. P is
-    ``_partition_count``, sized to the captures' input bytes: the
-    session's task slots on a small archive, up to ``shuffle.partitions``
-    on a large one. Every operator after it is keyed by url first (the
-    revisit window, the rollup, the gap filler, the spine window, the
-    recurrence map, the url-bucket sink), so the whole capture -> report
-    stage inherits it and runs url-parallel with no other exchange.
+    ``_partition_count``: the session's task slots, at most
+    ``shuffle.partitions``. Every operator after it is keyed by url
+    first (the revisit window, the rollup, the gap filler, the spine
+    window, the recurrence map, the url-bucket sink), so the whole
+    capture -> report stage inherits it and runs url-parallel with no
+    other exchange.
 
     Left out when the plan filters ``url`` to fewer literals than that
     count (a one-URL dashboard build): the surplus tasks would be empty
@@ -116,12 +116,9 @@ def daily_series(
     """
     if require_nonempty:
         require_captures(captures)
-    # dense_daily's output is clustered by url (its spine window), so it
-    # is scored without score_daily_series' repartition: over a build
-    # that skips the url exchange, that repartition's count would differ
-    # from the window's and add an exchange
     dense = dense_daily(captures, fill=fill, policy=policy, as_of=as_of)
-    return report_projection(_score_clustered(dense, sigparams))
+    scored = score_daily_series(dense, sigparams)
+    return report_projection(scored)
 
 
 def report_projection(scored: DataFrame) -> DataFrame:

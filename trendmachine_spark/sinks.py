@@ -30,9 +30,9 @@ def write_daily_report(report: DataFrame, path: str, mode: str = "overwrite") ->
     Never partition by url itself: urls can be millions of directories.
 
     The write adds no exchange: the report arrives hash-partitioned by
-    url into P tasks (``_partition_count``, sized to the captures' input
-    bytes, or AQE-coalesced ranges of the session's url partitions on a
-    build that skips the url exchange), and each task writes one file per
+    url into P tasks (``_partition_count``, the session's task slots, or
+    AQE-coalesced ranges of the session's url partitions on a build that
+    skips the url exchange), and each task writes one file per
     bucket it holds, sorted by (url, Day). A url in bucket b sits in
     hash partition p only if b ≡ p (mod gcd(P, 32)), so the write makes
     at most lcm(P, 32) = 32·P/gcd(P, 32) files: ``ROLLUP_BUCKETS`` when
