@@ -1604,20 +1604,27 @@ def test_ann_multi_probe_improves_monotonically(spark):
             assert k2[q][i] >= c - 1e-12
 
 
-def test_brute_force_topk_zero_norm_vector_never_crowds_quota(spark):
+@pytest.mark.parametrize("scorer, kwargs", [
+    ("brute_force_topk", {}),
+    ("sq8_topk", {}),
+    ("ivfsq8_topk", {"n_cells": 1}),
+], ids=["brute_force_topk", "sq8_topk", "ivfsq8_topk"])
+def test_brute_force_topk_zero_norm_vector_never_crowds_quota(spark, scorer, kwargs):
     """A zero-norm corpus vector scores 0/0 = NaN, which crosses Arrow
     as NULL and sorts LAST in the final DESC window; the map-side
     top-k prune must bury it the same way, or (single-partition case)
     it would eat a slot of the task's k-quota and drop a real
-    candidate."""
-    from trendmachine_spark.extensions.similarity import brute_force_topk
+    candidate. The SQ8 scorers reconstruct the zero vector as 0, so it
+    scores 0/0 there too (one IVF cell keeps every vector a
+    candidate)."""
+    from trendmachine_spark.extensions import similarity
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 0.0]),
          (3, [0.5, 0.5]), (4, [0.8, 0.2])],
         "vec_id long, embedding array<float>",
     ).coalesce(1)
-    rows = brute_force_topk(emb, n_queries=1, k=2).collect()
+    rows = getattr(similarity, scorer)(emb, n_queries=1, k=2, **kwargs).collect()
     assert [(r["neighbor_id"], r["rank"]) for r in rows] == [(1, 1), (4, 2)]
 
 

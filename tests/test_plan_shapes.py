@@ -677,3 +677,42 @@ def test_url_exchange_runs_on_task_slots(spark):
     finally:
         clear_cache()
         spark.conf.set("spark.sql.shuffle.partitions", base)
+
+
+def test_store_refresh_dedups_on_the_url_exchange(spark, tmp_path, monkeypatch):
+    """A report-store refresh rebuilds its touched buckets from their
+    re-read captures, deduplicated on (url, seq, ts). The dedup rides
+    the rebuild's url exchange, which hash(url) already clusters: the
+    final plan of a two-bucket rebuild has no (url, seq, ts) exchange,
+    and one explicit-count url exchange, not one per repartition."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from trendmachine_spark import sinks
+    from trendmachine_spark.sources.captures import events_as_captures
+
+    caps = events_as_captures(spark, SF)
+    store, as_of, cut = str(tmp_path / "store"), "2024-01-30", "20240125000000"
+    sinks.init_report_store(caps.filter(F.col("ts") < cut), store, as_of)
+    delta = caps.filter(F.col("ts") >= cut).withColumn("_b", sinks._url_bucket())
+    two = sorted(r[0] for r in delta.select("_b").distinct().limit(2).collect())
+    delta = delta.filter(F.col("_b").isin(two)).drop("_b")
+
+    built = []
+    write = sinks.write_daily_report
+
+    def capture(report, path, mode="overwrite"):
+        built.append(report)
+        write(report, path, mode)
+
+    monkeypatch.setattr(sinks, "write_daily_report", capture)
+    assert sinks.refresh_report_store(spark, store, delta, as_of) == two
+    (report,) = built
+    report.collect()
+    final = report._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert not re.search(r"hashpartitioning\(url#\d+, seq#\d+L?, ts#\d+", final), final
+    # a reused exchange repeats its plan_id
+    by_num = set(re.findall(r"REPARTITION_BY_NUM, \[plan_id=(\d+)\]", final))
+    assert len(by_num) == 1, final

@@ -807,7 +807,8 @@ def test_probe_truncation_by_value_with_id_gaps(spark, tmp_path):
     answer queries {0,2,4,6,8} while the collect path's vid < 5
     filter answers {0,2,4} — the results must instead be identical."""
     from trendmachine_spark.extensions.similarity import (
-        _truncate_probe,
+        _resolve_queries,
+        brute_force_topk,
         load_probe_matrix,
     )
 
@@ -818,17 +819,20 @@ def test_probe_truncation_by_value_with_id_gaps(spark, tmp_path):
     gdf = spark.read.parquet(path)
 
     probe = load_probe_matrix(path, 10)
-    qids, Q, qn = _truncate_probe(probe, 5)
+    qids, Q, qn = _resolve_queries(None, 5, probe)
     assert qids.tolist() == [0, 2, 4]  # by value, not first-5-by-sort
 
-    with_probe = pq_topk(gdf, n_queries=5, k=3, probe=probe,
-                         seed_probe=load_probe_matrix(path, 16))
-    collect_path = pq_topk(gdf, n_queries=5, k=3,
-                           seed_probe=load_probe_matrix(path, 16))
-    a = sorted(map(tuple, with_probe.collect()))
-    b = sorted(map(tuple, collect_path.collect()))
-    assert a == b
-    assert {r[0] for r in a} == {0, 2, 4}
+    pq_seeds = load_probe_matrix(path, 16)
+    for with_probe, collect_path in (
+        (pq_topk(gdf, n_queries=5, k=3, probe=probe, seed_probe=pq_seeds),
+         pq_topk(gdf, n_queries=5, k=3, seed_probe=pq_seeds)),
+        (brute_force_topk(gdf, n_queries=5, k=3, probe=probe),
+         brute_force_topk(gdf, n_queries=5, k=3)),
+    ):
+        a = sorted(map(tuple, with_probe.collect()))
+        b = sorted(map(tuple, collect_path.collect()))
+        assert a == b
+        assert {r[0] for r in a} == {0, 2, 4}
 
 
 def test_sq8_rerank_full_expand_equals_brute_force(emb):

@@ -241,7 +241,7 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
 
 
 def semantic_keepers(emb: DataFrame, n_cells: int | None = 16,
-                     min_cosine: float = 0.3, id_col: str = "vec_id") -> DataFrame:
+                     min_cosine: float = 0.3) -> DataFrame:
     """End-to-end SemDeDup: semantic near-dup pairs -> connected
     components -> deterministic keeper per semantic cluster.
 
@@ -259,11 +259,10 @@ def semantic_keepers(emb: DataFrame, n_cells: int | None = 16,
     """
     from trendmachine_spark.extensions.similarity import semantic_dedup
 
-    pairs = semantic_dedup(emb, n_cells=n_cells, min_cosine=min_cosine,
-                           id_col=id_col)
+    pairs = semantic_dedup(emb, n_cells=n_cells, min_cosine=min_cosine)
     comps = connected_components(pairs.select("id_a", "id_b"))
     return comps.select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("vec_id"),
         F.col("cluster").alias("cluster_id"),
         (F.col("node") == F.col("cluster")).cast("long").alias("is_keeper"),
     )

@@ -15,6 +15,23 @@ Driver-mandated extension operators (SURVEY.md §2.6).
   ``n_flip`` lowest-margin single-bit flips (multi-probe LSH, round 5)
   — the 100 TB path (bucket count 2^planes; the candidate join is an
   equi-join on bucket, query side broadcast).
+* ivf_topk / pq_topk / sq8_topk / ivfsq8_topk / ivfpq_topk /
+  ivfpq_residual_topk / ivfpq_topk_from_index — the IVF (coarse cells),
+  PQ (product codes, ADC lookup tables) and SQ8 (int8 per dimension)
+  index families and their compositions; the ``*_rerank*`` paths add an
+  exact second stage over the compressed scan's candidates.
+
+Every top-k scorer shares one scan skeleton (REPOSE's distributed
+top-k: a local top-k per partition, then one global merge); only the
+per-batch scoring kernel is its own:
+
+* :func:`_resolve_queries` — the query set ``vid < n_queries``, from a
+  pre-resolved probe (clamped by value) or one driver collect;
+* :func:`_scan_topk` — the ``mapInPandas`` scan that scores each Arrow
+  batch with the kernel and keeps each task's per-query top-k in the
+  rank window's total order (map-side prune);
+* :func:`_rank_topk` — the final ``row_number`` over
+  (query_id; score DESC, neighbor_id) and ``rank <= k``.
 """
 
 from __future__ import annotations
@@ -39,14 +56,13 @@ class _ProbeMatrix(tuple):
     bound: int  # annotation only — instances set it explicitly
 
 
-def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """(id, qvec: array<bigint>, norm2: bigint) — exact integer geometry."""
     q = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.round(x.cast("double") * QUANT_SCALE, 0).cast("long"),
     )
-    out = emb.select(F.col(id_col).alias("vid"), q.alias("qvec"))
+    out = emb.select(F.col("vec_id").alias("vid"), q.alias("qvec"))
     norm2 = F.aggregate(
         F.transform(F.col("qvec"), lambda v: v * v),
         F.lit(0).cast("long"),
@@ -63,28 +79,124 @@ def _dot(a, b):
     )
 
 
-def _truncate_probe(probe, n_queries: int):
-    """Clamp a pre-resolved probe triple to ids < ``n_queries`` BY
-    VALUE (r12 ADVICE): a probe resolved at a larger id bound must not
-    silently answer extra queries, and the former positional
-    ``[:n_queries]`` slice assumed vec_ids contiguous from 0 — with
-    gaps among ids below the bound, position and value diverge and the
-    probe path would answer a different query set (first n by sort)
-    than the collect path's ``vid < n_queries`` filter. Returns
-    ``(qids, Q, qn)`` with ``qn = sqrt(norm2)``, all value-filtered."""
+def _resolve_queries(qv: DataFrame | None, n_queries: int, probe):
+    """The query set of every top-k scorer: ``(qids, Q, qn)`` for the
+    ids below ``n_queries`` (int64 ids and quantized vectors,
+    ``qn = sqrt(norm2)``), or ``None`` when there is none.
+
+    ``probe`` — a pre-resolved ``(qids, Q, norm2)`` from
+    :func:`load_probe_matrix` or :func:`probe_from_vectors` — is
+    clamped BY VALUE (r12 ADVICE): a probe resolved at a larger id
+    bound must not silently answer extra queries, and a positional
+    ``[:n_queries]`` slice would assume vec_ids contiguous from 0 —
+    with gaps among ids below the bound, position and value diverge
+    and the probe path would answer a different query set than the
+    collect path. Without a probe, the rows ``vid < n_queries`` of
+    ``qv`` are collected (one Spark job at construction time) and
+    sorted by id."""
     import numpy as np
 
-    qids, Q, n2 = probe
-    qids = np.asarray(qids, dtype=np.int64)
-    keep = qids < n_queries
-    qids = qids[keep]
-    Q = np.asarray(Q, dtype=np.int64)[keep]
-    qn = np.sqrt(np.asarray(n2, dtype=np.float64)[keep])
-    return qids, Q, qn
+    if probe is not None:
+        qids, Q, n2 = probe
+        qids = np.asarray(qids, dtype=np.int64)
+        keep = qids < n_queries
+        qids = qids[keep]
+        Q = np.asarray(Q, dtype=np.int64)[keep]
+        qn = np.sqrt(np.asarray(n2, dtype=np.float64)[keep])
+    else:
+        rows = sorted(qv.filter(F.col("vid") < n_queries).collect(),
+                      key=lambda r: r["vid"])
+        qids = np.array([r["vid"] for r in rows], dtype=np.int64)
+        Q = np.array([r["qvec"] for r in rows], dtype=np.int64)
+        qn = np.sqrt(np.array([r["norm2"] for r in rows], dtype=np.float64))
+    return (qids, Q, qn) if len(qids) else None
 
 
-def load_probe_matrix(parquet_path: str, n_queries: int,
-                      vec_col: str = "embedding", id_col: str = "vec_id"):
+def _empty_topk(spark, score_col: str) -> DataFrame:
+    return spark.createDataFrame(
+        [], f"query_id long, neighbor_id long, rank int, {score_col} double")
+
+
+def _rank_topk(scored: DataFrame, k: int, score_col: str) -> DataFrame:
+    """The final rank step of every top-k scorer: ``row_number`` over
+    (query_id; ``score_col`` DESC, neighbor_id) and ``rank <= k`` — the
+    one exchange of the scan, over task-pruned rows."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score_col)
+    )
+
+
+def _scan_topk(scan: DataFrame, kernel, qids, k: int,
+               score_col: str) -> DataFrame:
+    """Score ``scan`` with ``kernel`` in one ``mapInPandas`` pass, keep
+    each TASK's running top-k per query across its Arrow batches, and
+    rank (:func:`_rank_topk`): the map-side prune of REPOSE's
+    distributed top-k, shared by every scorer. The rank window then
+    receives n_tasks × n_queries × k rows instead of one per scored
+    pair — at 100 TB kilobytes instead of the corpus cross-joined with
+    the probe set. Top-k of per-task top-ks is exact.
+
+    ``kernel(pdf)`` — the index's own per-batch scoring, called on each
+    non-empty batch — returns ``(qi, nids, scores)``, in one of two
+    forms:
+
+    * ``qi is None``: a corpus scan; ``scores`` is an (n_queries, rows)
+      matrix of every query in ``qids`` against every row, and a
+      query's own id is dropped here;
+    * candidate rows (a join with the probe table): ``qi`` holds one
+      query position into ``qids`` per row — or, when ``qids`` is
+      None, the query id itself — with one score per row.
+
+    The task-local selection uses the rank window's exact total order —
+    score DESC, neighbor_id ASC — so results are bit-identical to the
+    unpruned form. A zero-norm vector scores 0/0 = NaN, which crosses
+    the Arrow boundary as NULL and sorts LAST under the window's DESC:
+    the local key buries it the same way (+inf on the negated key), or
+    a NaN could crowd a real candidate out of the task's k-quota."""
+
+    def run(batches):
+        import numpy as np
+        import pandas as pd
+
+        best = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            qi, nids, scores = kernel(pdf)
+            if qi is None:
+                groups = ((j, scores[j], nids != qids[j])
+                          for j in range(len(qids)))
+            else:
+                groups = ((j, scores, qi == j) for j in np.unique(qi))
+            for j, s, m in groups:
+                c0, n0 = best.get(j, (np.empty(0), np.empty(0, dtype=np.int64)))
+                c = np.concatenate([c0, s[m]])
+                n = np.concatenate([n0, nids[m]])
+                key = np.where(np.isnan(c), np.inf, -c)
+                order = np.lexsort((n, key))[:k]
+                best[j] = c[order], n[order]
+        js = np.fromiter(best, dtype=np.int64, count=len(best))
+        yield pd.DataFrame({
+            "query_id": np.repeat(js if qids is None else qids[js],
+                                  [len(n) for _, n in best.values()]),
+            "neighbor_id": np.concatenate(
+                [np.empty(0, dtype=np.int64)] + [n for _, n in best.values()]),
+            score_col: np.concatenate(
+                [np.empty(0)] + [c for c, _ in best.values()]),
+        })
+
+    scored = scan.mapInPandas(
+        run, f"query_id long, neighbor_id long, {score_col} double")
+    return _rank_topk(scored, k, score_col)
+
+
+def load_probe_matrix(parquet_path: str, n_queries: int):
     """Driver-side probe set for :func:`brute_force_topk`: read the
     ``id < n_queries`` rows straight from parquet (pyarrow pushes the
     filter to row groups — no Spark job, no corpus scan) and quantize
@@ -109,18 +221,15 @@ def load_probe_matrix(parquet_path: str, n_queries: int,
     ``None`` when no row matches (callers fall back to an empty
     result).
     """
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
     import pyarrow.dataset as ds
 
     tbl = ds.dataset(parquet_path).to_table(
-        columns=[id_col, vec_col],
-        filter=ds.field(id_col) < n_queries,
+        columns=["vec_id", "embedding"],
+        filter=ds.field("vec_id") < n_queries,
     )
     if tbl.num_rows == 0:
         return None
-    pm = probe_from_vectors(tbl[id_col].to_numpy(), tbl[vec_col].to_pylist())
+    pm = probe_from_vectors(tbl["vec_id"].to_numpy(), tbl["embedding"].to_pylist())
     pm.bound = n_queries
     return pm
 
@@ -133,7 +242,7 @@ def probe_from_vectors(ids, vecs) -> "_ProbeMatrix":
     the arrival-time path: a serving layer receives query vectors
     over the wire (a streaming micro-batch, an RPC) rather than
     reading them back from the corpus parquet. No ``bound`` is set —
-    consumers value-filter via ``_truncate_probe`` as always."""
+    consumers value-filter via ``_resolve_queries`` as always."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
@@ -154,7 +263,6 @@ def probe_from_vectors(ids, vecs) -> "_ProbeMatrix":
 
 
 def brute_force_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
-                     vec_col: str = "embedding", id_col: str = "vec_id",
                      probe=None) -> DataFrame:
     """Exact top-k quantized-cosine neighbors for the first ``n_queries`` ids.
 
@@ -165,19 +273,12 @@ def brute_force_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     hyperplane constant — and each corpus partition scores ALL queries
     in one Arrow-batched int64 matmul (``mapInPandas``). The corpus
     never shuffles before scoring, and each TASK emits only its own
-    per-query top-k (map-side prune, round 4): the final per-query
-    top-k window receives n_tasks × n_queries × k rows instead of
-    n_corpus × n_queries — at 100 TB that is the difference between
-    shuffling kilobytes and shuffling the corpus cross-joined with the
-    probe set. Top-k of per-task top-ks is exact, and the task-local
-    selection uses the SAME total order as the window
-    (cosine desc, neighbor_id asc), so results are bit-identical to
-    the unpruned form (pinned by the driver oracle). The matmul
-    replaced a Catalyst ``F.aggregate(zip_with(...))`` dot product,
-    which is interpreted per element (no codegen for higher-order
-    functions) and measured 2.65 s vs 0.4 s on the x10 corpus.
-    Values are bit-identical: dots/norms are exact int64, and the
-    cosine double divides the same exact integers in the same IEEE
+    per-query top-k (:func:`_scan_topk`'s map-side prune, round 4).
+    The matmul replaced a Catalyst ``F.aggregate(zip_with(...))`` dot
+    product, which is interpreted per element (no codegen for
+    higher-order functions) and measured 2.65 s vs 0.4 s on the x10
+    corpus. Values are bit-identical: dots/norms are exact int64, and
+    the cosine double divides the same exact integers in the same IEEE
     order as the SQL oracle.
 
     ``probe`` (round 7): pre-resolved ``(qids, Q, norm2)`` from
@@ -190,126 +291,44 @@ def brute_force_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     """
     import numpy as np
 
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    if probe is not None:
-        qids, Q, n2 = probe
-        qids = np.asarray(qids, dtype=np.int64)
-        Q = np.asarray(Q, dtype=np.int64)
-        qn = np.sqrt(np.asarray(n2, dtype=np.float64))
-    else:
-        qrows = qv.filter(F.col("vid") < n_queries).collect()
-        if not qrows:
-            return qv.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, rank int, cosine double")
-        qids = np.array([r["vid"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["qvec"] for r in qrows], dtype=np.int64)
-        qn = np.sqrt(np.array([r["norm2"] for r in qrows], dtype=np.float64))
+    qv = quantize_embeddings(emb)
+    qs = _resolve_queries(qv, n_queries, probe)
+    if qs is None:
+        return _empty_topk(qv.sparkSession, "cosine")
+    qids, Q, qn = qs
 
-    def score(batches):
-        import pandas as pd
+    def kernel(pdf):
+        C = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)   # (m, d)
+        cn = np.sqrt(pdf["norm2"].to_numpy(dtype=np.float64))
+        cos = (C @ Q.T) / (qn[None, :] * cn[:, None])           # exact int64 dots
+        return None, pdf["vid"].to_numpy(dtype=np.int64), cos.T
 
-        # accumulate the task's running top-k per query across batches
-        nq = len(qids)
-        best_cos = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        best_nid = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)   # (m, d)
-            dots = C @ Q.T                                          # exact int64
-            cn = np.sqrt(pdf["norm2"].to_numpy(dtype=np.float64))
-            cos = dots / (qn[None, :] * cn[:, None])                # (m, nq)
-            nids = pdf["vid"].to_numpy(dtype=np.int64)
-            for j in range(nq):
-                keep = nids != qids[j]
-                c = np.concatenate([best_cos[j], cos[keep, j]])
-                n = np.concatenate([best_nid[j], nids[keep]])
-                # same total order as the final window: cosine desc,
-                # neighbor_id asc. A zero-norm vector scores 0/0 = NaN,
-                # which crosses the Arrow boundary as NULL and sorts
-                # LAST under the window's DESC — the task-local key
-                # must bury it the same way (+inf on the negated key)
-                # or a NaN could crowd a real candidate out of the
-                # task's k-quota (verified empirically: NULLS LAST).
-                key = np.where(np.isnan(c), np.inf, -c)
-                order = np.lexsort((n, key))[:k]
-                best_cos[j], best_nid[j] = c[order], n[order]
-        rows = {
-            "query_id": np.repeat(qids, [len(b) for b in best_nid]),
-            "neighbor_id": np.concatenate(best_nid) if best_nid else np.empty(0, dtype=np.int64),
-            "cosine": np.concatenate(best_cos) if best_cos else np.empty(0),
-        }
-        yield pd.DataFrame(rows)
-
-    scored = qv.mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double")
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _scan_topk(qv, kernel, qids, k, "cosine")
 
 
 def _topk_scored(joined: DataFrame, k: int) -> DataFrame:
-    """(query_id, neighbor_id, cosine) from joined candidate rows
-    (columns: query_id, neighbor_id, q, qn, c, cn) via an Arrow-batched
-    int64 einsum — replacing the per-row interpreted HOF dot, the same
-    vectorization win as ``brute_force_topk``'s matmul (round 4:
-    ``similarity_ann_lsh`` 4.45 s -> sub-second at ×10).
-
-    Each task also prunes to its local per-query top-k in the final
-    window's exact total order (cosine desc with NaN-as-NULL buried
-    last, neighbor_id asc), so the rank window's exchange is bounded by
-    n_tasks × n_queries × k rows. Values are bit-identical to the
-    Catalyst formulation: exact int64 dots, correctly-rounded sqrts,
-    same IEEE division order.
+    """Ranked top-k (query_id, neighbor_id, rank, cosine) from joined
+    candidate rows (columns: query_id, neighbor_id, q, qn, c, cn) via an
+    Arrow-batched int64 einsum — replacing the per-row interpreted HOF
+    dot, the same vectorization win as ``brute_force_topk``'s matmul
+    (round 4: ``similarity_ann_lsh`` 4.45 s -> sub-second at ×10).
+    Values are bit-identical to the Catalyst formulation: exact int64
+    dots, correctly-rounded sqrts, same IEEE division order.
     """
+    import numpy as np
 
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        best: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            C = np.stack(pdf["c"].to_numpy()).astype(np.int64)
-            dots = np.einsum("ij,ij->i", Q, C)
-            cos = dots / (
-                np.sqrt(pdf["qn"].to_numpy(dtype=np.float64))
-                * np.sqrt(pdf["cn"].to_numpy(dtype=np.float64))
-            )
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            for q in np.unique(qid):
-                m = qid == q
-                pc, pn = best.get(q, (np.empty(0), np.empty(0, dtype=np.int64)))
-                c2 = np.concatenate([pc, cos[m]])
-                n2 = np.concatenate([pn, nid[m]])
-                key = np.where(np.isnan(c2), np.inf, -c2)
-                order = np.lexsort((n2, key))[:k]
-                best[q] = (c2[order], n2[order])
-        qs, ns, cs = [], [], []
-        for q, (c2, n2) in best.items():
-            qs += [q] * len(n2)
-            ns += list(n2)
-            cs += list(c2)
-        import pandas as pd
-
-        yield pd.DataFrame(
-            {
-                "query_id": pd.Series(qs, dtype="int64"),
-                "neighbor_id": pd.Series(ns, dtype="int64"),
-                "cosine": pd.Series(cs, dtype="float64"),
-            }
+    def kernel(pdf):
+        Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+        C = np.stack(pdf["c"].to_numpy()).astype(np.int64)
+        cos = np.einsum("ij,ij->i", Q, C) / (
+            np.sqrt(pdf["qn"].to_numpy(dtype=np.float64))
+            * np.sqrt(pdf["cn"].to_numpy(dtype=np.float64))
         )
+        return (pdf["query_id"].to_numpy(dtype=np.int64),
+                pdf["neighbor_id"].to_numpy(dtype=np.int64), cos)
 
-    return joined.select("query_id", "neighbor_id", "q", "qn", "c", "cn").mapInPandas(
-        run, "query_id long, neighbor_id long, cosine double"
-    )
+    return _scan_topk(joined.select("query_id", "neighbor_id", "q", "qn", "c", "cn"),
+                      kernel, None, k, "cosine")
 
 
 def srp_sign(plane: int, dim: int) -> int:
@@ -430,8 +449,7 @@ def srp_buckets(qv: DataFrame, n_planes: int = 8) -> DataFrame:
 
 
 def ann_topk(emb: DataFrame, n_queries: int = 10, k: int = 5, n_planes: int = 8,
-             n_flip: int = 0,
-             vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+             n_flip: int = 0) -> DataFrame:
     """Approximate top-k: exact cosine ranking restricted to the query's
     SRP probe buckets (own bucket + ``n_flip`` lowest-margin single-bit
     flips — multi-probe LSH; ``n_flip=0`` is single-probe). Recall < 1
@@ -442,7 +460,7 @@ def ann_topk(emb: DataFrame, n_queries: int = 10, k: int = 5, n_planes: int = 8,
     (query, neighbor) pair can arise from at most one joined row — the
     map-side top-k prune and final rank window stay duplicate-free.
     """
-    qv = quantize_embeddings(emb, vec_col, id_col)
+    qv = quantize_embeddings(emb)
     buckets = srp_buckets(qv, n_planes)
     qonly = qv.filter(F.col("vid") < n_queries)
     probes = srp_probe_buckets(qonly, n_planes, n_flip)
@@ -459,14 +477,7 @@ def ann_topk(emb: DataFrame, n_queries: int = 10, k: int = 5, n_planes: int = 8,
         .join(cands, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    scored = _topk_scored(joined, k)
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _topk_scored(joined, k)
 
 
 def _grouped_gram_pairs(grouped: DataFrame, group_col: str, min_cosine: float,
@@ -528,8 +539,7 @@ def _grouped_gram_pairs(grouped: DataFrame, group_col: str, min_cosine: float,
     return grouped.groupBy(group_col).applyInPandas(score, schema)
 
 
-def embedding_near_dup(emb: DataFrame, min_cosine: float = 0.95,
-                       vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def embedding_near_dup(emb: DataFrame, min_cosine: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= t).
 
     Exact quantized-cosine over all pairs — the oracle-checkable
@@ -537,7 +547,7 @@ def embedding_near_dup(emb: DataFrame, min_cosine: float = 0.95,
     over SRP-bucket candidates (srp_buckets equi-join) instead of the
     full cross product; see ann_topk for the bucketed pattern.
     """
-    qv = quantize_embeddings(emb, vec_col, id_col)
+    qv = quantize_embeddings(emb)
     a = qv.select(F.col("vid").alias("id_a"), F.col("qvec").alias("qa"), F.col("norm2").alias("na"))
     b = qv.select(F.col("vid").alias("id_b"), F.col("qvec").alias("qb"), F.col("norm2").alias("nb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
@@ -550,8 +560,7 @@ def embedding_near_dup(emb: DataFrame, min_cosine: float = 0.95,
 
 
 def embedding_near_dup_bucketed(emb: DataFrame, min_cosine: float = 0.95,
-                                n_planes: int = 8, vec_col: str = "embedding",
-                                id_col: str = "vec_id") -> DataFrame:
+                                n_planes: int = 8) -> DataFrame:
     """Embedding-cosine near-dup, SRP-bucketed — the production path.
 
     Candidate pairs come from an EQUI-join on the SRP bucket (2^n_planes
@@ -568,7 +577,7 @@ def embedding_near_dup_bucketed(emb: DataFrame, min_cosine: float = 0.95,
 
     Shape (round-3 rewrite, ONE exchange): bucket bits come from a
     ``mapInPandas`` matmul against the literal ±1 hyperplane matrix
-    (the signs are md5-derived constants, so ``V @ S.T > 0`` is the
+    (the signs are md5-derived constants, so ``V @ S > 0`` is the
     exact integer projection — no per-row interpreted fold, no
     vid self-join to re-attach buckets), then the shared
     :func:`_grouped_gram_pairs` scores each bucket's pairs as a
@@ -579,14 +588,12 @@ def embedding_near_dup_bucketed(emb: DataFrame, min_cosine: float = 0.95,
     """
     import numpy as np
 
-    qv = quantize_embeddings(emb, vec_col, id_col)
+    qv = quantize_embeddings(emb)
     dim_row = qv.select(F.size("qvec").alias("d")).first()
     if dim_row is None or dim_row["d"] is None:
         return qv.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double")
-    dim = dim_row["d"]
-    S = np.array([[srp_sign(p, i) for i in range(dim)]
-                  for p in range(n_planes)], dtype=np.int64)
+    S = _srp_matrix(dim_row["d"], n_planes)  # (d, planes)
     weights = np.array([1 << (n_planes - 1 - p) for p in range(n_planes)],
                        dtype=np.int64)
 
@@ -597,7 +604,7 @@ def embedding_near_dup_bucketed(emb: DataFrame, min_cosine: float = 0.95,
             if not len(pdf):
                 continue
             V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            bits = (V @ S.T) > 0                        # (m, planes) exact ints
+            bits = (V @ S) > 0                          # (m, planes) exact ints
             codes = (bits.astype(np.int64) * weights[None, :]).sum(axis=1)
             out = pdf[["vid", "qvec", "norm2"]].copy()
             # same bucket STRING as srp_buckets: '1'/'0' per plane, MSB first
@@ -610,12 +617,27 @@ def embedding_near_dup_bucketed(emb: DataFrame, min_cosine: float = 0.95,
                                group_type="string").select("id_a", "id_b", "cosine")
 
 
+def _cell_indexer(C, cn):
+    """Driver-side factory of IVF cell assignment against the centroid
+    matrix ``C`` with norms ``cn``: the returned function maps int64
+    rows to the position of their cell, argmax affinity
+    ``dot(v, c) / |c|`` (exact int64 dots, one IEEE divide). ``argmax``
+    returns the FIRST max = the lowest cell, the same tie-break as the
+    SQL mirror's ``ORDER BY _aff DESC, cell``. Nested, so a worker
+    closure that captures it ships it by value and never imports this
+    package."""
+
+    def cell_index(V):
+        return ((V @ C.T) / cn[None, :]).argmax(axis=1)
+
+    return cell_index
+
+
 def _assign_cells(qv: DataFrame, cells, C, cn) -> DataFrame:
-    """argmax-affinity cell assignment against a literal centroid
-    matrix — one Arrow-batched matmul per partition, zero shuffles.
-    ``np.argmax`` returns the FIRST max index = the lowest cell, the
-    same tie-break as the SQL mirror's ``ORDER BY _aff DESC, cell``."""
-    import numpy as np  # noqa: F401  (closure capture for workers)
+    """argmax-affinity cell assignment (:func:`_cell_indexer`) against a
+    literal centroid matrix — one Arrow-batched matmul per partition,
+    zero shuffles."""
+    cell_index = _cell_indexer(C, cn)
 
     def assign(batches):
         import numpy as np
@@ -624,9 +646,8 @@ def _assign_cells(qv: DataFrame, cells, C, cn) -> DataFrame:
             if not len(pdf):
                 continue
             V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)   # (m, d)
-            aff = (V @ C.T) / cn[None, :]                           # (m, c)
             pdf = pdf[["vid", "qvec", "norm2"]].copy()
-            pdf["cell"] = cells[np.argmax(aff, axis=1)]
+            pdf["cell"] = cells[cell_index(V)]
             yield pdf
 
     return qv.mapInPandas(
@@ -658,13 +679,10 @@ def ivf_centroids(qv: DataFrame, n_cells: int = 16, refine: int = 1):
     """
     import numpy as np
 
-    crows = sorted(qv.filter(F.col("vid") < n_cells).collect(),
-                   key=lambda r: r["vid"])
-    if not crows:
+    seeds = _resolve_queries(qv, n_cells, None)
+    if seeds is None:
         return None
-    cells = np.array([r["vid"] for r in crows], dtype=np.int64)
-    C = np.array([r["qvec"] for r in crows], dtype=np.int64)        # (c, d)
-    cn = np.sqrt(np.array([r["norm2"] for r in crows], dtype=np.float64))
+    cells, C, cn = seeds                                            # C: (c, d)
     dim = C.shape[1]
     cell_index = {int(c): i for i, c in enumerate(cells)}
 
@@ -742,18 +760,16 @@ def ivf_assign(qv: DataFrame, n_cells: int = 16, refine: int = 1) -> DataFrame:
 
 
 def ivf_topk(emb: DataFrame, n_queries: int = 10, k: int = 5, n_cells: int = 16,
-             n_probe: int = 1, refine: int = 1,
-             vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+             n_probe: int = 1, refine: int = 1) -> DataFrame:
     """IVF approximate top-k: exact cosine ranking within the query's
     ``n_probe`` best cells. The 100 TB path partitions the corpus by
     cell; a query touches n_probe/n_cells of the data. Probe ranking
     uses the SAME (Lloyd-refined) centroids as the assignment."""
-    qv = quantize_embeddings(emb, vec_col, id_col)
+    qv = quantize_embeddings(emb)
     spark = qv.sparkSession
     cent = ivf_centroids(qv, n_cells, refine)
     if cent is None:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double")
+        return _empty_topk(spark, "cosine")
     cells, Cm, cnm = cent
     assigned = _assign_cells(qv, cells, Cm, cnm)
     cents = spark.createDataFrame(
@@ -784,13 +800,7 @@ def ivf_topk(emb: DataFrame, n_queries: int = 10, k: int = 5, n_cells: int = 16,
         .join(cands, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    scored = _topk_scored(joined, k)
-    wk = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _topk_scored(joined, k)
 
 
 def semantic_cells_for(n: int) -> int:
@@ -820,8 +830,7 @@ def semantic_cells_for(n: int) -> int:
 
 
 def semantic_dedup(emb: DataFrame, n_cells: int | None = 16,
-                   min_cosine: float = 0.3,
-                   vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+                   min_cosine: float = 0.3) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs: IVF-cell partition, then
     exact within-cell cosine (Abbas et al. 2023, "SemDeDup: Data-
     efficient learning at web-scale through semantic deduplication").
@@ -864,7 +873,7 @@ def semantic_dedup(emb: DataFrame, n_cells: int | None = 16,
     means the centroid set no longer partitions the space — raise
     n_cells (re-centroid), the same remedy the paper applies.
     """
-    qv = quantize_embeddings(emb, vec_col, id_col)
+    qv = quantize_embeddings(emb)
     if n_cells is None:
         n_cells = semantic_cells_for(qv.count())
     assigned = ivf_assign(qv, n_cells)
@@ -872,7 +881,6 @@ def semantic_dedup(emb: DataFrame, n_cells: int | None = 16,
 
 
 def embedding_outliers(emb: DataFrame, label_col: str = "label",
-                       vec_col: str = "embedding", id_col: str = "vec_id",
                        threshold: float = 0.0) -> DataFrame:
     """Cosine of every vector to its label's (unnormalized) centroid —
     the mislabeled/outlier detector a labeled embedding corpus runs
@@ -893,13 +901,13 @@ def embedding_outliers(emb: DataFrame, label_col: str = "label",
     broadcast join + one per-vector agg, no corpus self-join anywhere.
     """
     q = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.round(x.cast("double") * QUANT_SCALE, 0).cast("long"),
     )
     e = emb.select(
-        F.col(id_col), F.col(label_col).alias("_lbl"), q.alias("_q")
+        F.col("vec_id"), F.col(label_col).alias("_lbl"), q.alias("_q")
     ).select(
-        id_col, "_lbl", F.posexplode("_q").alias("_pos", "_v")
+        "vec_id", "_lbl", F.posexplode("_q").alias("_pos", "_v")
     )
     # the label norm rides the centroid table as a window column so the
     # exploded corpus is scanned exactly twice (centroid agg + dot agg),
@@ -917,7 +925,7 @@ def embedding_outliers(emb: DataFrame, label_col: str = "label",
     )
     dots = (
         e.join(F.broadcast(cent), ["_lbl", "_pos"])
-        .groupBy(id_col, "_lbl", "_c2")
+        .groupBy("vec_id", "_lbl", "_c2")
         .agg(
             F.sum(F.col("_v") * F.col("_s")).alias("_dot"),
             F.sum(F.col("_v") * F.col("_v")).alias("_n2"),
@@ -927,7 +935,7 @@ def embedding_outliers(emb: DataFrame, label_col: str = "label",
         F.sqrt(F.col("_n2").cast("double")) * F.sqrt(F.col("_c2").cast("double"))
     )
     return dots.select(
-        id_col,
+        "vec_id",
         F.col("_lbl").alias("label"),
         cos.alias("cos_centroid"),
         (cos < threshold).cast("long").alias("is_outlier"),
@@ -989,17 +997,10 @@ def pq_codebooks(qv: DataFrame, n_sub: int = PQ_SUBSPACES,
             raise ValueError(
                 f"seed_probe resolved at id bound {bound} < n_codes="
                 f"{n_codes}: probe does not cover the seed set")
-        sids, SQ, _ = seed_probe
-        keep = np.asarray(sids) < n_codes
-        S = np.asarray(SQ, dtype=np.int64)[keep]
-        if not len(S):
-            return None
-    else:
-        crows = sorted(qv.filter(F.col("vid") < n_codes).collect(),
-                       key=lambda r: r["vid"])
-        if not crows:
-            return None
-        S = np.array([r["qvec"] for r in crows], dtype=np.int64)    # (K', d)
+    seeds = _resolve_queries(qv, n_codes, seed_probe)
+    if seeds is None:
+        return None
+    S = seeds[1]                                                    # (K', d)
     dim = S.shape[1]
     if dim % n_sub:
         raise ValueError(
@@ -1100,6 +1101,15 @@ def _pq_assign(V, cb):
     return codes
 
 
+def _adc_lut(Q, cb):
+    """ADC lookup table ``(nq, M, K)``: the exact int64 dot of each
+    query's m-th subvector with codeword j of subspace m."""
+    import numpy as np
+
+    n_sub, _, ds = cb.shape
+    return np.einsum("qmd,mkd->qmk", Q.reshape(len(Q), n_sub, ds), cb)
+
+
 def pq_encode(qv: DataFrame, cb) -> DataFrame:
     """Compressed corpus representation ``(vid, codes array<int>,
     rnorm2 bigint)`` — ``rnorm2`` is the squared norm of the
@@ -1138,8 +1148,7 @@ def pq_encode(qv: DataFrame, cb) -> DataFrame:
 
 def pq_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
             n_sub: int = PQ_SUBSPACES, n_codes: int = PQ_CODES,
-            refine: int = 1, vec_col: str = "embedding",
-            id_col: str = "vec_id", probe=None, seed_probe=None) -> DataFrame:
+            refine: int = 1, probe=None, seed_probe=None) -> DataFrame:
     """PQ/ADC approximate top-k: queries stay EXACT, the corpus is
     scanned in its compressed code form, and each candidate's score is
     the asymmetric-distance-computation dot — the query's exact
@@ -1159,8 +1168,8 @@ def pq_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     from the broadcast query matrix + codebooks: scoring is n_sub
     table gathers per candidate, NO per-candidate dot product. Tasks
     emit only their per-query top-k in the final window's exact total
-    order (map-side prune, same as brute_force_topk), so the rank
-    exchange is n_tasks * n_queries * k rows. Zero corpus shuffles.
+    order (:func:`_scan_topk`'s map-side prune), so the rank exchange
+    is n_tasks * n_queries * k rows. Zero corpus shuffles.
 
     ``probe``: pre-resolved ``(qids, Q, norm2)`` from
     :func:`load_probe_matrix` — skips the construction-time collect
@@ -1169,77 +1178,24 @@ def pq_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     """
     import numpy as np
 
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    spark = qv.sparkSession
-    empty_schema = (
-        "query_id long, neighbor_id long, rank int, adc_cosine double")
+    qv = quantize_embeddings(emb)
     cb = pq_codebooks(qv, n_sub, n_codes, refine, seed_probe=seed_probe)
-    if cb is None:
-        return spark.createDataFrame([], empty_schema)
-    if probe is not None:
-        qids, Q, qn = _truncate_probe(probe, n_queries)
-        if not len(qids):
-            return spark.createDataFrame([], empty_schema)
-    else:
-        qrows = sorted(qv.filter(F.col("vid") < n_queries).collect(),
-                       key=lambda r: r["vid"])
-        if not qrows:
-            return spark.createDataFrame([], empty_schema)
-        qids = np.array([r["vid"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["qvec"] for r in qrows], dtype=np.int64)
-        qn = np.sqrt(np.array([r["norm2"] for r in qrows], dtype=np.float64))
-    nq = len(qids)
-    n_sub_, _, ds = cb.shape
-    # ADC lookup table: exact int64 dots, (nq, M, K)
-    lut = np.einsum("qmd,mkd->qmk", Q.reshape(nq, n_sub_, ds), cb)
-    codes_df = pq_encode(qv, cb)
+    qs = None if cb is None else _resolve_queries(qv, n_queries, probe)
+    if qs is None:
+        return _empty_topk(qv.sparkSession, "adc_cosine")
+    qids, Q, qn = qs
+    lut = _adc_lut(Q, cb)
 
-    def score(batches):
-        import numpy as np
-        import pandas as pd
+    def kernel(pdf):
+        Cd = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, M)
+        adc = np.zeros((len(qids), len(Cd)), dtype=np.int64)
+        for m in range(lut.shape[1]):
+            adc += lut[:, m, Cd[:, m]]
+        rn = np.sqrt(pdf["rnorm2"].to_numpy(dtype=np.float64))
+        return (None, pdf["vid"].to_numpy(dtype=np.int64),
+                adc / (qn[:, None] * rn[None, :]))                # (nq, n)
 
-        best_cos = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        best_nid = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Cd = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, M)
-            adc = np.zeros((nq, len(Cd)), dtype=np.int64)
-            for m in range(n_sub_):
-                adc += lut[:, m, Cd[:, m]]
-            rn = np.sqrt(pdf["rnorm2"].to_numpy(dtype=np.float64))
-            cos = adc / (qn[:, None] * rn[None, :])                  # (nq, n)
-            nids = pdf["vid"].to_numpy(dtype=np.int64)
-            for j in range(nq):
-                keep = nids != qids[j]
-                c = np.concatenate([best_cos[j], cos[j, keep]])
-                n = np.concatenate([best_nid[j], nids[keep]])
-                # same total order as the final window (adc_cosine
-                # desc NULLS LAST, neighbor_id asc): bury NaN
-                key = np.where(np.isnan(c), np.inf, -c)
-                order = np.lexsort((n, key))[:k]
-                best_cos[j], best_nid[j] = c[order], n[order]
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, [len(b) for b in best_nid]),
-                "neighbor_id": (np.concatenate(best_nid)
-                                if best_nid else np.empty(0, dtype=np.int64)),
-                "adc_cosine": (np.concatenate(best_cos)
-                               if best_cos else np.empty(0)),
-            }
-        )
-
-    scored = codes_df.mapInPandas(
-        score, "query_id long, neighbor_id long, adc_cosine double")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_cosine")
-    )
+    return _scan_topk(pq_encode(qv, cb), kernel, qids, k, "adc_cosine")
 
 
 def sq8_scales(qv: DataFrame):
@@ -1285,8 +1241,23 @@ def sq8_scales(qv: DataFrame):
     return np.maximum(1, (amax + 126) // 127)
 
 
+def _sq8_quantizer(S):
+    """Driver-side factory of the SQ8 quantizer under per-dimension
+    scales ``S``: the returned function maps int64 rows to their codes
+    ``clamp(trunc(v_d / s_d), ±127)``, truncating toward ZERO as
+    ``sign(v) * (|v| // s)`` — numpy's floor-divide floors toward -inf,
+    DuckDB's ``//`` truncates; the symmetric form agrees on both.
+    Nested, so a worker closure ships it by value."""
+
+    def codes(V):
+        import numpy as np
+
+        return np.clip(np.sign(V) * (np.abs(V) // S[None, :]), -127, 127)
+
+    return codes
+
+
 def sq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
-             vec_col: str = "embedding", id_col: str = "vec_id",
              probe=None, corpus: DataFrame | None = None) -> DataFrame:
     """Scalar-quantization (SQ8) approximate top-k — the FAISS ``SQ8``
     index family: each dimension quantizes independently to an int8
@@ -1309,10 +1280,9 @@ def sq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     SCALE: the scale vector ships as a literal (dim ints); encode +
     scoring fuse into ONE zero-shuffle Arrow-batched pass (quantize,
     reconstruct, one (n, dim) x (dim, nq) matmul), each task emitting
-    only its per-query top-k in the final window's exact total order —
-    the same map-side-prune shape as brute_force_topk, ONE k-bounded
-    rank exchange. At rest the index is dim int8 codes + one bigint
-    per vector.
+    only its per-query top-k in the final window's exact total order
+    (:func:`_scan_topk`), ONE k-bounded rank exchange. At rest the
+    index is dim int8 codes + one bigint per vector.
 
     ``corpus``: score against THIS DataFrame instead of ``emb`` while
     ``emb`` still provides scale training and the query set — the
@@ -1321,82 +1291,29 @@ def sq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     predicate selects."""
     import numpy as np
 
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    spark = qv.sparkSession
-    empty_schema = (
-        "query_id long, neighbor_id long, rank int, sq_cosine double")
+    qv = quantize_embeddings(emb)
     S = sq8_scales(qv)
-    if S is None:
-        return spark.createDataFrame([], empty_schema)
-    if probe is not None:
-        qids, Q, qn = _truncate_probe(probe, n_queries)
-        if not len(qids):
-            return spark.createDataFrame([], empty_schema)
-    else:
-        qrows = sorted(qv.filter(F.col("vid") < n_queries).collect(),
-                       key=lambda r: r["vid"])
-        if not qrows:
-            return spark.createDataFrame([], empty_schema)
-        qids = np.array([r["vid"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["qvec"] for r in qrows], dtype=np.int64)
-        qn = np.sqrt(np.array([r["norm2"] for r in qrows],
-                              dtype=np.float64))
-    nq = len(qids)
+    qs = None if S is None else _resolve_queries(qv, n_queries, probe)
+    if qs is None:
+        return _empty_topk(qv.sparkSession, "sq_cosine")
+    qids, Q, qn = qs
+    sq8 = _sq8_quantizer(S)
 
-    def score(batches):
-        import numpy as np
-        import pandas as pd
+    def kernel(pdf):
+        V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
+        R = sq8(V) * S[None, :]                      # exact recon
+        rn = np.sqrt((R * R).sum(axis=1).astype(np.float64))
+        dots = R @ Q.T                               # exact int64
+        return (None, pdf["vid"].to_numpy(dtype=np.int64),
+                dots.T / (qn[:, None] * rn[None, :]))
 
-        best_cos = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        best_nid = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            C = np.sign(V) * (np.abs(V) // S[None, :])   # trunc toward 0
-            R = np.clip(C, -127, 127) * S[None, :]       # exact recon
-            rn = np.sqrt((R * R).sum(axis=1).astype(np.float64))
-            dots = R @ Q.T                               # exact int64
-            cos = dots.T / (qn[:, None] * rn[None, :])
-            nids = pdf["vid"].to_numpy(dtype=np.int64)
-            for j in range(nq):
-                keep = nids != qids[j]
-                c = np.concatenate([best_cos[j], cos[j, keep]])
-                n = np.concatenate([best_nid[j], nids[keep]])
-                key = np.where(np.isnan(c), np.inf, -c)
-                order = np.lexsort((n, key))[:k]
-                best_cos[j], best_nid[j] = c[order], n[order]
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, [len(b) for b in best_nid]),
-                "neighbor_id": (np.concatenate(best_nid)
-                                if best_nid else np.empty(0, dtype=np.int64)),
-                "sq_cosine": (np.concatenate(best_cos)
-                              if best_cos else np.empty(0)),
-            }
-        )
-
-    import pandas as pd  # noqa: F401  (closure capture)
-
-    scan = (qv if corpus is None
-            else quantize_embeddings(corpus, vec_col, id_col))
-    scored = scan.mapInPandas(
-        score, "query_id long, neighbor_id long, sq_cosine double")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sq_cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sq_cosine")
-    )
+    scan = qv if corpus is None else quantize_embeddings(corpus)
+    return _scan_topk(scan, kernel, qids, k, "sq_cosine")
 
 
 def sq8_topk_filtered(emb: DataFrame, n_queries: int = 10, k: int = 5,
                       label_value: int = 3, label_col: str = "label",
                       mode: str = "pre", expand: int = 4,
-                      vec_col: str = "embedding", id_col: str = "vec_id",
                       probe=None) -> DataFrame:
     """Filtered ANN serving (round 14): top-k among corpus vectors
     matching a metadata predicate (``label_col == label_value``) — the
@@ -1423,30 +1340,19 @@ def sq8_topk_filtered(emb: DataFrame, n_queries: int = 10, k: int = 5,
         raise ValueError(f"mode must be 'pre' or 'post', got {mode!r}")
     flt = emb.filter(F.col(label_col) == label_value)
     if mode == "pre":
-        return sq8_topk(emb, n_queries, k, vec_col, id_col, probe=probe,
-                        corpus=flt)
-    from pyspark.sql import Window
-
-    stage1 = sq8_topk(emb, n_queries, k * expand, vec_col, id_col,
-                      probe=probe)
-    matched = flt.select(F.col(id_col).alias("neighbor_id")).join(
+        return sq8_topk(emb, n_queries, k, probe=probe, corpus=flt)
+    stage1 = sq8_topk(emb, n_queries, k * expand, probe=probe)
+    matched = flt.select(F.col("vec_id").alias("neighbor_id")).join(
         F.broadcast(stage1.drop("rank")), "neighbor_id")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sq_cosine").desc(), F.col("neighbor_id"))
-    return (
-        matched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sq_cosine")
-    )
+    return _rank_topk(matched, k, "sq_cosine")
 
 
 def sq8_encode(qv: DataFrame, S) -> DataFrame:
     """``(vid, codes array<int>)`` against FROZEN per-dimension scales
     — one stateless Arrow-batched pass (append-safe on a readStream:
     the train-offline/encode-online pattern, like :func:`pq_encode`).
-    Codes are ``clamp(trunc(v/s), ±127)``, the :func:`sq8_topk`
-    quantizer."""
-    import numpy as np  # noqa: F401  (closure capture)
+    Codes are :func:`_sq8_quantizer`'s, the :func:`sq8_topk` quantizer."""
+    sq8 = _sq8_quantizer(S)
 
     def run(batches):
         import numpy as np
@@ -1456,11 +1362,10 @@ def sq8_encode(qv: DataFrame, S) -> DataFrame:
             if not len(pdf):
                 continue
             V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            C = np.clip(np.sign(V) * (np.abs(V) // S[None, :]), -127, 127)
             yield pd.DataFrame(
                 {
                     "vid": pdf["vid"].to_numpy(dtype=np.int64),
-                    "codes": list(C.astype(np.int64)),
+                    "codes": list(sq8(V).astype(np.int64)),
                 }
             )
 
@@ -1469,7 +1374,6 @@ def sq8_encode(qv: DataFrame, S) -> DataFrame:
 
 def ivfsq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
                 n_cells: int = 16, n_probe: int = 2, refine: int = 1,
-                vec_col: str = "embedding", id_col: str = "vec_id",
                 probe=None) -> DataFrame:
     """IVF + SQ8 — the FAISS ``IVFxx,SQ8`` index family, completing
     the partitioner × quantizer matrix (IVF composes with PQ, with
@@ -1492,34 +1396,16 @@ def ivfsq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     query scans n_probe/n_cells of the corpus at 1/8th the bytes."""
     import numpy as np
 
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    spark = qv.sparkSession
-    empty_schema = (
-        "query_id long, neighbor_id long, rank int, sq_cosine double")
+    qv = quantize_embeddings(emb)
     cent = ivf_centroids(qv, n_cells, refine)
     S = sq8_scales(qv)
-    if cent is None or S is None:
-        return spark.createDataFrame([], empty_schema)
+    qs = (None if cent is None or S is None
+          else _resolve_queries(qv, n_queries, probe))
+    if qs is None:
+        return _empty_topk(qv.sparkSession, "sq_cosine")
+    qids, Q, qn = qs
     cells, Cm, cnm = cent
-    if probe is not None:
-        qids, Q, qn = _truncate_probe(probe, n_queries)
-        if not len(qids):
-            return spark.createDataFrame([], empty_schema)
-    else:
-        qrows = sorted(qv.filter(F.col("vid") < n_queries).collect(),
-                       key=lambda r: r["vid"])
-        if not qrows:
-            return spark.createDataFrame([], empty_schema)
-        qids = np.array([r["vid"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["qvec"] for r in qrows], dtype=np.int64)
-        qn = np.sqrt(np.array([r["norm2"] for r in qrows],
-                              dtype=np.float64))
-    nq = len(qids)
-
-    aff = (Q @ Cm.T) / cnm[None, :]
-    probes = spark.createDataFrame(
-        _probe_cell_rows(qids, aff, cells, n_probe),
-        "query_id long, cell long")
+    cell_index, sq8 = _cell_indexer(Cm, cnm), _sq8_quantizer(S)
 
     def encode(batches):
         import numpy as np
@@ -1529,14 +1415,12 @@ def ivfsq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
             if not len(pdf):
                 continue
             V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            a = (V @ Cm.T) / cnm[None, :]
-            ci = np.argmax(a, axis=1)
-            C = np.clip(np.sign(V) * (np.abs(V) // S[None, :]), -127, 127)
+            C = sq8(V)
             R = C * S[None, :]
             yield pd.DataFrame(
                 {
                     "vid": pdf["vid"].to_numpy(dtype=np.int64),
-                    "cell": cells[ci],
+                    "cell": cells[cell_index(V)],
                     "codes": list(C),
                     "rn2": (R * R).sum(axis=1),
                 }
@@ -1544,60 +1428,23 @@ def ivfsq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
 
     enc = qv.mapInPandas(
         encode, "vid long, cell long, codes array<int>, rn2 long")
-    cand = enc.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("vid"))
+    cand = _probe_join(enc, _probe_cell_rows(qids, Q, cent, n_probe))
     qpos = {int(q): i for i, q in enumerate(qids)}
 
-    def score(batches):
-        import numpy as np
-        import pandas as pd
+    def kernel(pdf):
+        qi = pdf["query_id"].map(qpos).to_numpy(dtype=np.int64)
+        R = np.stack(pdf["codes"].to_numpy()).astype(np.int64) * S[None, :]
+        dots = np.einsum("ij,ij->i", Q[qi], R)                   # exact
+        rn = np.sqrt(pdf["rn2"].to_numpy(dtype=np.float64))
+        return qi, pdf["vid"].to_numpy(dtype=np.int64), dots / (qn[qi] * rn)
 
-        best_cos = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        best_nid = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qi = pdf["query_id"].map(qpos).to_numpy(dtype=np.int64)
-            C = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            R = C * S[None, :]
-            dots = np.einsum("ij,ij->i", Q[qi], R)               # exact
-            rn = np.sqrt(pdf["rn2"].to_numpy(dtype=np.float64))
-            cos = dots / (qn[qi] * rn)
-            nids = pdf["vid"].to_numpy(dtype=np.int64)
-            for j in np.unique(qi):
-                msk = qi == j
-                c = np.concatenate([best_cos[j], cos[msk]])
-                n = np.concatenate([best_nid[j], nids[msk]])
-                key = np.where(np.isnan(c), np.inf, -c)
-                order = np.lexsort((n, key))[:k]
-                best_cos[j], best_nid[j] = c[order], n[order]
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, [len(b) for b in best_nid]),
-                "neighbor_id": (np.concatenate(best_nid)
-                                if best_nid else np.empty(0, dtype=np.int64)),
-                "sq_cosine": (np.concatenate(best_cos)
-                              if best_cos else np.empty(0)),
-            }
-        )
-
-    scored = cand.select("query_id", "vid", "codes", "rn2").mapInPandas(
-        score, "query_id long, neighbor_id long, sq_cosine double")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sq_cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sq_cosine")
-    )
+    return _scan_topk(cand.select("query_id", "vid", "codes", "rn2"),
+                      kernel, qids, k, "sq_cosine")
 
 
 def pq_distortion(emb: DataFrame, n_sub: int = PQ_SUBSPACES,
                   n_codes: int = PQ_CODES, refine: int = 1,
-                  vec_col: str = "embedding",
-                  id_col: str = "vec_id", seed_probe=None) -> DataFrame:
+                  seed_probe=None) -> DataFrame:
     """Per-subspace quantization-error report — the health check a PQ
     index ships with (is any subspace's codebook collapsing? how much
     of the code space is live?): for each subspace, the exact total
@@ -1612,11 +1459,10 @@ def pq_distortion(emb: DataFrame, n_sub: int = PQ_SUBSPACES,
     the corpus never shuffles."""
     import numpy as np
 
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    spark = qv.sparkSession
+    qv = quantize_embeddings(emb)
     cb = pq_codebooks(qv, n_sub, n_codes, refine, seed_probe=seed_probe)
     if cb is None:
-        return spark.createDataFrame(
+        return qv.sparkSession.createDataFrame(
             [], "subspace int, total_sq_err long, n_vecs long, codes_used long")
     n_sub_, n_k, ds = cb.shape
 
@@ -1671,6 +1517,7 @@ def _ivfpq_encode_fn(cells, Cm, cnm, cb):
 
     cbn2 = (cb ** 2).sum(axis=2)
     n_sub_ = cb.shape[0]
+    cell_index = _cell_indexer(Cm, cnm)
 
     def encode(batches):
         import numpy as np
@@ -1680,14 +1527,12 @@ def _ivfpq_encode_fn(cells, Cm, cnm, cb):
             if not len(pdf):
                 continue
             V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            a = (V @ Cm.T) / cnm[None, :]
-            cell = cells[np.argmax(a, axis=1)]  # first max = lowest cell
             codes = _pq_assign(V, cb)
             rn2 = cbn2[np.arange(n_sub_)[None, :], codes].sum(axis=1)
             yield pd.DataFrame(
                 {
                     "vid": pdf["vid"].to_numpy(dtype=np.int64),
-                    "cell": cell,
+                    "cell": cells[cell_index(V)],
                     "codes": list(codes),
                     "rnorm2": rn2.astype(np.int64),
                 }
@@ -1696,11 +1541,16 @@ def _ivfpq_encode_fn(cells, Cm, cnm, cb):
     return encode
 
 
-def _probe_cell_rows(qids, aff, cells, n_probe):
-    """[(query_id, cell)] — per-query top-``n_probe`` cells in the SQL
-    mirror's exact order (aff DESC, cell ASC, NaN buried last)."""
+def _probe_cell_rows(qids, Q, cent, n_probe):
+    """[(query_id, cell)] — each query's top-``n_probe`` cells under the
+    trained centroids ``cent = (cells, C, cn)``, ranked driver-side over
+    the tiny (n_queries x n_cells) affinity matrix: exact int64 dot /
+    sqrt(cn), in the SQL mirror's exact order (aff DESC, cell ASC, NaN
+    buried last) on the same IEEE doubles."""
     import numpy as np
 
+    cells, Cm, cnm = cent
+    aff = (Q @ Cm.T) / cnm[None, :]
     rows = []
     for j in range(len(qids)):
         key = np.where(np.isnan(aff[j]), np.inf, -aff[j])
@@ -1709,85 +1559,54 @@ def _probe_cell_rows(qids, aff, cells, n_probe):
     return rows
 
 
-def _adc_lut_topk(cand, qids, qn, lut, k, cell_dot=None):
-    """Per-task LUT/ADC scoring with map-side top-k prune + the final
-    rank window, over candidate rows (query_id, vid, codes, rnorm2) —
-    shared by :func:`ivfpq_topk`, :func:`ivfpq_topk_from_index`, and
-    (round 12) :func:`ivfpq_residual_topk`. Task-local selection uses
-    the window's exact total order (adc_cosine DESC with NaN-as-NULL
-    buried last, neighbor_id ASC), so the prune is value-neutral.
+def _probe_join(enc: DataFrame, rows) -> DataFrame:
+    """Candidate rows of the IVF scorers: the encoded corpus rows
+    (``enc``, one per vector, with its ``cell``) in each query's probed
+    cells — a BROADCAST join on cell against the n_queries * n_probe
+    probe rows, so the corpus never shuffles — minus the query itself."""
+    probes = enc.sparkSession.createDataFrame(rows, "query_id long, cell long")
+    return enc.join(F.broadcast(probes), "cell").filter(
+        F.col("query_id") != F.col("vid"))
 
-    ``cell_dot``: optional ``(cell_pos, QC)`` for residual encoding —
-    ``cell_pos`` maps cell id -> column of ``QC`` (nq x n_cells exact
+
+def _adc_lut_topk(cand, qids, qn, lut, k, cell_dot) -> DataFrame:
+    """Per-task LUT/ADC scoring of candidate rows (query_id, vid, codes,
+    rnorm2) through :func:`_scan_topk` — shared by :func:`ivfpq_topk`,
+    :func:`ivfpq_topk_from_index`, and (round 12)
+    :func:`ivfpq_residual_topk`.
+
+    ``cell_dot``: ``None``, or ``(cell_pos, QC)`` for residual encoding
+    — ``cell_pos`` maps cell id -> column of ``QC`` (nq x n_cells exact
     int64 query·centroid dots); when set, candidate rows must carry
     ``cell`` and each score adds the candidate cell's centroid dot
     (ADC against residual codes approximates dot(q, c + r̂) =
     dot(q, c) + dot(q, r̂); the first term is exact)."""
     import numpy as np
 
-    nq = len(qids)
-    n_sub_ = lut.shape[1]
     qpos = {int(q): i for i, q in enumerate(qids)}
 
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        best_cos = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        best_nid = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qi = pdf["query_id"].map(qpos).to_numpy(dtype=np.int64)
-            Cd = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            adot = np.zeros(len(Cd), dtype=np.int64)
-            for m in range(n_sub_):
-                adot += lut[qi, m, Cd[:, m]]
-            if cell_dot is not None:
-                cell_pos, QC = cell_dot
-                ci = pdf["cell"].map(cell_pos).to_numpy(dtype=np.int64)
-                adot += QC[qi, ci]
-            rn = np.sqrt(pdf["rnorm2"].to_numpy(dtype=np.float64))
-            cos = adot / (qn[qi] * rn)
-            nids = pdf["vid"].to_numpy(dtype=np.int64)
-            for j in np.unique(qi):
-                msk = qi == j
-                c = np.concatenate([best_cos[j], cos[msk]])
-                n = np.concatenate([best_nid[j], nids[msk]])
-                key = np.where(np.isnan(c), np.inf, -c)
-                order = np.lexsort((n, key))[:k]
-                best_cos[j], best_nid[j] = c[order], n[order]
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, [len(b) for b in best_nid]),
-                "neighbor_id": (np.concatenate(best_nid)
-                                if best_nid else np.empty(0, dtype=np.int64)),
-                "adc_cosine": (np.concatenate(best_cos)
-                               if best_cos else np.empty(0)),
-            }
-        )
+    def kernel(pdf):
+        qi = pdf["query_id"].map(qpos).to_numpy(dtype=np.int64)
+        Cd = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+        adot = np.zeros(len(Cd), dtype=np.int64)
+        for m in range(lut.shape[1]):
+            adot += lut[qi, m, Cd[:, m]]
+        if cell_dot is not None:
+            cell_pos, QC = cell_dot
+            adot += QC[qi, pdf["cell"].map(cell_pos).to_numpy(dtype=np.int64)]
+        rn = np.sqrt(pdf["rnorm2"].to_numpy(dtype=np.float64))
+        return qi, pdf["vid"].to_numpy(dtype=np.int64), adot / (qn[qi] * rn)
 
     cols = ["query_id", "vid", "codes", "rnorm2"]
     if cell_dot is not None:
         cols.append("cell")
-    scored = cand.select(*cols).mapInPandas(
-        score, "query_id long, neighbor_id long, adc_cosine double")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_cosine")
-    )
+    return _scan_topk(cand.select(*cols), kernel, qids, k, "adc_cosine")
 
 
 def ivfpq_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
                n_cells: int = 16, n_probe: int = 2,
                n_sub: int = PQ_SUBSPACES, n_codes: int = PQ_CODES,
-               refine: int = 1, vec_col: str = "embedding",
-               id_col: str = "vec_id", probe=None,
+               refine: int = 1, probe=None,
                seed_probe=None) -> DataFrame:
     """IVF + PQ — the production 100 TB ANN shape (Jegou et al. 2011,
     the FAISS ``IVFxx,PQyy`` index family): the corpus is coarsely
@@ -1817,51 +1636,22 @@ def ivfpq_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     n_probe/n_cells of the corpus at 1/64th the bytes: the two
     multiplicative reductions a 100 TB ANN deployment needs.
     """
-    import numpy as np
-
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    spark = qv.sparkSession
-    empty_schema = (
-        "query_id long, neighbor_id long, rank int, adc_cosine double")
+    qv = quantize_embeddings(emb)
     cent = ivf_centroids(qv, n_cells, refine)
     cb = pq_codebooks(qv, n_sub, n_codes, refine, seed_probe=seed_probe)
-    if cent is None or cb is None:
-        return spark.createDataFrame([], empty_schema)
-    cells, Cm, cnm = cent
-    if probe is not None:
-        qids, Q, qn = _truncate_probe(probe, n_queries)
-        if not len(qids):
-            return spark.createDataFrame([], empty_schema)
-    else:
-        qrows = sorted(qv.filter(F.col("vid") < n_queries).collect(),
-                       key=lambda r: r["vid"])
-        if not qrows:
-            return spark.createDataFrame([], empty_schema)
-        qids = np.array([r["vid"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["qvec"] for r in qrows], dtype=np.int64)
-        qn = np.sqrt(np.array([r["norm2"] for r in qrows],
-                              dtype=np.float64))
-    nq = len(qids)
-    n_sub_, _, ds = cb.shape
-
-    # driver-side probe ranking: affinity = exact int64 dot / sqrt(cn),
-    # order (aff DESC, cell ASC) with NaN buried last — the SQL
-    # mirror's row_number order on the same IEEE doubles
-    aff = (Q @ Cm.T) / cnm[None, :]                                  # (nq, c)
-    probes = spark.createDataFrame(
-        _probe_cell_rows(qids, aff, cells, n_probe),
-        "query_id long, cell long")
+    qs = (None if cent is None or cb is None
+          else _resolve_queries(qv, n_queries, probe))
+    if qs is None:
+        return _empty_topk(qv.sparkSession, "adc_cosine")
+    qids, Q, qn = qs
 
     # fused encode: IVF cell + PQ codes + reconstruction norm in ONE
     # zero-shuffle pass (both quantizers are literal numpy matrices)
     enc = qv.mapInPandas(
-        _ivfpq_encode_fn(cells, Cm, cnm, cb),
+        _ivfpq_encode_fn(*cent, cb),
         "vid long, cell long, codes array<int>, rnorm2 long")
-    cand = enc.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("vid"))
-
-    lut = np.einsum("qmd,mkd->qmk", Q.reshape(nq, n_sub_, ds), cb)
-    return _adc_lut_topk(cand, qids, qn, lut, k)
+    cand = _probe_join(enc, _probe_cell_rows(qids, Q, cent, n_probe))
+    return _adc_lut_topk(cand, qids, qn, _adc_lut(Q, cb), k, None)
 
 
 def _residual_qv(qv: DataFrame, cells, Cm, cnm) -> DataFrame:
@@ -1871,7 +1661,7 @@ def _residual_qv(qv: DataFrame, cells, Cm, cnm) -> DataFrame:
     residuals stay int64-exact and everything downstream keeps the
     bit-parity story. Zero shuffles: one Arrow-batched matmul+subtract
     per partition against the literal centroid matrix."""
-    import numpy as np  # noqa: F401  (closure capture for workers)
+    cell_index = _cell_indexer(Cm, cnm)
 
     def run(batches):
         import numpy as np
@@ -1881,8 +1671,7 @@ def _residual_qv(qv: DataFrame, cells, Cm, cnm) -> DataFrame:
             if not len(pdf):
                 continue
             V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            a = (V @ Cm.T) / cnm[None, :]
-            ci = np.argmax(a, axis=1)  # first max = lowest cell
+            ci = cell_index(V)
             R = V - Cm[ci]
             yield pd.DataFrame(
                 {
@@ -1900,8 +1689,7 @@ def _residual_qv(qv: DataFrame, cells, Cm, cnm) -> DataFrame:
 def ivfpq_residual_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
                         n_cells: int = 16, n_probe: int = 2,
                         n_sub: int = PQ_SUBSPACES, n_codes: int = PQ_CODES,
-                        refine: int = 1, vec_col: str = "embedding",
-                        id_col: str = "vec_id", probe=None,
+                        refine: int = 1, probe=None,
                         seed_probe=None) -> DataFrame:
     """IVF + PQ with RESIDUAL encoding — the FAISS ``IVFxx,PQyy``
     default (Jegou et al. 2011 §IV-A): PQ codebooks are trained on,
@@ -1940,14 +1728,12 @@ def ivfpq_residual_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     """
     import numpy as np
 
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    spark = qv.sparkSession
-    empty_schema = (
-        "query_id long, neighbor_id long, rank int, adc_cosine double")
+    qv = quantize_embeddings(emb)
     cent = ivf_centroids(qv, n_cells, refine)
     if cent is None:
-        return spark.createDataFrame([], empty_schema)
+        return _empty_topk(qv.sparkSession, "adc_cosine")
     cells, Cm, cnm = cent
+    cell_index = _cell_indexer(Cm, cnm)
 
     # residual seed probe: assign each pre-resolved raw seed vector to
     # its cell DRIVER-SIDE (same exact ints, IEEE divides, and
@@ -1958,45 +1744,26 @@ def ivfpq_residual_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
         sids, SQ, _ = seed_probe
         S = np.asarray(SQ, dtype=np.int64)
         if len(S):
-            a = (S @ Cm.T) / cnm[None, :]
-            R = S - Cm[np.argmax(a, axis=1)]
+            R = S - Cm[cell_index(S)]
             rseed = _ProbeMatrix((np.asarray(sids, dtype=np.int64), R,
                                   (R * R).sum(axis=1)))
             b = getattr(seed_probe, "bound", None)
             if b is not None:
                 rseed.bound = b
 
-    rv = _residual_qv(qv, cells, Cm, cnm)
-    cb = pq_codebooks(rv, n_sub, n_codes, refine, seed_probe=rseed)
-    if cb is None:
-        return spark.createDataFrame([], empty_schema)
-    if probe is not None:
-        qids, Q, qn = _truncate_probe(probe, n_queries)
-        if not len(qids):
-            return spark.createDataFrame([], empty_schema)
-    else:
-        qrows = sorted(qv.filter(F.col("vid") < n_queries).collect(),
-                       key=lambda r: r["vid"])
-        if not qrows:
-            return spark.createDataFrame([], empty_schema)
-        qids = np.array([r["vid"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["qvec"] for r in qrows], dtype=np.int64)
-        qn = np.sqrt(np.array([r["norm2"] for r in qrows],
-                              dtype=np.float64))
-    nq = len(qids)
+    cb = pq_codebooks(_residual_qv(qv, cells, Cm, cnm), n_sub, n_codes,
+                      refine, seed_probe=rseed)
+    qs = None if cb is None else _resolve_queries(qv, n_queries, probe)
+    if qs is None:
+        return _empty_topk(qv.sparkSession, "adc_cosine")
+    qids, Q, qn = qs
     n_sub_, _, ds = cb.shape
-    n_cells_ = len(cells)
-
-    aff = (Q @ Cm.T) / cnm[None, :]
-    probes = spark.createDataFrame(
-        _probe_cell_rows(qids, aff, cells, n_probe),
-        "query_id long, cell long")
 
     # fused encode: cell + residual codes + exact reconstruction norm
     # ‖c + r̂‖² = ‖c‖² + 2·dot(c, r̂) + ‖r̂‖² in ONE zero-shuffle pass
     cbn2 = (cb ** 2).sum(axis=2)                                    # (M, K)
     ccw = np.einsum("cmd,mkd->cmk",
-                    Cm.reshape(n_cells_, n_sub_, ds), cb)           # (C, M, K)
+                    Cm.reshape(len(cells), n_sub_, ds), cb)         # (C, M, K)
     cn2c = (Cm ** 2).sum(axis=1)                                    # (C,)
     marange = np.arange(n_sub_)
 
@@ -2008,10 +1775,8 @@ def ivfpq_residual_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
             if not len(pdf):
                 continue
             V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            a = (V @ Cm.T) / cnm[None, :]
-            ci = np.argmax(a, axis=1)
-            R = V - Cm[ci]
-            codes = _pq_assign(R, cb)
+            ci = cell_index(V)
+            codes = _pq_assign(V - Cm[ci], cb)
             rn2 = (cn2c[ci]
                    + 2 * ccw[ci[:, None], marange[None, :], codes].sum(axis=1)
                    + cbn2[marange[None, :], codes].sum(axis=1))
@@ -2026,20 +1791,15 @@ def ivfpq_residual_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
 
     enc = qv.mapInPandas(
         encode, "vid long, cell long, codes array<int>, rnorm2 long")
-    cand = enc.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("vid"))
-
-    lut = np.einsum("qmd,mkd->qmk", Q.reshape(nq, n_sub_, ds), cb)
-    QC = Q @ Cm.T                                                   # exact
+    cand = _probe_join(enc, _probe_cell_rows(qids, Q, cent, n_probe))
     cell_pos = {int(c): i for i, c in enumerate(cells)}
-    return _adc_lut_topk(cand, qids, qn, lut, k,
-                         cell_dot=(cell_pos, QC))
+    return _adc_lut_topk(cand, qids, qn, _adc_lut(Q, cb), k,
+                         (cell_pos, Q @ Cm.T))                      # exact QC
 
 
 def pq_rerank_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
                    expand: int = 4, n_sub: int = PQ_SUBSPACES,
                    n_codes: int = PQ_CODES, refine: int = 1,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
                    probe=None, seed_probe=None) -> DataFrame:
     """Two-stage ANN — PQ candidate generation + EXACT re-rank (the
     production deployment shape): the compressed ADC scan proposes
@@ -2060,37 +1820,25 @@ def pq_rerank_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     rank window moves candidate rows only. The raw corpus is read, not
     shuffled: at 100 TB the exact stage touches the scan once and
     moves kilobytes."""
-    qv = quantize_embeddings(emb, vec_col, id_col)
     cand = pq_topk(emb, n_queries, k * expand, n_sub, n_codes, refine,
-                   vec_col, id_col, probe=probe, seed_probe=seed_probe)
-    return _exact_rerank(qv, cand, n_queries, k, probe=probe)
+                   probe=probe, seed_probe=seed_probe)
+    return _exact_rerank(quantize_embeddings(emb), cand, n_queries, k, probe)
 
 
 def _exact_rerank(qv: DataFrame, cand: DataFrame, n_queries: int,
-                  k: int, probe=None) -> DataFrame:
+                  k: int, probe) -> DataFrame:
     """Shared exact second stage for every two-stage ANN path (r13 —
     factored out of :func:`pq_rerank_topk` so SQ8 candidates get the
     same closing stage): BROADCAST the tiny candidate table against
     the quantized corpus, re-score with the exact int64 dot / IEEE
-    norm chain, rank (cosine DESC, neighbor_id). Candidate rows only
-    cross the final window exchange; the corpus never shuffles."""
+    norm chain, rank (:func:`_rank_topk`). Candidate rows only cross
+    the final window exchange; the corpus never shuffles."""
     import numpy as np
 
-    spark = qv.sparkSession
-    empty_schema = (
-        "query_id long, neighbor_id long, rank int, cosine double")
-    if probe is not None:
-        qids, Q, qn = _truncate_probe(probe, n_queries)
-        if not len(qids):
-            return spark.createDataFrame([], empty_schema)
-    else:
-        qrows = sorted(qv.filter(F.col("vid") < n_queries).collect(),
-                       key=lambda r: r["vid"])
-        if not qrows:
-            return spark.createDataFrame([], empty_schema)
-        qids = np.array([r["vid"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["qvec"] for r in qrows], dtype=np.int64)
-        qn = np.sqrt(np.array([r["norm2"] for r in qrows], dtype=np.float64))
+    qs = _resolve_queries(qv, n_queries, probe)
+    if qs is None:
+        return _empty_topk(qv.sparkSession, "cosine")
+    qids, Q, qn = qs
     qpos = {int(q): i for i, q in enumerate(qids)}
 
     joined = F.broadcast(cand.select("query_id", "neighbor_id")).join(
@@ -2120,20 +1868,11 @@ def _exact_rerank(qv: DataFrame, cand: DataFrame, n_queries: int,
 
     scored = joined.mapInPandas(
         rescore, "query_id long, neighbor_id long, cosine double")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_topk(scored, k, "cosine")
 
 
 def sq8_rerank_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
-                    expand: int = 4, vec_col: str = "embedding",
-                    id_col: str = "vec_id", probe=None) -> DataFrame:
+                    expand: int = 4, probe=None) -> DataFrame:
     """Two-stage ANN over SQ8 candidates (round 13): the int8
     scalar-quantized scan proposes ``k * expand`` candidates per
     query, then :func:`_exact_rerank` restores exact ordering among
@@ -2148,10 +1887,8 @@ def sq8_rerank_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     encode+score scan, one k·expand-bounded window exchange); stage 2
     is the shared broadcast-join re-score — the corpus is scanned
     twice and shuffled never."""
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    cand = sq8_topk(emb, n_queries, k * expand, vec_col, id_col,
-                    probe=probe)
-    return _exact_rerank(qv, cand, n_queries, k, probe=probe)
+    cand = sq8_topk(emb, n_queries, k * expand, probe=probe)
+    return _exact_rerank(quantize_embeddings(emb), cand, n_queries, k, probe)
 
 
 #: cap on the density-adaptive candidate budget: stage 1 retrieves
@@ -2189,8 +1926,7 @@ def pq_rerank_auto_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
                         min_expand: int = 4,
                         max_expand: int = PQ_RERANK_MAX_EXPAND,
                         n_sub: int = PQ_SUBSPACES, n_codes: int = PQ_CODES,
-                        refine: int = 1, vec_col: str = "embedding",
-                        id_col: str = "vec_id",
+                        refine: int = 1,
                         probe=None, seed_probe=None) -> DataFrame:
     """DENSITY-ADAPTIVE two-stage ANN (round 14): like
     :func:`pq_rerank_topk` but the candidate budget WIDENS with a
@@ -2228,18 +1964,15 @@ def pq_rerank_auto_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     one tiny window over the <= n_queries*k*max_expand candidate rows
     to compute the plateau band (no extra job, no driver collect, no
     corpus shuffle), then the shared broadcast-join exact stage."""
-    qv = quantize_embeddings(emb, vec_col, id_col)
     stage1 = pq_topk(emb, n_queries, k * max_expand, n_sub, n_codes,
-                     refine, vec_col, id_col, probe=probe,
-                     seed_probe=seed_probe)
+                     refine, probe=probe, seed_probe=seed_probe)
     cand = _band_candidates(stage1, "adc_cosine", k, min_expand)
-    return _exact_rerank(qv, cand, n_queries, k, probe=probe)
+    return _exact_rerank(quantize_embeddings(emb), cand, n_queries, k, probe)
 
 
 def sq8_rerank_auto_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
                          min_expand: int = 2,
                          max_expand: int = PQ_RERANK_MAX_EXPAND,
-                         vec_col: str = "embedding", id_col: str = "vec_id",
                          probe=None) -> DataFrame:
     """Density-adaptive two-stage ANN over SQ8 candidates (round 14):
     :func:`pq_rerank_auto_topk`'s widen-only plateau rule applied to
@@ -2257,11 +1990,9 @@ def sq8_rerank_auto_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     window rides the same query_id partitioning; stage 2 is the shared
     broadcast-join exact re-rank. Corpus scanned twice, shuffled
     never."""
-    qv = quantize_embeddings(emb, vec_col, id_col)
-    stage1 = sq8_topk(emb, n_queries, k * max_expand, vec_col, id_col,
-                      probe=probe)
+    stage1 = sq8_topk(emb, n_queries, k * max_expand, probe=probe)
     cand = _band_candidates(stage1, "sq_cosine", k, min_expand)
-    return _exact_rerank(qv, cand, n_queries, k, probe=probe)
+    return _exact_rerank(quantize_embeddings(emb), cand, n_queries, k, probe)
 
 
 def ivfpq_rerank_auto_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
@@ -2270,9 +2001,7 @@ def ivfpq_rerank_auto_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
                            n_cells: int = 16, n_probe: int = 2,
                            n_sub: int = PQ_SUBSPACES,
                            n_codes: int = PQ_CODES, refine: int = 1,
-                           vec_col: str = "embedding",
-                           id_col: str = "vec_id", probe=None,
-                           seed_probe=None) -> DataFrame:
+                           probe=None, seed_probe=None) -> DataFrame:
     """Density-adaptive two-stage ANN over IVF+PQ candidates (round
     14): the FAISS-standard serving stack — cell pruning (n_probe of
     n_cells directories touched) -> compressed ADC scan -> exact
@@ -2292,18 +2021,16 @@ def ivfpq_rerank_auto_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     partitioning; stage 2 is the shared broadcast-join re-rank. At
     100 TB the serve path reads n_probe/n_cells of the index plus one
     raw-corpus scan for the exact stage, and shuffles neither."""
-    qv = quantize_embeddings(emb, vec_col, id_col)
     stage1 = ivfpq_topk(emb, n_queries, k * max_expand, n_cells, n_probe,
-                        n_sub, n_codes, refine, vec_col, id_col,
-                        probe=probe, seed_probe=seed_probe)
+                        n_sub, n_codes, refine, probe=probe,
+                        seed_probe=seed_probe)
     cand = _band_candidates(stage1, "adc_cosine", k, min_expand)
-    return _exact_rerank(qv, cand, n_queries, k, probe=probe)
+    return _exact_rerank(quantize_embeddings(emb), cand, n_queries, k, probe)
 
 
 def ivfpq_index_write(emb: DataFrame, path: str,
                       n_cells: int = 16, n_sub: int = PQ_SUBSPACES,
                       n_codes: int = PQ_CODES, refine: int = 1,
-                      vec_col: str = "embedding", id_col: str = "vec_id",
                       seed_probe=None) -> tuple:
     """Materialize the IVF+PQ index AT REST: one parquet directory per
     IVF cell (``partitionBy("cell")``), rows carrying only
@@ -2318,22 +2045,19 @@ def ivfpq_index_write(emb: DataFrame, path: str,
     side needs (centroids for probe ranking, codebooks for the LUT) —
     persisting those (tiny: n_cells x dim + n_sub x K x ds ints) is
     the caller's catalog concern."""
-    qv = quantize_embeddings(emb, vec_col, id_col)
+    qv = quantize_embeddings(emb)
     cent = ivf_centroids(qv, n_cells, refine)
     cb = pq_codebooks(qv, n_sub, n_codes, refine, seed_probe=seed_probe)
     if cent is None or cb is None:
         return None
-    cells, Cm, cnm = cent
     enc = qv.mapInPandas(
-        _ivfpq_encode_fn(cells, Cm, cnm, cb),
+        _ivfpq_encode_fn(*cent, cb),
         "vid long, cell long, codes array<int>, rnorm2 long")
     enc.write.mode("overwrite").partitionBy("cell").parquet(path)
-    return cells, Cm, cnm, cb
+    return (*cent, cb)
 
 
-def ivfpq_index_append(emb_delta: DataFrame, path: str, trained,
-                       vec_col: str = "embedding",
-                       id_col: str = "vec_id") -> None:
+def ivfpq_index_append(emb_delta: DataFrame, path: str, trained) -> None:
     """Incrementally append NEW vectors to an existing at-rest IVF+PQ
     index (round 14) — the index-maintenance half of the lifecycle:
     the nightly build trains structures and writes the base index
@@ -2359,10 +2083,8 @@ def ivfpq_index_append(emb_delta: DataFrame, path: str, trained,
     delta, then a partitioned file append — the base index's bytes
     are never read or rewritten. At 100 TB a day's delta is encoded
     and appended in time proportional to the delta alone."""
-    cells, Cm, cnm, cb = trained
-    qv = quantize_embeddings(emb_delta, vec_col, id_col)
-    enc = qv.mapInPandas(
-        _ivfpq_encode_fn(cells, Cm, cnm, cb),
+    enc = quantize_embeddings(emb_delta).mapInPandas(
+        _ivfpq_encode_fn(*trained),
         "vid long, cell long, codes array<int>, rnorm2 long")
     enc.write.mode("append").partitionBy("cell").parquet(path)
 
@@ -2380,34 +2102,21 @@ def ivfpq_topk_from_index(spark, index_path: str, trained,
     structures, same scoring, same tie-breaks); the difference is
     WHERE the candidate bytes come from: a pruned file scan instead
     of a full-corpus encode."""
-    import numpy as np
-
-    cells, Cm, cnm, cb = trained
-    empty_schema = (
-        "query_id long, neighbor_id long, rank int, adc_cosine double")
+    *cent, cb = trained
     if probe is None:
         raise ValueError("probe required: the index holds no raw vectors")
-    qids, Q, qn = _truncate_probe(probe, n_queries)
-    if not len(qids):
-        return spark.createDataFrame([], empty_schema)
-    nq = len(qids)
-    n_sub_, _, ds = cb.shape
+    qs = _resolve_queries(None, n_queries, probe)
+    if qs is None:
+        return _empty_topk(spark, "adc_cosine")
+    qids, Q, qn = qs
+    rows = _probe_cell_rows(qids, Q, cent, n_probe)
 
-    aff = (Q @ Cm.T) / cnm[None, :]
-    probe_rows = _probe_cell_rows(qids, aff, cells, n_probe)
-    probed_cells = {c for _, c in probe_rows}
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell long")
-
-    idx = spark.read.parquet(index_path)
     # partition-column filter with literal ids ON THE RAW COLUMN: the
     # scan plans with PartitionFilters = cell IN (...) and never
     # lists, opens, or reads the other cells' directories. (A cast
     # before the filter would wrap the partition column in an
     # expression and silently forfeit the pruning.)
-    idx = idx.filter(F.col("cell").isin(sorted(probed_cells))).select(
+    idx = spark.read.parquet(index_path)
+    idx = idx.filter(F.col("cell").isin(sorted({c for _, c in rows}))).select(
         "vid", F.col("cell").cast("long").alias("cell"), "codes", "rnorm2")
-    cand = idx.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("vid"))
-
-    lut = np.einsum("qmd,mkd->qmk", Q.reshape(nq, n_sub_, ds), cb)
-    return _adc_lut_topk(cand, qids, qn, lut, k)
+    return _adc_lut_topk(_probe_join(idx, rows), qids, qn, _adc_lut(Q, cb), k, None)

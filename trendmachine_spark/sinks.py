@@ -181,6 +181,8 @@ def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame
       key is unique by contract — which keeps even keyless retries from
       inflating rollup counts.
     """
+    from trendmachine_spark.pipeline import _url_parallel
+
     meta = meta or {}
     stored_meta = _read_meta(spark, store_dir)
     # A missing/unreadable meta sidecar (pre-metadata store, transient
@@ -204,12 +206,14 @@ def refresh_store(spark: SparkSession, store_dir: str, delta_captures: DataFrame
         buckets = sorted(
             r[0] for r in delta.select("url_bucket").distinct().collect()
         )
-    caps = (
+    # the url exchange first: the dedup then rides hash(url), which
+    # clusters every (url, seq, ts), and Spark drops the report
+    # transform's identical url repartition — one exchange, not two
+    caps = _url_parallel(
         spark.read.parquet(store_dir + "/captures")
         .filter(F.col("url_bucket").isin(buckets))
         .drop("url_bucket")
-        .dropDuplicates(["url", "seq", "ts"])
-    )
+    ).dropDuplicates(["url", "seq", "ts"])
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
